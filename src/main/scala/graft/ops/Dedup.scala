@@ -943,24 +943,47 @@ object Dedup {
     * when A~C was never emitted; that's the transitive closure.
     *
     * Iterative min-label propagation (the GraphX/large-scale-dedup
-    * standard): each round, a vertex takes the min of its own and its
-    * neighbors' labels — one shuffle per round, rounds bounded by the
-    * eccentricity of the min vertex (1–2 for near-dup cliques). The
-    * driver only evaluates a has-anything-changed probe per round, never
-    * the data.
-    */
-  /** @param checkpointDir when set, iteration state is checkpointed
+    * standard) with pointer jumping. The initial labels are already one
+    * neighbour-min step (`least(u, min neighbour)`, from the aggregate
+    * that lists the vertices). Each round takes the min of a vertex's
+    * own and its neighbours' labels, then adopts the label OF its label
+    * (label-of-label shortcut), so rounds are O(log diameter) — 1 for
+    * near-dup cliques.
+    *
+    * Spark actions: exactly one per round plus one for the initial
+    * labels — each a checkpoint of the round's labels. The label sum and
+    * the count of non-canonical vertices are observed metrics of that
+    * same checkpoint (`Dataset.observe`): labels only ever decrease, so
+    * an unchanged sum is the fixpoint. No separate probe job reads the
+    * labels. A round's checkpoint is released as soon as the next
+    * one exists; the returned frame reads the last one.
+    *
+    * @param checkpointDir when set, iteration state is checkpointed
     *   RELIABLY (HDFS/object store) instead of executor-locally. On a
     *   real cluster localCheckpoint ties the computation to executor
     *   liveness — one lost executor makes every later round
     *   unrecoverable; reliable checkpoints survive executor loss at the
-    *   cost of a distributed write per round. Local mode / tests can
-    *   leave it None. */
+    *   cost of a distributed write per round. Their files are governed
+    *   by `spark.cleaner.referenceTracking.cleanCheckpoints`. Local mode
+    *   / tests can leave it None. */
   def duplicateClusters(pairs: DataFrame, maxIters: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame =
+    closure(pairs, maxIters, checkpointDir).labels
+      .select(col("u").as("doc_id"), col("label").cast("long").as("cluster_id"))
+      .orderBy("doc_id")
+
+  /** Result of [[closure]]: the last round's checkpointed `(u, label)`
+    * table and its count of vertices whose label is not their own id
+    * (the docs a cascade drops). */
+  private final case class Closure(labels: DataFrame, nonCanonical: Long)
+
+  /** The min-label closure loop behind [[duplicateClusters]]; the caller
+    * owns (and eventually [[releaseCheckpoint]]s) the returned labels. */
+  private def closure(pairs: DataFrame, maxIters: Int,
+      checkpointDir: Option[String]): Closure = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // checkpoint in BOTH modes (not just persist): the jump step below
-    // self-joins the round's result, so lineage would DOUBLE per round —
+    // checkpoint every round (not just persist): the jump step self-
+    // joins the round's labels, so uncut lineage would DOUBLE per round —
     // the analyzed plan grows 2^rounds and planning itself OOMs. Cutting
     // lineage keeps the per-round plan constant-size.
     val cut: DataFrame => DataFrame = checkpointDir match {
@@ -972,23 +995,30 @@ object Dedup {
         df => df.checkpoint(eager = true)
       case None => df => df.localCheckpoint(eager = true)
     }
+    // the round's one action: checkpoint, observing the label sum and
+    // the non-canonical count on the way. coalesce: the sum over an
+    // EMPTY label table is NULL (a clean corpus with zero near-dup pairs
+    // is a legitimate input, not a crash)
+    def cutObserved(labels: DataFrame): (DataFrame, Long, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val out = cut(labels.observe(obs,
+        coalesce(sum(col("label")), lit(0L)).as("sum"),
+        count(when(col("label") =!= col("u"), 1)).as("nonCanonical")))
+      val m = obs.get
+      (out, m("sum").asInstanceOf[Long], m("nonCanonical").asInstanceOf[Long])
+    }
     // symmetrize in ONE pass over the (possibly expensive) pair plan —
-    // a self-union would evaluate it once per branch
+    // a self-union would evaluate it once per branch. Persisted lazily:
+    // the initial-label action builds it, every round reads it.
     val edges = pairs
       .select(explode(array(
         struct(col("id_a").as("u"), col("id_b").as("v")),
         struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct().persist(MEMORY_AND_DISK)
-    var labels = cut(edges.select(col("u")).distinct()
-      .withColumn("label", col("u")))
-    // min-propagation only ever lowers labels, so the label sum is
-    // strictly decreasing until the fixpoint — one cheap aggregate per
-    // round detects convergence (no join against the previous labels)
-    // coalesce: sum over an EMPTY label table is NULL (a clean corpus
-    // with zero near-dup pairs is a legitimate input, not a crash)
-    var prevSum = labels.agg(coalesce(sum(col("label")), lit(0L)))
-      .head().getLong(0)
+    var (labels, prevSum, nonCanonical) = cutObserved(edges.groupBy("u")
+      .agg(min(col("v")).as("m"))
+      .select(col("u"), least(col("u"), col("m")).as("label")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -997,30 +1027,35 @@ object Dedup {
       val stepped = labels.join(nbr, Seq("u"), "left")
         .select(col("u"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-      // pointer jumping: also adopt the label OF the current label
-      // (label-of-label shortcut). Neighbor-min alone walks one hop per
-      // round — rounds = component diameter, which for a 100 TB corpus
-      // chained by near-dup bridges can be long; the shortcut doubles
-      // the reach each round, so rounds fall to O(log diameter). The
+      // pointer jumping: also adopt the label OF the current label.
+      // Neighbour-min alone walks one hop per round — rounds = component
+      // diameter, which for a 100 TB corpus chained by near-dup bridges
+      // can be long; the shortcut doubles the reach each round. The
       // fixpoint is unchanged (labels only ever decrease toward the
       // component minimum).
-      val half = cut(stepped) // jump self-join: 2 refs
-      val updated = cut(half.as("a")
-        .join(half.select(col("u").as("label"), col("label").as("l2")).as("b"),
+      val jumped = stepped.as("a")
+        .join(stepped.select(col("u").as("label"), col("label").as("l2")).as("b"),
           Seq("label"), "left")
         .select(col("u"),
-          least(col("label"), coalesce(col("l2"), col("label"))).as("label")))
-      val newSum = updated.agg(coalesce(sum(col("label")), lit(0L)))
-        .head().getLong(0)
+          least(col("label"), coalesce(col("l2"), col("label"))).as("label"))
+      val (next, newSum, newNonCanonical) = cutObserved(jumped)
+      releaseCheckpoint(labels)
       converged = newSum == prevSum
+      labels = next
       prevSum = newSum
-      labels = updated
+      nonCanonical = newNonCanonical
       iter += 1
     }
     edges.unpersist()
-    labels.select(col("u").as("doc_id"), col("label").cast("long").as("cluster_id"))
-      .orderBy("doc_id")
+    Closure(labels, nonCanonical)
   }
+
+  /** Drops a local checkpoint's blocks (a Dataset's `unpersist` does
+    * not reach them: the checkpointed RDD is not in the cache manager). */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
 
   /** Embedding-cosine near-dup pairs: all pairs with cosine ≥ `threshold`.
     *
@@ -1136,38 +1171,65 @@ object Dedup {
     * the curation dashboard's removal accounting; survivors themselves
     * are reproducible from the per-stage operators.
     *
-    * Scale: stage costs are one aggregate, one aggregate, and the
-    * audited LSH+closure path, each over an input the previous stage
-    * already shrank; per-stage survivor sets persist across their two
-    * consumers (filter + count) and are released before returning. */
+    * Input contract: `idCol` is unique and non-null. Stages 1–2 keep
+    * each group's survivor as `min(struct(id, text))` inside the
+    * aggregate itself, which is the min-id row only when ids are unique.
+    *
+    * Plan: three Spark actions, all inside this call.
+    *   1. Both aggregates, then the per-survivor signature table
+    *      `(doc_id, s, mh)` (shingle set + MinHash), persisted. The
+    *      stage counts are observed metrics of that one action: each
+    *      aggregate carries its group sizes up, so the survivor table
+    *      alone yields n0, n1 and n2.
+    *   2–3. The closure's initial labels and its one confirming round
+    *      (more rounds only for chains of near-dups). Banding and the
+    *      Jaccard verify both read the signature table, so the 64-hash
+    *      signature is computed once; the verified pairs feed the closure
+    *      unsorted and unmaterialized, and n3 = n2 − the last round's
+    *      non-canonical count.
+    * The signature table, the edge table and the label checkpoints are
+    * all released before returning. */
   def dedupCascade(docs: DataFrame, urlCol: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.5): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = docs.sparkSession
-    val base = docs.select(col(idCol), col(textCol), col(urlCol))
+    val numPerms = 64
+    val funnel = org.apache.spark.sql.Observation()
+    val contentKey = md5(col("w.text"))
+    val survivors = docs
+      .groupBy(urlCanonical(col(urlCol)))
+      .agg(min(struct(col(idCol).as("id"), col(textCol).as("text"))).as("w"),
+        count(lit(1)).as("k0"))
+      // the stage-2 aggregate's own exchange, with an explicit partition
+      // count: AQE would otherwise coalesce the small partitions and run
+      // the compute-bound signature below on one task (see shingleSets)
+      .repartition(shufflePartitions(docs), contentKey)
+      .groupBy(contentKey)
+      .agg(min(col("w")).as("w"), sum(col("k0")).as("k0"),
+        count(lit(1)).as("k1"))
+      .observe(funnel, coalesce(sum(col("k0")), lit(0L)).as("n0"),
+        coalesce(sum(col("k1")), lit(0L)).as("n1"), count(lit(1)).as("n2"))
+    val sig = survivors
+      .select(col("w.id").as("doc_id"), shingles3(tokens(col("w.text"))).as("s"))
+      .withColumn("mh",
+        column(graft.functions.MinHash60(expression(col("s")), numPerms)))
       .persist(MEMORY_AND_DISK)
-    val n0 = base.count()
-    val s1 = base.select(urlCanonical(col(urlCol)).as("__cu"), col(idCol))
-      .groupBy("__cu").agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    val d1 = base.join(s1, idCol).persist(MEMORY_AND_DISK)
-    val n1 = d1.count()
-    val s2 = d1.groupBy(md5(col(textCol)).as("__h"))
-      .agg(min(col(idCol)).as(idCol)).select(idCol)
-    val d2 = d1.join(s2, idCol).persist(MEMORY_AND_DISK)
-    val n2 = d2.count()
-    val pairs = minHashLsh(d2, idCol, textCol, threshold = threshold)
-    val clusters = duplicateClusters(pairs.select("id_a", "id_b"))
-      .withColumnRenamed("doc_id", "__cd")
-    val n3 = d2.select(col(idCol))
-      .join(clusters, col(idCol) === col("__cd"), "left")
-      .filter(col("cluster_id").isNull || col("cluster_id") === col(idCol))
-      .count()
-    pairs.unpersist(blocking = false) // minHashLsh's materialized result
-    base.unpersist(blocking = false)
-    d1.unpersist(blocking = false)
-    d2.unpersist(blocking = false)
+    sig.count()
+    val m = funnel.get
+    val Seq(n0, n1, n2) = Seq("n0", "n1", "n2").map(m(_).asInstanceOf[Long])
+    val banded = bandTableFromSig(sig, numPerms, bands = 16)
+    val cand = banded.as("a").join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
+    val pairs = verifyJaccard(cand, sig, threshold).select("id_a", "id_b")
+    val clusters = closure(pairs, maxIters = 50, checkpointDir = None)
+    releaseCheckpoint(clusters.labels)
+    sig.unpersist(blocking = false)
+    val n3 = n2 - clusters.nonCanonical
     import spark.implicits._
     Seq(
       ("1_url", n0, n0 - n1, n1),

@@ -267,8 +267,9 @@ object Graph {
     * component_id = min reachable node id). This is the general closure
     * behind [[Dedup.duplicateClusters]] exposed for graph analytics —
     * same pointer-jumping min-label propagation (label-of-label
-    * shortcut, O(log diameter) rounds, per-round convergence detected
-    * by one aggregate), same checkpointing contract (pass
+    * shortcut, O(log diameter) rounds, one checkpoint action per round
+    * whose observed label sum detects convergence), same checkpointing
+    * contract (pass
     * `checkpointDir` on a real cluster — see duplicateClusters' note on
     * executor-loss recovery). Only nodes that appear in `edges` are
     * labeled; isolated nodes are the caller's left-join. */

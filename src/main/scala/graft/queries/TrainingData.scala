@@ -2714,6 +2714,13 @@ object TrainingData extends QueryPack {
         UNION ALL
         SELECT '3_neardup', k2.v, k2.v - k3.v, k3.v FROM k2, k3) t
       ORDER BY stage""".trim)) { (spark, dir) =>
+    Dedup.dedupCascade(cascadeDocs(spark, dir), "url").orderBy("stage")
+  }
+
+  /** The `documents` table with the cascade's derived `url` column (the
+    * dedup_url gate's URLs, identical in both engines). */
+  private[graft] def cascadeDocs(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(spark, dir)
     val url = concat(
       when(pmod(col("doc_id"), lit(3)) === 0, lit("https://"))
@@ -2736,8 +2743,7 @@ object TrainingData extends QueryPack {
         .when(pmod(col("doc_id"), lit(4)) === 1, lit("/"))
         .when(pmod(col("doc_id"), lit(4)) === 2, lit("#section-2"))
         .otherwise(lit("")))
-    Dedup.dedupCascade(docs.withColumn("url", url), "url")
-      .orderBy("stage")
+    docs.withColumn("url", url)
   }
 
   /** Gopher-rule document filter (round 8): the full pre-training gate

@@ -52,6 +52,13 @@ class HygieneSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
+  test("dedupCascade releases everything it created: the signature " +
+      "table, the edge table and every label checkpoint") {
+    val leaked = leakedBlocks(Dedup.dedupCascade(
+      graft.queries.TrainingData.cascadeDocs(spark, sfDir), "url"))
+    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+  }
+
   test("kmeansRefine keeps exactly one (returned) table cached — stale " +
       "rounds and the corpus norm cache are released as it runs") {
     val seeds = embs.filter(col("vec_id") < 4)
