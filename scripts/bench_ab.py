@@ -3,11 +3,12 @@
 
     python3 scripts/bench_ab.py [--base HEAD~1] [--head HEAD]
                                 [--workloads curation,stream_ingest]
-                                [--seeds 10] [--seconds 16] [--trace 0]
+                                [--seeds 10] [--trace 0] [--workdir DIR]
 
 Exports both commits with `git archive` into a scratch directory (the
-committed files only, like a fresh clone), then runs
-`python3 graftbench/run.py` in each, alternating the order per seed
+committed files only, like a fresh clone; kept only when `--workdir` is
+given), then runs BENCHMARK.json's `command` with its `run_seconds` in
+each, alternating the order per seed
 (base first on even seeds, head first on odd ones) so host drift
 falls on both sides. For every workload and metric it prints the base
 and head medians with their quartiles, the change of the medians, the
@@ -35,10 +36,9 @@ def parse():
     ap.add_argument("--head", default="HEAD", help="head revision (default HEAD)")
     ap.add_argument("--workloads", default="curation,stream_ingest")
     ap.add_argument("--seeds", type=int, default=10, help="pairs per workload")
-    ap.add_argument("--seconds", type=int, default=16)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--workdir", help="where to export the commits (default: a temp dir)")
-    ap.add_argument("--keep", action="store_true", help="keep the exported checkouts")
+    ap.add_argument("--workdir", help="export the commits here and keep them "
+                    "(default: a temp dir, removed afterwards)")
     ap.add_argument("--out", help="write all runs' metrics to this JSON file")
     return ap.parse_args()
 
@@ -54,10 +54,10 @@ def export(rev, dest):
     return sha
 
 
-def run(checkout, workload, seed, seconds, trace):
+def run(checkout, spec, workload, seed, trace):
     """One benchmark run; its last stdout line parsed, or None if it failed."""
-    cmd = [sys.executable, "graftbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", str(trace)]
+    cmd = spec["command"] + ["--workload", workload, "--seed", str(seed),
+                             "--seconds", str(spec["run_seconds"]), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -112,10 +112,11 @@ def main():
         if os.path.exists(dest):
             shutil.rmtree(dest)
         sides[side] = (dest, export(rev, dest))
-    print("base %s, head %s, %d seeds, --seconds %d --trace %d"
-          % (sides["base"][1], sides["head"][1], a.seeds, a.seconds, a.trace))
     with open(os.path.join(sides["head"][0], "BENCHMARK.json")) as f:
         spec = json.load(f)
+    print("base %s, head %s, %d seeds, %s --seconds %d --trace %d"
+          % (sides["base"][1], sides["head"][1], a.seeds, " ".join(spec["command"]),
+             spec["run_seconds"], a.trace))
     metrics = [(m["name"], m["better"]) for m in spec["end_to_end" if a.trace == 0 else "per_layer"]]
     everything = {}
     try:
@@ -125,7 +126,7 @@ def main():
                 order = ("base", "head") if seed % 2 == 0 else ("head", "base")
                 got = {}
                 for side in order:
-                    got[side] = run(sides[side][0], workload, seed, a.seconds, a.trace)
+                    got[side] = run(sides[side][0], spec, workload, seed, a.trace)
                 runs.append((got["base"], got["head"]))
                 print("%s seed %d done" % (workload, seed), file=sys.stderr)
             everything[workload] = [{"seed": i + 1, "base": b, "head": h} for i, (b, h) in enumerate(runs)]
@@ -134,7 +135,7 @@ def main():
         if a.out:
             with open(a.out, "w") as f:
                 json.dump({"base": sides["base"][1], "head": sides["head"][1], "runs": everything}, f)
-        if not a.keep and not a.workdir:
+        if not a.workdir:
             shutil.rmtree(work, ignore_errors=True)
 
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -429,13 +429,24 @@ object Dedup {
     * incremental [[DedupIndex]]). `carry` columns of `sh` ride along
     * (the bootstrap path carries the batch-ownership label through). */
   private[ops] def bandTable(sh: DataFrame, numPerms: Int, bands: Int,
-      carry: Seq[String] = Nil): DataFrame = {
+      carry: Seq[String] = Nil): DataFrame =
+    bandTableFromSig(withMinHash(sh, numPerms), numPerms, bands, carry)
+
+  /** `sh` plus its `numPerms`-hash MinHash signature `mh` over `s`. */
+  private[ops] def withMinHash(sh: DataFrame, numPerms: Int): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    bandTableFromSig(
-      sh.withColumn("mh",
-        column(graft.functions.MinHash60(expression(col("s")), numPerms))),
-      numPerms, bands, carry)
+    sh.withColumn("mh",
+      column(graft.functions.MinHash60(expression(col("s")), numPerms)))
   }
+
+  /** Distinct (id_a < id_b) candidate pairs of a band table: docs that
+    * share any (band, bkey). */
+  private[ops] def bandCandidates(banded: DataFrame): DataFrame =
+    banded.as("a").join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
 
   /** Band table off an existing (doc_id, mh) MinHash signature table —
     * lets [[bandingFrontier]] band ONE signature pass several ways. */
@@ -474,12 +485,8 @@ object Dedup {
     val banded = if (cache)
       bandedBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else bandedBase
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val result = verifyJaccard(cand, sh, threshold).orderBy("id_a", "id_b")
+    val result = verifyJaccard(bandCandidates(banded), sh, threshold)
+      .orderBy("id_a", "id_b")
     if (cache) materializeThenRelease(result, Seq(banded)) else result
   }
 
@@ -638,15 +645,12 @@ object Dedup {
     require(bandsChoices.nonEmpty &&
       bandsChoices.forall(b => b >= 1 && numPerms % b == 0),
       "every bands choice must divide numPerms")
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     val sortedB = bandsChoices.sorted
     val maxB = sortedB.max
     // ONE shingle+signature table persisted (s + mh per doc) instead of
     // two separately-persisted passes — every downstream join fetches
     // both columns from the same cached rows.
-    val both = shingleSets(docs, idCol, textCol)
-      .withColumn("mh",
-        column(graft.functions.MinHash60(expression(col("s")), numPerms)))
+    val both = withMinHash(shingleSets(docs, idCol, textCol), numPerms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nTrue = verifyJaccard(cappedExactCand(both, maxDf), both, threshold)
       .agg(count(lit(1)).as("n_true"))
@@ -665,11 +669,7 @@ object Dedup {
     val perConfig: DataFrame = if (sortedB.forall(maxB % _ == 0)) {
       val banded = bandTableFromSig(both.select(col("doc_id"), col("mh")),
         numPerms, maxB)
-      val cand = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
+      val cand = bandCandidates(banded)
       def inB(b: Int): Column = {
         val r = numPerms / b
         exists(sequence(lit(0), lit(b - 1)),
@@ -701,11 +701,7 @@ object Dedup {
     } else sortedB.map { b =>
       val banded = bandTableFromSig(both.select(col("doc_id"), col("mh")),
         numPerms, b)
-      val cand = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .distinct()
+      val cand = bandCandidates(banded)
       val nCand = cand.agg(count(lit(1)).as("n_candidates"))
       val nFound = verifyJaccard(cand, both, threshold)
         .agg(count(lit(1)).as("n_found"))
@@ -1192,7 +1188,6 @@ object Dedup {
   def dedupCascade(docs: DataFrame, urlCol: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = docs.sparkSession
     val numPerms = 64
@@ -1211,21 +1206,20 @@ object Dedup {
         count(lit(1)).as("k1"))
       .observe(funnel, coalesce(sum(col("k0")), lit(0L)).as("n0"),
         coalesce(sum(col("k1")), lit(0L)).as("n1"), count(lit(1)).as("n2"))
-    val sig = survivors
-      .select(col("w.id").as("doc_id"), shingles3(tokens(col("w.text"))).as("s"))
-      .withColumn("mh",
-        column(graft.functions.MinHash60(expression(col("s")), numPerms)))
+    val sig = withMinHash(survivors.select(col("w.id").as("doc_id"),
+        shingles3(tokens(col("w.text"))).as("s")), numPerms)
       .persist(MEMORY_AND_DISK)
-    sig.count()
+    // Materialized by a single-stage action, so the scan that builds the
+    // cache (and the observed metrics inside it) runs in result tasks,
+    // whose accumulator updates Spark applies exactly once. Under count()
+    // it would run in a shuffle-map stage, and a re-run map stage (lost
+    // executor, fetch failure) would add the funnel counts twice.
+    sig.foreach((_: Row) => ())
     val m = funnel.get
     val Seq(n0, n1, n2) = Seq("n0", "n1", "n2").map(m(_).asInstanceOf[Long])
     val banded = bandTableFromSig(sig, numPerms, bands = 16)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val pairs = verifyJaccard(cand, sig, threshold).select("id_a", "id_b")
+    val pairs = verifyJaccard(bandCandidates(banded), sig, threshold)
+      .select("id_a", "id_b")
     val clusters = closure(pairs, maxIters = 50, checkpointDir = None)
     releaseCheckpoint(clusters.labels)
     sig.unpersist(blocking = false)
