@@ -14,7 +14,10 @@ falls on both sides. For every workload and metric it prints the base
 and head medians with their quartiles, the change of the medians, the
 pairs head won (same seed, better in the metric's direction from
 BENCHMARK.json) and whether the median gain exceeds the base's
-interquartile range. Neither checkout's `graftbench/` nor
+interquartile range. It also prints each side's median peak of the
+old-generation heap pool (`heap_pool_peak_mb["PS Old Gen"]` in the run
+receipt's stamp), so a memory change shows its mechanism next to
+`peak_rss_mb`. Neither checkout's `graftbench/` nor
 `BENCHMARK.json` is modified; `--out FILE` also writes every run's
 metrics as JSON.
 """
@@ -28,6 +31,7 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OLD_GEN = "PS Old Gen"
 
 
 def parse():
@@ -67,6 +71,10 @@ def run(checkout, spec, workload, seed, trace):
     if not res.get("correct", False) or res.get("failed", 0):
         sys.stderr.write("incorrect or failed ops (%s, %s, seed %d): %s\n"
                          % (checkout, workload, seed, p.stderr[-2000:]))
+    receipt = os.path.join(checkout, ".bench_build", "receipts",
+                           "%s-seed%d-trace%d.json" % (workload, seed, trace))
+    with open(receipt) as f:
+        res["stamp"] = json.load(f)["stamp"]
     return res
 
 
@@ -98,6 +106,12 @@ def report(workload, metrics, runs):
         print("%-38s %9.4g [%6.4g, %6.4g] %9.4g [%6.4g, %6.4g] %+7.1f%% %2d/%-3d %s"
               % (name, bmed, bq1, bq3, hmed, hq1, hq3, change, won, len(pairs),
                  "yes" if gain > (bq3 - bq1) else "no"))
+    old_gen = [[r["stamp"]["heap_pool_peak_mb"][OLD_GEN] for r in side
+                if r and OLD_GEN in r["stamp"]["heap_pool_peak_mb"]] for side in zip(*runs)]
+    if len(old_gen) == 2 and all(old_gen):
+        print("%-38s %9.4g MB (base) %9.4g MB (head), median of the receipts' stamps"
+              % ("heap_pool_peak_mb[%s]" % OLD_GEN, statistics.median(old_gen[0]),
+                 statistics.median(old_gen[1])))
     failed = sum(1 for b, h in runs if not b or not h or b.get("failed") or h.get("failed"))
     if failed:
         print("pairs with a failed or missing run: %d" % failed)

@@ -158,7 +158,13 @@ object Upsert {
     * of the touched days, not a full-table rewrite — the claim SURVEY §4
     * makes, as code.
     *
-    * First write (no table at `root`) lays the table out partitioned.
+    * `incoming` is evaluated once: into an existing table it is
+    * persisted, the touched-partition `collect` materializes it, the
+    * merge write reads the cache, and the cache is released before
+    * returning, also on failure. Its source scan and parse — for the
+    * stream lane, the bronze JSON — therefore run in one Spark action,
+    * not in both. First write (no table at `root`) is one action and
+    * lays the table out partitioned.
     */
   def mergePartitioned(
       spark: org.apache.spark.sql.SparkSession,
@@ -167,28 +173,30 @@ object Upsert {
       keys: Seq[String],
       version: Column,
       partitionCol: String): Unit = {
-    // resolve the filesystem FROM the table path (the cluster-default FS
-    // may be a different scheme than the lake)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(rootPath)
-    val resolved =
-      if (!exists) latestByKey(incoming, keys, version)
-      else {
-        val parts = incoming.select(partitionCol).distinct().collect()
-          .map(_.get(0)).toSeq
-        val existing = spark.read.parquet(root)
-          .filter(col(partitionCol).isin(parts: _*)) // partition pruning
-        mergeByKey(existing, incoming, keys, version)
-      }
     // per-write option, NOT the session conf: mutating the global conf
     // races with concurrent writers on a shared session (e.g. two
     // streaming foreachBatch sinks), which could run a full-table static
     // overwrite and clobber untouched partitions
-    resolved.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(root)
+    def write(resolved: DataFrame): Unit =
+      resolved.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCol)
+        .parquet(root)
+    // resolve the filesystem FROM the table path (the cluster-default FS
+    // may be a different scheme than the lake)
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(rootPath)) write(latestByKey(incoming, keys, version))
+    else {
+      val cached = incoming.persist()
+      try {
+        val parts = cached.select(partitionCol).distinct().collect()
+          .map(_.get(0)).toSeq
+        val existing = spark.read.parquet(root)
+          .filter(col(partitionCol).isin(parts: _*)) // partition pruning
+        write(mergeByKey(existing, cached, keys, version))
+      } finally cached.unpersist()
+    }
   }
 
   /** Thin JDBC upsert sink — the LITERAL parity path for the

@@ -13,7 +13,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columns plus `raw`/`valid`, bad records flagged — never dropped),
   * and every downstream stage ([[FetchEventStream.validEvents]],
   * `deadLetters`, `dedupedEvents`, `normalizeToSilver`,
-  * `windowedHealth`) composes against that shape only. The spec runs
+  * `windowedHealth`) composes against that shape only. A `success`
+  * event's `path` names the bronze file holding its payload, relative
+  * to the lake root (`bronze/<file>`, as the reference writes it) or
+  * absolute; the consumer reads only the files its events name (see
+  * [[FetchEventStream.normalizeToSilver]]). A success with a null
+  * `path` is routed to the dead-letter feed by `validEvents`/
+  * `deadLetters` — for every transport, since no transport has to
+  * flag it. The spec runs
   * the SAME normalize-upsert graph from two transports and asserts
   * identical silver tables — transport-independence as a test, not a
   * comment.

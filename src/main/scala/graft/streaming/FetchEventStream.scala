@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meteo.{MeteoSchemas, Sources}
@@ -57,12 +58,20 @@ object FetchEventStream {
       .select(col("raw"), col("valid"), col("e.*"))
       .withColumn("finished_at", timestamp_millis(col("finished_at")))
 
+  /** Events the consumer can act on: parsed cleanly and, for a
+    * `success`, naming the bronze file its payload sits in (`path` —
+    * see [[normalizeToSilver]]). A success without a path references no
+    * payload, so it is a bad record too, never a silent no-op. Never
+    * NULL: `valid` is non-null and `<=>` is null-safe. */
+  private def usable: Column =
+    col("valid") && !((col("status") <=> FetchStatus.Success) && col("path").isNull)
+
   /** Events that parsed cleanly; the complement is the dead-letter feed. */
   def validEvents(parsed: DataFrame): DataFrame =
-    parsed.filter(col("valid")).drop("raw", "valid")
+    parsed.filter(usable).drop("raw", "valid")
 
   def deadLetters(parsed: DataFrame): DataFrame =
-    parsed.filter(!col("valid")).select("raw")
+    parsed.filter(!usable).select("raw")
 
   /** Consume successful fetch events: per micro-batch, read the bronze
     * payloads the events reference, normalize to observation rows, and
@@ -70,16 +79,33 @@ object FetchEventStream {
     * `silverDir` (the consume→normalize→upsert loop; Postgres ON
     * CONFLICT becomes [[Upsert.mergeByKey]] over parquet).
     *
+    * The `path` contract (streaming/load.py:43-59): a success event's
+    * `path` names the bronze JSON-lines file holding its payload, as a
+    * `{"fetch_id", "payload"}` line. A relative path resolves against
+    * the lake root, the parent of `bronzeDir` (the reference writes
+    * `bronze/<file>`); an absolute one is used as given. A micro-batch
+    * reads only the files its events name — never the whole bronze
+    * root — and joins on `fetch_id` inside them, since one file may
+    * hold many payloads. A named file that does not exist fails the
+    * batch with an error naming the path.
+    *
+    * Spark actions per micro-batch into an existing table: the path
+    * probe (one `collect`; an empty batch stops there), the touched-days
+    * `collect` and the merge write, which reads the bronze files once
+    * ([[Upsert.mergePartitioned]] evaluates its input once).
+    *
     * Returns the started query; callers own checkpoint location. */
   def normalizeToSilver(events: DataFrame, bronzeDir: String,
       silverDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val lakeRoot = lakeRootOf(events.sparkSession, bronzeDir)
     events.filter(col("status") === FetchStatus.Success).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val batchObs = batchObservations(batch, bronzeDir)
+        val files = referencedFiles(batch, lakeRoot)
+        if (files.nonEmpty) {
+          val batchObs = batchObservations(batch, files)
           // partition-bounded MERGE: the silver table is day-partitioned
           // and only the days present in this batch are read + rewritten
           // (Upsert.mergePartitioned) — a micro-batch costs its touched
@@ -95,16 +121,36 @@ object FetchEventStream {
       .start()
   }
 
+  /** The lake root that relative event paths resolve against: the
+    * qualified parent of `bronzeDir`. */
+  private def lakeRootOf(spark: SparkSession, bronzeDir: String): String = {
+    val bronze = new Path(bronzeDir)
+    val fs = bronze.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.makeQualified(bronze).getParent.toString
+  }
+
+  /** The distinct bronze files a micro-batch's events name, resolved
+    * against `lakeRoot`: one `collect` of the (few, short) path strings,
+    * de-duplicated on the driver — one job, where a Spark `distinct`
+    * would run two. Empty for an empty batch. */
+  private def referencedFiles(batch: DataFrame, lakeRoot: String): Seq[String] =
+    batch.select("path").collect().iterator
+      .flatMap(r => Option(r.getString(0))).toSeq.distinct
+      .map { p =>
+        val path = new Path(p)
+        (if (path.isAbsolute) path else new Path(lakeRoot, p)).toString
+      }
+
   /** One micro-batch of success events → normalized observation rows
     * (with their last-write-wins `version`): join events to the bronze
-    * payloads they reference and resolve each event's transform through
-    * the source registry (streaming/load.py:49-52); events from
-    * unregistered sources are skipped, the consumer's StreamLoadError
-    * path. */
-  private def batchObservations(batch: DataFrame, bronzeDir: String)
+    * payloads in `files` (the batch's [[referencedFiles]]) and resolve
+    * each event's transform through the source registry
+    * (streaming/load.py:49-52); events from unregistered sources are
+    * skipped, the consumer's StreamLoadError path. */
+  private def batchObservations(batch: DataFrame, files: Seq[String])
       : DataFrame = {
     val bronze = batch.sparkSession
-      .read.schema("fetch_id STRING, payload STRING").json(bronzeDir)
+      .read.schema("fetch_id STRING, payload STRING").json(files: _*)
     Sources.registry.values.toSeq.map { src =>
       src.normalize(
         batch.filter(col("source") === src.url)
@@ -147,12 +193,14 @@ object FetchEventStream {
       txRoot: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.sources.{Manifest, TxManifest}
+    val lakeRoot = lakeRootOf(events.sparkSession, bronzeDir)
     events.filter(col("status") === FetchStatus.Success).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val batchObs = batchObservations(batch, bronzeDir)
+        val files = referencedFiles(batch, lakeRoot)
+        if (files.nonEmpty) {
+          val batchObs = batchObservations(batch, files)
           val keys = Seq("latitude", "longitude", "timestamp")
           val merged = TxManifest.latestTx(spark, txRoot) match {
             case Some(tx) =>

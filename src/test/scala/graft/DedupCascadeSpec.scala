@@ -1,15 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.Dedup
 import graft.queries.TrainingData
@@ -97,50 +89,6 @@ class DedupCascadeSpec extends SparkTestBase {
 
   private def labels(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  /** The Spark actions (query executions) `body` runs, by action name
-    * ("count", "localCheckpoint", …). The sentinel-job pattern of
-    * PlanAuditSpec: the session's execution listeners share the listener
-    * bus queue with SparkListeners, which is FIFO, so once a tagged raw
-    * RDD job started after `body` is seen, every action of `body` has
-    * been too. */
-  private def actionsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val sentinels = new AtomicInteger(0)
-    val names = new ConcurrentLinkedQueue[String]()
-    val jobs = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == "action-sentinel"))
-          sentinels.incrementAndGet()
-    }
-    val actions = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        names.add(f)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        names.add(f)
-    }
-    def sentinel(): Unit = {
-      val seen = sentinels.get()
-      sc.setJobGroup("action-sentinel", "sentinel")
-      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (sentinels.get() == seen && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(sentinels.get() > seen, "sentinel job never observed")
-    }
-    sc.addSparkListener(jobs)
-    spark.listenerManager.register(actions)
-    try {
-      sentinel()
-      names.clear()
-      body
-      sentinel()
-      names.asScala.toSeq
-    } finally {
-      spark.listenerManager.unregister(actions)
-      sc.removeSparkListener(jobs)
-    }
-  }
 
   test("dedupCascade funnel equals the join-based formulation on the " +
       "sf0.1 documents") {

@@ -1,9 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Similarity, Upsert}
 
 /** Session-cache lifecycle (judge r8 #4): every operator that persists
   * corpus-scale working tables internally must RELEASE them before
@@ -22,11 +24,16 @@ class HygieneSpec extends SparkTestBase {
 
   /** Runs `op`, consumes its result, releases it, and returns the set
     * of persistent RDDs the whole cycle leaked into the session. */
-  private def leakedBlocks(op: => DataFrame): Set[Int] = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private def leakedBlocks(op: => DataFrame): Set[Int] = leakedBy {
     val out = op
     out.count() // the caller's action — reads the materialized result
     out.unpersist(blocking = true)
+  }
+
+  /** The persistent RDDs `body` leaves in the session. */
+  private def leakedBy(body: => Unit): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    body
     spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
   }
 
@@ -93,5 +100,35 @@ class HygieneSpec extends SparkTestBase {
     Dedup.ngramJaccardCapped(docs, cache = false).count()
     val after = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(after.isEmpty, s"cache=false persisted: $after")
+  }
+
+  test("mergePartitioned into an existing table releases the cache of " +
+      "its incoming rows") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("hygmerge").resolve("t").toString
+    def merge(rows: Seq[(String, Int, Long)]): Unit =
+      Upsert.mergePartitioned(spark, root, rows.toDF("day", "key", "ver"),
+        Seq("day", "key"), col("ver"), "day")
+    merge(Seq(("2026-01-01", 1, 1L), ("2026-01-02", 2, 1L)))
+    val leaked = leakedBy(merge(Seq(("2026-01-01", 1, 2L), ("2026-01-03", 3, 2L))))
+    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+    assert(spark.read.parquet(root).count() == 3)
+  }
+
+  test("a stream micro-batch into an existing silver table releases the " +
+      "cache of its incoming rows") {
+    import StreamingSpec._
+    val events = Files.createTempDirectory("hygev")
+    val bronze = Files.createTempDirectory("hyglake").resolve("bronze")
+    val silver = Files.createTempDirectory("hygsilver").resolve("obs")
+    val ckpt = Files.createTempDirectory("hygckpt")
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0), "f2" -> payload(2.0, 21.0))
+    def consume(): Unit = consumeAll(spark, events, bronze.toString, silver, ckpt)
+    Files.writeString(events.resolve("b0.json"), eventJson("f1", "success", 1000))
+    consume() // lays out the silver table
+    Files.writeString(events.resolve("b1.json"), eventJson("f2", "success", 2000))
+    val leaked = leakedBy(consume())
+    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+    assert(spark.read.parquet(silver.toString).count() == 2)
   }
 }

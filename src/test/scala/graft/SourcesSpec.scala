@@ -17,7 +17,6 @@ import graft.streaming.FetchEventStream
   * etl/sources.py:52-57) and the params merge order
   * (static ++ required ++ extra, caller wins). */
 class SourcesSpec extends SparkTestBase {
-  import spark.implicits._
 
   /** A second source: single-observation JSON payloads from a toy
     * station API. Normalize emits the SAME silver observation schema
@@ -97,11 +96,10 @@ class SourcesSpec extends SparkTestBase {
       s"""{"lat":$lat,"lon":4.0,"ts":"2026-01-01T00:00","temp":$temp}"""
     def eventJson(id: String, url: String, ms: Long): String =
       s"""{"fetch_id":"$id","source":"$url","status":"success",""" +
-        s""""path":"/bronze/$id.json","params":{},"finished_at":$ms}"""
+        s""""path":"bronze/$id.json","params":{},"finished_at":$ms}"""
 
-    Seq(("m1", meteoPayload(1.0, 20.0)), ("t1", toyPayload(7.0, 33.0)))
-      .toDF("fetch_id", "payload")
-      .write.mode("overwrite").json(bronze.toString)
+    StreamingSpec.writeBronze(bronze,
+      "m1" -> meteoPayload(1.0, 20.0), "t1" -> toyPayload(7.0, 33.0))
     Files.writeString(events.resolve("b0.json"),
       eventJson("m1", Sources.meteo.url, 1000) + "\n" +
         eventJson("t1", "https://toy.example/v1/obs", 2000))

@@ -1,18 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.streaming.FetchEventStream
+import graft.streaming.{FetchEventStream, JsonLinesSource}
 
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
+  import StreamingSpec._
 
   private def tmp(prefix: String): Path = Files.createTempDirectory(prefix)
-
-  private def eventJson(id: String, status: String, millis: Long): String =
-    s"""{"fetch_id":"$id","source":"https://api.open-meteo.com/v1/forecast","status":"$status",""" +
-      s""""path":"/bronze/$id.json","params":{"latitude":"1.0"},"finished_at":$millis}"""
 
   test("stream parses events, routes bad records, windows health") {
     val in = tmp("events")
@@ -83,19 +85,11 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("normalizeToSilver consumes events into a merged silver table") {
-    val events = tmp("events3"); val bronze = tmp("bronze")
+    val events = tmp("events3"); val bronze = tmp("lake").resolve("bronze")
     val silver = tmp("silver").resolve("obs"); val ckpt = tmp("ckpt")
 
-    def payload(lat: Double, temp: Double): String =
-      s"""{"latitude":$lat,"longitude":9.0,"hourly":{"time":["2026-01-01T00:00"],
-         |"temperature_2m":[$temp],"precipitation":[0.0],
-         |"soil_temperature_18cm":[1.0],"soil_moisture_9_to_27cm":[0.1],
-         |"wind_speed_10m":[5.0],"wind_direction_10m":[90],"cloud_cover":[10]}}"""
-        .stripMargin.replace("\n", "")
-    // bronze payload rows referenced by fetch_id (payload embedded as string)
-    Seq(("f1", payload(1.0, 20.0)), ("f2", payload(2.0, 25.0)))
-      .toDF("fetch_id", "payload")
-      .write.mode("overwrite").json(bronze.toString)
+    // bronze payload files, each where its event's path names it
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0), "f2" -> payload(2.0, 25.0))
     Files.writeString(events.resolve("b0.json"),
       eventJson("f1", "success", 1000) + "\n" + eventJson("f2", "success", 2000))
 
@@ -110,8 +104,7 @@ class StreamingSpec extends SparkTestBase {
     assert(obs.select("latitude").as[Double].collect().toSet == Set(1.0, 2.0))
 
     // second batch: a re-fetch of lat=1.0 wins over the old observation
-    Seq(("f3", payload(1.0, 99.0))).toDF("fetch_id", "payload")
-      .write.mode("append").json(bronze.toString)
+    writeBronze(bronze, "f3" -> payload(1.0, 99.0))
     Files.writeString(events.resolve("b1.json"),
       eventJson("f3", "success", 5000) + "\n" +
         // unknown source url -> registry miss -> skipped (StreamLoadError path)
@@ -236,19 +229,11 @@ class StreamingSpec extends SparkTestBase {
       "JSON-lines and Avro-wire sources yields identical silver tables") {
     import graft.streaming.{AvroWire, AvroWireSource, JsonLinesSource}
     val eventsDir = tmp("tiev"); val wireDir = tmp("tiwire")
-    val bronze = tmp("tibronze")
+    val bronze = tmp("tilake").resolve("bronze")
     val silverA = tmp("tisA").resolve("obs"); val ckptA = tmp("tickA")
     val silverB = tmp("tisB").resolve("obs"); val ckptB = tmp("tickB")
 
-    def payload(lat: Double, temp: Double): String =
-      s"""{"latitude":$lat,"longitude":9.0,"hourly":{"time":["2026-01-01T00:00"],
-         |"temperature_2m":[$temp],"precipitation":[0.0],
-         |"soil_temperature_18cm":[1.0],"soil_moisture_9_to_27cm":[0.1],
-         |"wind_speed_10m":[5.0],"wind_direction_10m":[90],"cloud_cover":[10]}}"""
-        .stripMargin.replace("\n", "")
-    Seq(("f1", payload(1.0, 20.0)), ("f2", payload(2.0, 25.0)))
-      .toDF("fetch_id", "payload")
-      .write.mode("overwrite").json(bronze.toString)
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0), "f2" -> payload(2.0, 25.0))
     val lines = eventJson("f1", "success", 1000) + "\n" +
       eventJson("f2", "success", 2000)
     Files.writeString(eventsDir.resolve("b0.json"), lines)
@@ -307,18 +292,10 @@ class StreamingSpec extends SparkTestBase {
       "ledger as ONE transaction; replay keeps the observable state " +
       "exactly-once") {
     import graft.sources.TxManifest
-    val events = tmp("txevents"); val bronze = tmp("txbronze")
+    val events = tmp("txevents"); val bronze = tmp("txbronze").resolve("bronze")
     val txRoot = tmp("txlake").resolve("lake"); val ckpt = tmp("txckpt")
 
-    def payload(lat: Double, temp: Double): String =
-      s"""{"latitude":$lat,"longitude":9.0,"hourly":{"time":["2026-01-01T00:00"],
-         |"temperature_2m":[$temp],"precipitation":[0.0],
-         |"soil_temperature_18cm":[1.0],"soil_moisture_9_to_27cm":[0.1],
-         |"wind_speed_10m":[5.0],"wind_direction_10m":[90],"cloud_cover":[10]}}"""
-        .stripMargin.replace("\n", "")
-    Seq(("f1", payload(1.0, 20.0)), ("f2", payload(2.0, 25.0)))
-      .toDF("fetch_id", "payload")
-      .write.mode("overwrite").json(bronze.toString)
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0), "f2" -> payload(2.0, 25.0))
     Files.writeString(events.resolve("b0.json"),
       eventJson("f1", "success", 1000) + "\n" + eventJson("f2", "success", 2000))
 
@@ -337,8 +314,7 @@ class StreamingSpec extends SparkTestBase {
       .collect().toSet == Set("f1", "f2"))
 
     // second batch: re-fetch of lat=1.0 must win; the tx advances
-    Seq(("f3", payload(1.0, 99.0))).toDF("fetch_id", "payload")
-      .write.mode("append").json(bronze.toString)
+    writeBronze(bronze, "f3" -> payload(1.0, 99.0))
     Files.writeString(events.resolve("b1.json"),
       eventJson("f3", "success", 5000))
     val q2 = FetchEventStream.normalizeToSilverTx(
@@ -374,5 +350,141 @@ class StreamingSpec extends SparkTestBase {
     val first = TxManifest.snapshot(spark, txRoot.toString, Some(0L))
     assert(first("observations").count() == 2)
     assert(first("fetch_ledger").count() == 2)
+  }
+
+  test("a success event without a path is dead-lettered by both " +
+      "transports, never silently dropped") {
+    import graft.streaming.AvroWire
+    val in = tmp("nullpath")
+    Files.writeString(in.resolve("b0.json"), Seq(
+      eventJson("ok", "success", 1000),
+      eventJson("nopath", "success", 2000).replace("\"bronze/nopath.json\"", "null"),
+      eventJson("err", "error", 3000).replace("\"bronze/err.json\"", "null")
+    ).mkString("\n"))
+    val json = FetchEventStream.parseEvents(
+      spark.read.text(in.toString).withColumnRenamed("value", "raw"))
+    val wire = AvroWire.decodeFetchEvents(AvroWire.encodeFetchEvents(
+      json.select("fetch_id", "source", "status", "path", "params", "finished_at")))
+    for ((name, parsed) <- Seq("json" -> json, "avro" -> wire)) {
+      assert(parsed.filter(col("valid")).count() == 3, name)
+      assert(FetchEventStream.validEvents(parsed).select("fetch_id").as[String]
+        .collect().sorted.toSeq == Seq("err", "ok"), name)
+      assert(FetchEventStream.deadLetters(parsed).count() == 1, name)
+    }
+  }
+
+  test("a micro-batch reads only the bronze files its events name: a " +
+      "same-fetch_id payload in an unreferenced file never reaches silver") {
+    val events = tmp("unrefev"); val bronze = tmp("unreflake").resolve("bronze")
+    val silver = tmp("unrefsilver").resolve("obs")
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0))
+    // a stale copy of f1's payload, for another hour, in a file no event names
+    Files.writeString(bronze.resolve("stale.json"),
+      bronzeLine("f1", payload(1.0, 30.0, "2026-01-01T05:00")) + "\n")
+    Files.writeString(events.resolve("b0.json"), eventJson("f1", "success", 1000))
+    consumeAll(spark, events, bronze.toString, silver, tmp("unrefckpt"))
+    val hours = spark.read.parquet(silver.toString)
+      .select(hour(col("timestamp"))).as[Int].collect().toSeq
+    assert(hours == Seq(0), s"silver hours $hours")
+  }
+
+  test("a referenced bronze file that does not exist fails the batch, " +
+      "and the error names the path") {
+    val events = tmp("missev"); val bronze = tmp("misslake").resolve("bronze")
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0))
+    Files.writeString(events.resolve("b0.json"),
+      eventJson("f1", "success", 1000) + "\n" + eventJson("gone", "success", 2000))
+    val e = intercept[Exception] {
+      consumeAll(spark, events, bronze.toString, tmp("misssilver").resolve("obs"),
+        tmp("missckpt"))
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(bronze.resolve("gone.json").toString)),
+      messages.mkString("\n"))
+  }
+
+  test("a micro-batch into an existing table runs 3 SQL actions (path " +
+      "probe, touched days, write) and reads each referenced bronze file " +
+      "once, all in one of them") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[OpenCountingFileSystem].getName)
+    val events = tmp("actev"); val bronze = tmp("actlake").resolve("bronze")
+    val silver = tmp("actsilver").resolve("obs"); val ckpt = tmp("actckpt")
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0), "f2" -> payload(2.0, 21.0),
+      "f3" -> payload(3.0, 22.0), "other" -> payload(4.0, 23.0))
+    def consume(): Unit = consumeAll(spark, events, "countfs://" + bronze, silver, ckpt)
+    Files.writeString(events.resolve("b0.json"), eventJson("f1", "success", 1000))
+    consume() // lays out the silver table
+    Files.writeString(events.resolve("b1.json"),
+      eventJson("f2", "success", 2000) + "\n" + eventJson("f3", "success", 3000))
+    OpenCountingFileSystem.opens.clear()
+    val actions = actionsOf(consume())
+    val opens = OpenCountingFileSystem.opens.asScala.toSeq
+      .filter(_._1.contains(bronze.toString))
+    assert(actions.size == 3, s"actions: $actions")
+    assert(opens.map(o => new org.apache.hadoop.fs.Path(o._1).getName).sorted
+      == Seq("f2.json", "f3.json"), s"bronze opens: $opens")
+    assert(opens.map(_._2).distinct.size == 1,
+      s"bronze read under several SQL executions: $opens")
+  }
+}
+
+
+object StreamingSpec {
+  /** A meteo fetch event whose `path` names `bronze/<id>.json`. */
+  def eventJson(id: String, status: String, millis: Long): String =
+    s"""{"fetch_id":"$id","source":"https://api.open-meteo.com/v1/forecast","status":"$status",""" +
+      s""""path":"bronze/$id.json","params":{"latitude":"1.0"},"finished_at":$millis}"""
+
+  /** A one-hour meteo payload at (`lat`, 9.0) for `time`. */
+  def payload(lat: Double, temp: Double, time: String = "2026-01-01T00:00"): String =
+    s"""{"latitude":$lat,"longitude":9.0,"hourly":{"time":["$time"],
+       |"temperature_2m":[$temp],"precipitation":[0.0],
+       |"soil_temperature_18cm":[1.0],"soil_moisture_9_to_27cm":[0.1],
+       |"wind_speed_10m":[5.0],"wind_direction_10m":[90],"cloud_cover":[10]}}"""
+      .stripMargin.replace("\n", "")
+
+  /** One bronze line: the payload embedded as a JSON string. */
+  def bronzeLine(fetchId: String, payload: String): String = {
+    val quoted = payload.replace("\\", "\\\\").replace("\"", "\\\"")
+    s"""{"fetch_id":"$fetchId","payload":"$quoted"}"""
+  }
+
+  /** Runs one [[FetchEventStream.consume]] query over the JSON-lines
+    * events under `events` until it has processed everything available,
+    * then stops it. */
+  def consumeAll(spark: SparkSession, events: Path, bronzeDir: String,
+      silver: Path, ckpt: Path): Unit = {
+    val q = FetchEventStream.consume(spark, JsonLinesSource(events.toString),
+      bronzeDir, silver.toString, ckpt.toString)
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Writes each `(fetch_id, payload)` to `bronze/<fetch_id>.json`, the
+    * file the event fixtures' `path` names (relative to the lake root,
+    * the parent of `bronze`). */
+  def writeBronze(bronze: Path, payloads: (String, String)*): Unit = {
+    Files.createDirectories(bronze)
+    payloads.foreach { case (id, p) =>
+      Files.writeString(bronze.resolve(s"$id.json"), bronzeLine(id, p) + "\n")
+    }
+  }
+
+  /** The local filesystem under the `countfs` scheme, recording every
+    * file open with the SQL execution id of the task that opens it. */
+  class OpenCountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+    override def getScheme: String = "countfs"
+    override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+        : org.apache.hadoop.fs.FSDataInputStream = {
+      OpenCountingFileSystem.opens.add(f.toString -> Option(TaskContext.get())
+        .map(_.getLocalProperty("spark.sql.execution.id")).orNull)
+      super.open(f, bufferSize)
+    }
+  }
+
+  object OpenCountingFileSystem {
+    val opens = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
   }
 }
