@@ -227,7 +227,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("transport independence: the same normalize-upsert graph from " +
       "JSON-lines and Avro-wire sources yields identical silver tables") {
-    import graft.streaming.{AvroWire, AvroWireSource, JsonLinesSource}
+    import graft.streaming.{AvroWire, AvroWireSource}
     val eventsDir = tmp("tiev"); val wireDir = tmp("tiwire")
     val bronze = tmp("tilake").resolve("bronze")
     val silverA = tmp("tisA").resolve("obs"); val ckptA = tmp("tickA")
@@ -429,7 +429,6 @@ class StreamingSpec extends SparkTestBase {
       s"bronze read under several SQL executions: $opens")
   }
 }
-
 
 object StreamingSpec {
   /** A meteo fetch event whose `path` names `bronze/<id>.json`. */
