@@ -31,18 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object Cli {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopK.ensureRegistered(spark)
-    spark
-  }
+  private def session(): SparkSession = GraftSession.local(GraftSession.cpus)
 
   private def flag(args: Seq[String], name: String): Option[String] =
     args.sliding(2).collectFirst { case Seq(`name`, v) => v }

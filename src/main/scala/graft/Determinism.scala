@@ -29,18 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Determinism {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.TopK.ensureRegistered(s)
-    s
-  }
-
   /** Order-insensitive content hash of a full result. */
   private def contentHash(df: DataFrame): Long = {
     val cols = df.columns.sorted.map(c =>
@@ -71,7 +59,7 @@ object Determinism {
 
     mode match {
       case "boundary" =>
-        val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+        val spark = GraftSession.local(GraftSession.cpus)
         // q48's rank input: the per-customer aggregate; q51's: orders rows
         val orders = Tables.orders(spark, sfDir)
         val rfmA = orders.groupBy(col("o_custkey").as("custkey"))
@@ -102,7 +90,7 @@ object Determinism {
         spark.stop()
 
       case "invariant" =>
-        val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+        val spark = GraftSession.local(GraftSession.cpus)
         val base = rankQueries.filter(SparkEntry.queries.contains)
           .map(q => q -> contentHash(SparkEntry.queries(q)(spark, sfDir)))
           .toMap
@@ -134,7 +122,7 @@ object Determinism {
         val cpuCycle = Seq(8, 16, 32)
         var base: Map[String, Long] = Map.empty
         for (i <- 0 until iters) {
-          val spark = session(cpuCycle(i % cpuCycle.length))
+          val spark = GraftSession.local(cpuCycle(i % cpuCycle.length))
           val hs = rankQueries.filter(SparkEntry.queries.contains)
             .map(q => q -> contentHash(SparkEntry.queries(q)(spark, sfDir)))
             .toMap

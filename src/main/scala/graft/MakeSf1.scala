@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize a persistent sf1 (10× sf0.1) tier for the
@@ -41,18 +41,13 @@ object MakeSf1 {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/root/repo/testdata_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     import graft.functions.Hashing.tokens
 
     def exists(name: String): Boolean =
       java.nio.file.Files.exists(java.nio.file.Paths.get(s"$outDir/$name.parquet"))
-    def write(name: String, df: DataFrame, parts: Int = cpus.toInt): Unit =
+    def write(name: String, df: DataFrame, parts: Int = cpus): Unit =
       if (!exists(name)) {
         df.repartition(parts).write.mode("overwrite")
           .parquet(s"$outDir/$name.parquet")

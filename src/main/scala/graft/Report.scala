@@ -100,15 +100,7 @@ object Report {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "/tmp/graft_report.html"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopK.ensureRegistered(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       render(spark, sfDir).getBytes("UTF-8"))
     println(s"wrote $out")

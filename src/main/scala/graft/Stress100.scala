@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool: 100× scale tier for the composed sketch-dedup / ANN paths
-  * (the [[Stress]] harness proves 10×; this one targets the regimes
-  * where quadratic hazards actually bite — LSH clique output, IVF cell
-  * density, SemDeDup's within-cluster pair scan).
+/** Dev tool: ×1/×10/×100 scale tiers for the composed sketch-dedup /
+  * ANN paths, the regimes where quadratic hazards actually bite (LSH
+  * clique output, IVF cell density, SemDeDup's within-cluster pair
+  * scan).
   *
   * Methodology, per factor F ∈ {1, 10, 100}:
   *  - documents replicate with SHIFTED ids and per-replica TOKEN
@@ -38,19 +37,8 @@ object Stress100 {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/stress100"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // listener-retention caps: the round-10 bench finding (retained
-      // SQL-execution bookkeeping grows across a long single-JVM sweep
-      // and taxes later jobs); same treatment as Bench/Verify
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     import graft.functions.Hashing.tokens
 
     val factors = Seq(1, 10, 100)
@@ -68,7 +56,7 @@ object Stress100 {
               concat_ws(" ", transform(tokens(col("text")),
                 t => concat(t, lit(s"_$i")))))
         }.reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(dPath)
       }
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(ePath))) {
@@ -82,7 +70,7 @@ object Stress100 {
           embs.withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L))
             .withColumn("embedding", e)
         }.reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(ePath)
       }
     }
@@ -98,7 +86,7 @@ object Stress100 {
             .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 1000000000L))
             .withColumn("o_custkey", col("o_custkey") + lit(i.toLong * 10000000L))
         }.reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(oPath)
       }
     }
@@ -112,7 +100,7 @@ object Stress100 {
           ev.withColumn("event_id", col("event_id") + lit(i.toLong * 1000000000L))
             .withColumn("user_id", col("user_id") + lit(i.toLong * 10000000L))
         }.reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(evPath)
       }
       val liPath = s"$outDir/lineitem_x$f"
@@ -128,7 +116,7 @@ object Stress100 {
             .withColumn("l_partkey", col("l_partkey") + lit(i.toLong * 100000000L))
             .withColumn("l_suppkey", col("l_suppkey") + lit(i.toLong * 10000000L))
         }.reduce(_ unionByName _)
-          .repartition(cpus.toInt)
+          .repartition(cpus)
           .write.mode("overwrite").parquet(liPath)
       }
     }

@@ -6,26 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // write timestamps as INT64 micros so the driver's DuckDB/pyarrow
-      // side sees the same physical type it computes (not INT96/ns)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // status listeners run even with the UI off and their retained
-      // state grows across a 174-query single-JVM dump, taxing every
-      // later job (the Bench round-10 finding — capping retention cut
-      // that sweep 20% on identical code); same treatment here
-      .config("spark.sql.ui.retainedExecutions", "15")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopK.ensureRegistered(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // optional local-iteration filter: run only the named queries
     // (driver sets no filter and always gets the full dump)

@@ -22,10 +22,12 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * buffer, no spill, and rows beyond k never materialize.
   *
   * Pieces: [[TopKPerKeyNode]] (logical), [[TopKPerKeyStrategy]]
-  * (planner rule), [[TopKPerKeyExec]] (physical). Registered either via
-  * `spark.sql.extensions=graft.plans.GraftSparkExtensions` or lazily by
-  * [[TopK.perKey]] through `spark.experimental.extraStrategies` — so
-  * the operator works on any session, extension-configured or not.
+  * (planner rule), [[TopKPerKeyExec]] (physical). [[TopK.ensureRegistered]]
+  * is the one registration path: it appends the strategy to
+  * `spark.experimental.extraStrategies` and the rewrite rules to
+  * `spark.experimental.extraOptimizations`. [[graft.GraftSession]] calls
+  * it on every session it builds, and [[TopK.perKey]] calls it lazily,
+  * so the operator also works on a session built elsewhere.
   */
 case class TopKPerKeyNode(
     keys: Seq[Expression],
@@ -179,21 +181,10 @@ case class TopKPerKeyExec(
     copy(child = newChild)
 }
 
-/** `spark.sql.extensions` entry point. */
-class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    e.injectOptimizerRule(_ => WindowTopKRewrite)
-    e.injectOptimizerRule(_ => TopKJoinPushdown)
-    e.injectOptimizerRule(_ => FilterThroughTopK)
-    e.injectOptimizerRule(_ => MergeFilterPushdown)
-  }
-}
-
 object TopK {
 
-  /** Idempotently make the strategy + rewrite rule available on `spark`
-    * (covers sessions built without the extensions conf). */
+  /** Idempotently make the strategy + rewrite rules available on
+    * `spark`. */
   def ensureRegistered(spark: SparkSession): Unit = {
     if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
       spark.experimental.extraStrategies =

@@ -252,14 +252,6 @@ object Manifest {
       ()
     }
 
-  /** [[optimize]] with [[Layout.zorderWrite]] as the rewrite: atomic
-    * re-clustering by the z-order of two numeric columns. */
-  def optimizeZorder(spark: SparkSession, root: String, cA: String,
-      cB: String, nFiles: Int): Long =
-    optimize(spark, root) { (files, out) =>
-      Layout.zorderWrite(spark.read.parquet(files: _*), cA, cB, nFiles, out)
-    }
-
   /** Recursively list the parquet files under `dir`, sorted. */
   private def listParquet(f: FileSystem, dir: Path): Seq[String] = {
     val it = f.listFiles(dir, true)

@@ -65,18 +65,5 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   // One session per JVM: suites share it, avoiding repeated startup cost.
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.TopK.ensureRegistered(s)
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(cpus = 4)
 }

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** A query that throws is a failure in both Bench and Verify: Bench leaves
-  * it out of the timings and names it on the headline, Verify reports it
-  * (its main then exits non-zero) while still dumping the others. */
+/** A query that throws is a failure in Bench, Verify and Explain: Bench
+  * leaves it out of the timings and names it on the headline, Verify and
+  * Explain report it (their mains then exit non-zero) while still
+  * writing the others. */
 class ToolFailureSpec extends SparkTestBase {
 
   private val ok: Bench.Query = (s, _) => s.range(3).toDF("x")
@@ -37,5 +38,18 @@ class ToolFailureSpec extends SparkTestBase {
     assert(hashes.head._2.startsWith("rows=3 "), hashes)
     assert(failed.map(_._1) == Seq("boom"), failed)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(out, "ok.txt")))
+  }
+
+  test("Explain writes every other plan and names each query that was " +
+      "unknown or threw") {
+    val out = java.nio.file.Files.createTempDirectory("graft-explain").toString
+    val throws: Bench.Query = (_, _) => throw new IllegalStateException("planted")
+    val failed = Explain.explain(spark,
+      Map("ok" -> ok, "boom" -> boom, "throws" -> throws),
+      Seq("ok", "nope", "throws", "boom"), sfDir, run = true, Some(out))
+    assert(failed == Seq("nope", "throws", "boom"))
+    val plan = java.nio.file.Files.readString(java.nio.file.Paths.get(out, "ok.txt"))
+    assert(plan.contains("Physical Plan"), plan)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "throws.txt")))
   }
 }
