@@ -17,7 +17,9 @@ BENCHMARK.json) and whether the median gain exceeds the base's
 interquartile range. It also prints each side's median peak of the
 old-generation heap pool (`heap_pool_peak_mb["PS Old Gen"]` in the run
 receipt's stamp), so a memory change shows its mechanism next to
-`peak_rss_mb`. Neither checkout's `graftbench/` nor
+`peak_rss_mb`, and, per op kind in the receipts' `ops`, each side's
+median of the per-run medians with the pairs head won, so a change in
+`op_p50_s` or `op_tail_s` names the op that moved. Neither checkout's `graftbench/` nor
 `BENCHMARK.json` is modified; `--out FILE` also writes every run's
 metrics as JSON.
 """
@@ -74,8 +76,19 @@ def run(checkout, spec, workload, seed, trace):
     receipt = os.path.join(checkout, ".bench_build", "receipts",
                            "%s-seed%d-trace%d.json" % (workload, seed, trace))
     with open(receipt) as f:
-        res["stamp"] = json.load(f)["stamp"]
+        rec = json.load(f)
+    res["stamp"] = rec["stamp"]
+    res["ops"] = rec.get("ops", [])
     return res
+
+
+def op_medians(res):
+    """Median seconds per op kind over one run's timed pass (pass 0), successful ops only."""
+    by_kind = {}
+    for _, pass_, kind, seconds, ok in res.get("ops", []):
+        if pass_ == 0 and ok:
+            by_kind.setdefault(kind, []).append(seconds)
+    return {k: statistics.median(v) for k, v in by_kind.items()}
 
 
 def quartiles(xs):
@@ -112,6 +125,19 @@ def report(workload, metrics, runs):
         print("%-38s %9.4g MB (base) %9.4g MB (head), median of the receipts' stamps"
               % ("heap_pool_peak_mb[%s]" % OLD_GEN, statistics.median(old_gen[0]),
                  statistics.median(old_gen[1])))
+    per_op = [(op_medians(b), op_medians(h)) for b, h in runs if b and h]
+    kinds = sorted({k for b, h in per_op for k in b if k in h})
+    if kinds:
+        print("%-38s %26s %26s %8s %6s" % ("op kind (s, median of run medians)", "base median [q1, q3]",
+                                           "head median [q1, q3]", "change", "won"))
+    for kind in kinds:
+        pairs = [(b[kind], h[kind]) for b, h in per_op if kind in b and kind in h]
+        bq1, bmed, bq3 = quartiles([p[0] for p in pairs])
+        hq1, hmed, hq3 = quartiles([p[1] for p in pairs])
+        won = sum(1 for b, h in pairs if h < b)
+        change = (hmed - bmed) / bmed * 100 if bmed else 0.0
+        print("%-38s %9.4g [%6.4g, %6.4g] %9.4g [%6.4g, %6.4g] %+7.1f%% %2d/%-3d"
+              % (kind, bmed, bq1, bq3, hmed, hq1, hq3, change, won, len(pairs)))
     failed = sum(1 for b, h in runs if not b or not h or b.get("failed") or h.get("failed"))
     if failed:
         print("pairs with a failed or missing run: %d" % failed)

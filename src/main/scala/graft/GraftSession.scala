@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   *    job/stage/task state otherwise grows across a long single-JVM
   *    sweep and taxes every later job (measured 2-3× slower in-sweep
   *    than focused on the parity gates);
-  *  - a per-JVM temp warehouse dir (only [[graft.sources.Bucketed]]
-  *    writes there);
+  *  - a per-JVM temp warehouse dir, deleted at exit (only
+  *    [[graft.sources.Bucketed]] writes there);
   *  - the TopK strategy and rewrite rules registered up front.
   */
 object GraftSession {
@@ -24,9 +24,17 @@ object GraftSession {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   private lazy val warehouseDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    d.toFile.deleteOnExit()
+    val d = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    // removed with its tables at exit (`deleteOnExit` only removes an
+    // empty directory, and bucketed tables make it non-empty)
+    sys.addShutdownHook(deleteTree(d))
     d.toString
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles).foreach(_.foreach(deleteTree))
+    f.delete()
   }
 
   def local(cpus: Int): SparkSession = {

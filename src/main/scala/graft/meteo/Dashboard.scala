@@ -3,6 +3,7 @@ package graft.meteo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.functions.Exact._
 
 /** The analytics surface of the reference's Streamlit dashboard
@@ -51,8 +52,8 @@ object Dashboard {
         .as("r"))
       .select(
         col("r.metric").as("metric"), col("r.n").as("n"),
-        round(col("r._s") / col("r.n"), 6).as("mean"),
-        round(sqrt((col("r._ss") - col("r._s") * col("r._s") / col("r.n")) /
+        Exact.round(col("r._s") / col("r.n"), 6).as("mean"),
+        Exact.round(sqrt((col("r._ss") - col("r._s") * col("r._s") / col("r.n")) /
           (col("r.n") - 1)), 6).as("std"),
         col("r.min_v").as("min_v"), col("r.max_v").as("max_v"))
       .orderBy("metric")

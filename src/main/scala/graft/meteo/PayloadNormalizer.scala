@@ -3,6 +3,8 @@ package graft.meteo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Normalizes raw open-meteo payloads into observation rows.
   *
   * The reference does this row-at-a-time in Python
@@ -61,8 +63,8 @@ object PayloadNormalizer {
         posexplode(col("_p.hourly.time")): _*)
       .select(
         passthrough.map(col) ++ Seq(
-          round(col("_p.latitude"), 1).as("latitude"),
-          round(col("_p.longitude"), 1).as("longitude"),
+          Exact.round(col("_p.latitude"), 1).as("latitude"),
+          Exact.round(col("_p.longitude"), 1).as("longitude"),
           to_timestamp(col("col"), "yyyy-MM-dd'T'HH:mm").as("timestamp")) ++
           metricMap.map { case (raw, out) =>
             element_at(col(s"_p.hourly.$raw"), col("pos") + 1).as(out)

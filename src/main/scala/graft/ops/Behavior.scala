@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Behavioral/event analytics: cohort retention and ordered funnels.
   * The product-analytics layer the reference's dashboard queries
   * (dashboard/streamlit_app.py:54-91 — counts + recency) grow into.
@@ -54,7 +56,7 @@ object Behavior {
     cells.join(broadcast(sizes), "cohort_week")
       .select(col("cohort_week"), col("week_offset"), col("n_active"),
         col("cohort_size"),
-        round(col("n_active") / col("cohort_size").cast("double"), 6)
+        Exact.round(col("n_active") / col("cohort_size").cast("double"), 6)
           .as("retention"))
   }
 
@@ -343,11 +345,11 @@ object Behavior {
       .reduce(_.unionByName(_))
     val w = Window.orderBy("stage") // |steps|-row table — presentation window
     n.select(col("stage"), col("step"), col("n_users"),
-        round(col("n_users") /
+        Exact.round(col("n_users") /
           first(col("n_users")).over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
             .cast("double"), 6).as("conv_overall"),
-        round(col("n_users") /
+        Exact.round(col("n_users") /
           coalesce(lag(col("n_users"), 1).over(w), col("n_users"))
             .cast("double"), 6).as("conv_step"))
   }
@@ -428,7 +430,7 @@ object Behavior {
     def quart(r: String): Column =
       expr(s"($r - 1) * 4 div __n + 1")
     ranked.select(col("custkey"), col("r_days"), col("n_orders"),
-        round(col("monetary").cast("double"), 2).as("monetary"),
+        Exact.round(col("monetary").cast("double"), 2).as("monetary"),
         quart("__rr").as("r_q"), quart("__rf").as("f_q"),
         quart("__rm").as("m_q"))
       .withColumn("segment", concat(col("r_q").cast("string"),
@@ -485,13 +487,13 @@ object Behavior {
         sum(col("revenue")).cast(DecimalType(28, 2)).as("revenue"),
         max(col("__cum")).cast(DecimalType(28, 2)).as("__cumEnd"),
         max(col("__tot").cast(DecimalType(28, 2))).as("__tot"))
-      .withColumn("cum_share", round(
+      .withColumn("cum_share", Exact.round(
         col("__cumEnd").cast("double") / col("__tot").cast("double"), 6))
       // revenue stays exact decimal through rank + running sum + band
       // aggregate; the OUTPUT edge is a double (SURVEY §5 — scaled value
       // « 2^53, cast correctly rounded and cross-engine bit-identical)
       .select(col("band"), col("n_cust"),
-        round(col("revenue").cast("double"), 2).as("revenue"),
+        Exact.round(col("revenue").cast("double"), 2).as("revenue"),
         col("cum_share"))
       .orderBy("band")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.functions.Hashing._
 import graft.functions.VectorOps
 
@@ -82,7 +83,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("g") > 1, 1L).otherwise(0L)).as("n_dup_chunks"))
       .withColumn("dup_chunk_frac",
-        round(col("n_dup_chunks") / col("n_chunks").cast("double"), 6))
+        Exact.round(col("n_dup_chunks") / col("n_chunks").cast("double"), 6))
   }
 
   /** Content-defined chunking (the Gear/FastCDC idea at token
@@ -131,7 +132,7 @@ object Dedup {
         max(col("clen")).as("max_chunk_len"),
         sum(when(col("nd") > 1, 1L).otherwise(0L)).as("n_shared_chunks"))
       .withColumn("shared_frac",
-        round(col("n_shared_chunks") / col("n_chunks").cast("double"), 6))
+        Exact.round(col("n_shared_chunks") / col("n_chunks").cast("double"), 6))
   }
 
   /** Distinct 3-shingle sets per doc, the shared input of the text
@@ -154,7 +155,7 @@ object Dedup {
       .join(sh.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(inter / (size(col("sa")) + size(col("sb")) - inter).cast("double"), 6)
+        Exact.round(inter / (size(col("sa")) + size(col("sb")) - inter).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
@@ -180,7 +181,7 @@ object Dedup {
       .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(col("inter") / (col("na") + col("nb") - col("inter")).cast("double"), 6)
+        Exact.round(col("inter") / (col("na") + col("nb") - col("inter")).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("id_a", "id_b")
@@ -250,7 +251,7 @@ object Dedup {
         col("n").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"), inter.as("i"), col("na"), col("nb"))
       .select(col("id_a"), col("id_b"),
-        round(col("i") / (col("na") + col("nb") - col("i")).cast("double"), 6)
+        Exact.round(col("i") / (col("na") + col("nb") - col("i")).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= t)
       .orderBy("id_a", "id_b")
@@ -282,8 +283,8 @@ object Dedup {
       .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
       .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(col("inter") / col("na").cast("double"), 6).as("cont_a"),
-        round(col("inter") / col("nb").cast("double"), 6).as("cont_b"))
+        Exact.round(col("inter") / col("na").cast("double"), 6).as("cont_a"),
+        Exact.round(col("inter") / col("nb").cast("double"), 6).as("cont_b"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
       .orderBy("id_a", "id_b")
   }
@@ -322,7 +323,7 @@ object Dedup {
     val (pairs, working) = cappedPairIntersections(docs, idCol, textCol, dfCap, cache)
     val result = pairs
       .select(col("id_a"), col("id_b"),
-        round(col("inter") / (col("na") + col("nb") - col("inter")).cast("double"), 6)
+        Exact.round(col("inter") / (col("na") + col("nb") - col("inter")).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("id_a", "id_b")
@@ -348,8 +349,8 @@ object Dedup {
     val (pairs, working) = cappedPairIntersections(docs, idCol, textCol, dfCap, cache)
     val result = pairs
       .select(col("id_a"), col("id_b"),
-        round(col("inter") / col("na").cast("double"), 6).as("cont_a"),
-        round(col("inter") / col("nb").cast("double"), 6).as("cont_b"))
+        Exact.round(col("inter") / col("na").cast("double"), 6).as("cont_a"),
+        Exact.round(col("inter") / col("nb").cast("double"), 6).as("cont_b"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
       .orderBy("id_a", "id_b")
     if (cache) materializeThenRelease(result, working) else result
@@ -568,7 +569,7 @@ object Dedup {
       .join(sh.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
       .join(sh.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
       .select(col("ex"), col("ls"),
-        (round(inter / (size(col("sa")) + size(col("sb")) - inter)
+        (Exact.round(inter / (size(col("sa")) + size(col("sb")) - inter)
           .cast("double"), 6) >= threshold).as("found"))
     val result = verified
       .agg(
@@ -580,10 +581,10 @@ object Dedup {
           lit(0L)).as("n_found"))
       .withColumn("recall",
         when(col("n_true") > 0,
-          round(col("n_found") / col("n_true").cast("double"), 6)))
+          Exact.round(col("n_found") / col("n_true").cast("double"), 6)))
       .withColumn("cand_precision",
         when(col("n_lsh_candidates") > 0,
-          round(col("n_found") / col("n_lsh_candidates").cast("double"), 6)))
+          Exact.round(col("n_found") / col("n_lsh_candidates").cast("double"), 6)))
     materializeThenRelease(result, Seq(sh))
   }
 
@@ -682,7 +683,7 @@ object Dedup {
           col("mh").as("mha")), "id_a")
         .join(both.select(col("doc_id").as("id_b"), col("s").as("sb"),
           col("mh").as("mhb")), "id_b")
-        .select((round(inter / (size(col("sa")) + size(col("sb")) - inter)
+        .select((Exact.round(inter / (size(col("sa")) + size(col("sb")) - inter)
           .cast("double"), 6) >= threshold).as("found") +:
           sortedB.map(b => inB(b).as(s"in_$b")): _*)
       val flagAggs = sortedB.flatMap(b => Seq(
@@ -714,10 +715,10 @@ object Dedup {
       .select(col("bands"), col("rows_per_band"), col("n_true"),
         col("n_candidates"), col("n_found"),
         when(col("n_true") > 0,
-          round(col("n_found") / col("n_true").cast("double"), 6))
+          Exact.round(col("n_found") / col("n_true").cast("double"), 6))
           .as("recall"),
         when(col("n_candidates") > 0,
-          round(col("n_found") / col("n_candidates").cast("double"), 6))
+          Exact.round(col("n_found") / col("n_candidates").cast("double"), 6))
           .as("cand_precision"))
       .orderBy("bands")
     materializeThenRelease(result, Seq(both))
@@ -890,7 +891,7 @@ object Dedup {
         col("n").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"), inter.as("i"), col("na"), col("nb"))
       .select(col("id_a"), col("id_b"),
-        round(col("i") / (col("na") + col("nb") - col("i")).cast("double"), 6)
+        Exact.round(col("i") / (col("na") + col("nb") - col("i")).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("id_a", "id_b")
@@ -1068,7 +1069,7 @@ object Dedup {
       .withColumn("nrm", VectorOps.norm(col("e")))
     m.as("a").join(m.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        round(VectorOps.cosineWithNorms(
+        Exact.round(VectorOps.cosineWithNorms(
           col("a.e"), col("b.e"), col("a.nrm"), col("b.nrm")), 6).as("cosine"))
       .filter(col("cosine") >= threshold)
       .orderBy("id_a", "id_b")
@@ -1102,12 +1103,12 @@ object Dedup {
         col("nrm").as("cnrm"))
     val scored = assigned.join(broadcast(cN), "cid")
       .select(col("vec_id"), col("cid"), col("e"), col("nrm"),
-        round(VectorOps.cosineWithNorms(col("e"), col("ce"),
+        Exact.round(VectorOps.cosineWithNorms(col("e"), col("ce"),
           col("nrm"), col("cnrm")), 6).as("cent_cos"))
     val dropped = scored.as("a")
       .join(scored.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-      .filter(round(VectorOps.cosineWithNorms(col("a.e"), col("b.e"),
+      .filter(Exact.round(VectorOps.cosineWithNorms(col("a.e"), col("b.e"),
         col("a.nrm"), col("b.nrm")), 6) >= threshold)
       .select(
         when(col("a.cent_cos") > col("b.cent_cos"), col("a.vec_id"))

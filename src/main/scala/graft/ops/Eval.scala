@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
+
 /** Model-evaluation aggregates for training pipelines: once the engine
   * produces splits, folds, and curated corpora, the next thing a data
   * team computes on 100 TB of scored rows is "how good is the model" —
@@ -156,9 +158,9 @@ object Eval {
       // unrounded cast of a scale-6 sum can drift a ulp between
       // engines (the ts_autocorr lesson). mean_score rounds to 6 dp
       // AFTER its decimal→double cast for the same reason.
-      .withColumn("mean_score", round(
+      .withColumn("mean_score", Exact.round(
         col("score_sum").cast("double") / col("n").cast("double"), 6))
-      .withColumn("score_sum", round(col("score_sum").cast("double"), 6))
+      .withColumn("score_sum", Exact.round(col("score_sum").cast("double"), 6))
       .withColumn("pos_rate",
         col("n_pos").cast("double") / col("n").cast("double"))
       .orderBy("bin")
@@ -217,13 +219,13 @@ object Eval {
       .select(col("bin"), col("cut_rank"), col("tp"),
         (col("cut") - col("tp")).cast("long").as("fp"),
         (col("n_pos") - col("tp")).cast("long").as("fn"),
-        round(p, 6).as("prec"),
+        Exact.round(p, 6).as("prec"),
         // zero-positive corpus: recall's 0/0 pinned to 0 (the
         // averagePrecision convention), keeping the curve deterministic
         when(col("n_pos") === 0, lit(0.0))
-          .otherwise(round(r, 6)).as("recall"),
+          .otherwise(Exact.round(r, 6)).as("recall"),
         when(col("tp") === 0, lit(0.0))
-          .otherwise(round(lit(2) * p * r / (p + r), 6)).as("f1"))
+          .otherwise(Exact.round(lit(2) * p * r / (p + r), 6)).as("f1"))
       .orderBy("bin")
   }
 
@@ -237,7 +239,7 @@ object Eval {
     val total = scored.agg(count(lit(1)).as("n"))
     val pos = ranked.filter(col("y") === 1).agg(
       count(lit(1)).as("n_pos"),
-      sum(round(col("cum").cast("double") / col("rank"), 6)
+      sum(Exact.round(col("cum").cast("double") / col("rank"), 6)
         .cast(DecimalType(18, 6))).as("s"))
     // zero positives: AP is conventionally 0 (nothing retrievable was
     // ranked) — a clean shard with no flagged rows is a legitimate
@@ -245,7 +247,7 @@ object Eval {
     pos.crossJoin(broadcast(total))
       .select(col("n_pos").cast("long").as("n_pos"),
         col("n").cast("long").as("n"),
-        round(when(col("n_pos") === 0, lit(0.0))
+        Exact.round(when(col("n_pos") === 0, lit(0.0))
           .otherwise(col("s").cast("double") / col("n_pos")), 6)
           .as("avg_precision"))
   }
@@ -277,7 +279,7 @@ object Eval {
     val w = Window.partitionBy(queryCol)
       .orderBy(col(scoreCol).desc, col(neighborCol))
     def gain(r: Column): Column =
-      round(lit(1.0) / log2(r.cast("double") + lit(1.0)), 6)
+      Exact.round(lit(1.0) / log2(r.cast("double") + lit(1.0)), 6)
         .cast(DecimalType(18, 6))
     val exR = exact.select(col(queryCol), col(neighborCol), col(scoreCol))
       .withColumn("r", row_number().over(w))
@@ -293,10 +295,10 @@ object Eval {
     ideal.join(perQ, Seq(queryCol), "left")
       .select(col(queryCol), col("n_exact").cast("long").as("n_exact"),
         coalesce(col("n_hits"), lit(0L)).cast("long").as("n_hits"),
-        round(when(col("first_hit").isNull, lit(0.0))
+        Exact.round(when(col("first_hit").isNull, lit(0.0))
           .otherwise(lit(1.0) / col("first_hit").cast("double")), 6)
           .as("mrr"),
-        round(coalesce(col("dcg"), lit(0).cast(DecimalType(18, 6)))
+        Exact.round(coalesce(col("dcg"), lit(0).cast(DecimalType(18, 6)))
           .cast("double") / col("idcg").cast("double"), 6).as("ndcg"))
       .orderBy(queryCol)
   }
@@ -322,7 +324,7 @@ object Eval {
       .select(col(queryCol), col("n_exact"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"))
       .withColumn("recall",
-        round(col("n_hits") / col("n_exact").cast("double"), 6))
+        Exact.round(col("n_hits") / col("n_exact").cast("double"), 6))
       .orderBy(queryCol)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.Exact
+
 /** Ranking fusion for hybrid retrieval: a lexical ranker (BM25) and a
   * vector ranker (embedding cosine) disagree on scale and calibration,
   * so production search fuses them on RANKS, not scores — reciprocal
@@ -69,13 +71,13 @@ object Fusion {
     val zero = lit(0).cast(DecimalType(18, 6))
     val terms = lists.indices.map { i =>
       when(col(s"rank_$i").isNotNull,
-        round(lit(1.0) / (lit(k0) + col(s"rank_$i")), 6)
+        Exact.round(lit(1.0) / (lit(k0) + col(s"rank_$i")), 6)
           .cast(DecimalType(18, 6))).otherwise(zero)
     }
     wide.select(
       col(idCol) +:
         lists.indices.map(i => coalesce(col(s"rank_$i"), lit(0L))
           .as(s"rank_$i")) :+
-        round(terms.reduce(_ + _).cast("double"), 6).as("rrf"): _*)
+        Exact.round(terms.reduce(_ + _).cast("double"), 6).as("rrf"): _*)
   }
 }

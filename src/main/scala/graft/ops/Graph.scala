@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Graph analytics over event logs: transition-graph extraction and a
   * deterministic fixed-point PageRank.
   *
@@ -259,7 +261,7 @@ object Graph {
       .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .select(col("a"), col("b"), col("cn"),
-        round(col("cn") / (col("da") + col("db") - col("cn"))
+        Exact.round(col("cn") / (col("da") + col("db") - col("cn"))
           .cast("double"), 6).as("jaccard"))
   }
 

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Incrementally-maintained rollups: per-key aggregate STATE that merges
   * batch-by-batch without touching history.
   *
@@ -47,12 +49,12 @@ object IncrementalAgg {
     state.select(
       keys.map(col) ++ Seq(
         col("s_n").cast("long").as("n"),
-        round(col("s_sum").cast("double"), 6).as("total"),
-        round(col("s_sum").cast("double") / col("s_n"), 6).as("mean"),
+        Exact.round(col("s_sum").cast("double"), 6).as("total"),
+        Exact.round(col("s_sum").cast("double") / col("s_n"), 6).as("mean"),
         col("s_min").as("vmin"),
         col("s_max").as("vmax"),
         // population variance from the moment sums, exact until the edge
-        round((col("s_sumsq").cast("double") -
+        Exact.round((col("s_sumsq").cast("double") -
           col("s_sum").cast("double") * col("s_sum").cast("double") /
             col("s_n")) / col("s_n"), 6).as("var_pop")): _*)
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Robust per-group outlier detection: median / MAD (median absolute
   * deviation) z-score — the data-quality gate a meteo feed needs for
   * spike detection (a stuck sensor shifts the mean and stddev; it
@@ -53,8 +55,8 @@ object Outliers {
     d.join(broadcast(mad), key)
       .filter(col("dev") > lit(k) * col("mad"))
       .select(col(idCol), col(key), col(valCol),
-        round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"),
-        round(col("dev"), 6).as("dev"))
+        Exact.round(col("med"), 6).as("med"), Exact.round(col("mad"), 6).as("mad"),
+        Exact.round(col("dev"), 6).as("dev"))
   }
 
   // discrete median of a window-frame array: rank ceil(m/2) of the
@@ -94,7 +96,7 @@ object Outliers {
     withStats
       .filter(abs(col(valCol) - col("med")) > lit(k) * col("mad"))
       .select(col(idCol), col(key), col(valCol),
-        round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"))
+        Exact.round(col("med"), 6).as("med"), Exact.round(col("mad"), 6).as("mad"))
   }
 
   /** Bucket-parallel Hampel: the 100 TB form of [[hampel]]. Rows hash
@@ -147,7 +149,7 @@ object Outliers {
     withStats.filter(col("__own"))
       .filter(abs(col(valCol) - col("med")) > lit(k) * col("mad"))
       .select(col(idCol), col(key), col(valCol),
-        round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"))
+        Exact.round(col("med"), 6).as("med"), Exact.round(col("mad"), 6).as("mad"))
   }
 
   /** Rank-lane Hampel — EXACT at any density, no contract: rows get a
@@ -207,6 +209,6 @@ object Outliers {
     withStats.filter(col("__own"))
       .filter(abs(col(valCol) - col("med")) > lit(k) * col("mad"))
       .select(col(idCol), col(key), col(valCol),
-        round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"))
+        Exact.round(col("med"), 6).as("med"), Exact.round(col("mad"), 6).as("mad"))
   }
 }

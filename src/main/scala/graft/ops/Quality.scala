@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Declarative data-quality audits — the reference's per-payload
   * pydantic validation (`etl/models.py`) re-expressed as set-at-a-time
   * constraint checks a lake can afford to run on every refresh.
@@ -151,15 +153,15 @@ object Quality {
       .withColumn("p", col("n_ref") / col("t_ref"))
       .withColumn("q", col("n_cur") / col("t_cur"))
       .withColumn("tvd_t",
-        round(abs(col("p") - col("q")), 6).cast(DecimalType(18, 6)))
+        Exact.round(abs(col("p") - col("q")), 6).cast(DecimalType(18, 6)))
       .withColumn("chi_t",
-        round(when(col("q") > 0,
+        Exact.round(when(col("q") > 0,
             (col("p") - col("q")) * (col("p") - col("q")) / col("q"))
           .otherwise(lit(0.0)), 6).cast(DecimalType(18, 6)))
     terms.groupBy(col(key))
       .agg(max(col("t_ref")).as("n_ref"), max(col("t_cur")).as("n_cur"),
         count(lit(1)).as("n_buckets"),
-        round(sum(col("tvd_t")).cast("double") * 0.5, 6).as("tvd"),
-        round(sum(col("chi_t")).cast("double"), 6).as("chisq"))
+        Exact.round(sum(col("tvd_t")).cast("double") * 0.5, 6).as("tvd"),
+        Exact.round(sum(col("chi_t")).cast("double"), 6).as("chisq"))
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Exact
+
 /** Exact per-group interpolated quantiles (percentile_cont semantics)
   * by distributed rank-selection — the fact table is never sorted, and
   * (since round 5) NOTHING ever reaches the driver: the whole query is
@@ -266,7 +268,7 @@ object Quantiles {
         min(when(col("__t") === col("lo") + 2, x)).as("xhi"),
         min(col("frac")).as("f"))
       .select(key, col("p"),
-        round(col("xlo") + col("f") *
+        Exact.round(col("xlo") + col("f") *
           (coalesce(col("xhi"), col("xlo")) - col("xlo")), 6).as("quantile"))
   }
 }

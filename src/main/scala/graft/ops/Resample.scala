@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
+
 /** Time-series resampling: per-key regular-grid gap fill with linear
   * interpolation (the meteo lane's "hourly observation series with
   * holes" shape — reference stores raw per-timestamp rows, see
@@ -117,7 +119,7 @@ object Resample {
     // right semantic for money aggregates, the wrong one here.)
     val base = df
       .groupBy(col(key), date_trunc(unit, col(tsCol)).as("h"))
-      .agg(round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
+      .agg(Exact.round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
         .as("v"))
       .filter(col("v").isNotNull) // all-null cell = hole, not a grid anchor
     val grid = base.groupBy(col(key))
@@ -149,7 +151,7 @@ object Resample {
     withNeighbors
       .withColumn("v_filled",
         when(col("v").isNotNull, col("v"))
-          .otherwise(round(col("pv") + (col("nv") - col("pv")) * frac, 6)))
+          .otherwise(Exact.round(col("pv") + (col("nv") - col("pv")) * frac, 6)))
       .withColumn("src",
         when(col("v").isNotNull, lit("observed")).otherwise(lit("interpolated")))
       .select(col(key), col("h"), col("v_filled"), col("src"))
@@ -183,7 +185,7 @@ object Resample {
     require(lags >= 1 && lags <= 30, "lags must be in [1, 30]")
     val base = df
       .groupBy(col(key), date_trunc(unit, col(tsCol)).as("d"))
-      .agg(round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
+      .agg(Exact.round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
         .as("v"))
       .filter(col("v").isNotNull)
     val w = Window.partitionBy(key).orderBy("d")
@@ -225,19 +227,19 @@ object Resample {
     import graft.functions.Exact.dec
     val b = df
       .groupBy(col(key), date_trunc("hour", col(tsCol)).as("h"))
-      .agg(round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
+      .agg(Exact.round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
         .as("v"))
       .filter(col("v").isNotNull)
     val w = Window.partitionBy(key).orderBy("h").rowsBetween(-halfWin, halfWin)
     val t = b.withColumn("trend",
-      round(sum(dec(col("v"))).over(w).cast("double") /
+      Exact.round(sum(dec(col("v"))).over(w).cast("double") /
         count(lit(1)).over(w), 6))
     val d = t
       .withColumn("hod",
         expr(s"CAST(floor(unix_timestamp(h) / 3600) AS BIGINT) % $period"))
       .withColumn("__detr", dec(col("v")) - dec(col("trend")))
     val seas = d.groupBy(col(key), col("hod"))
-      .agg(round(sum(col("__detr")).cast("double") / count(lit(1)), 6)
+      .agg(Exact.round(sum(col("__detr")).cast("double") / count(lit(1)), 6)
         .as("seasonal"))
     d.join(broadcast(seas), Seq(key, "hod"))
       .select(col(key), col("h"), col("v"), col("trend"), col("seasonal"),
@@ -280,7 +282,7 @@ object Resample {
         expr(s"CAST(floor(unix_timestamp($tsCol) / $bucketSeconds) AS BIGINT)")
           .as("bucket"))
     val means = e.groupBy(col(key), col("bucket"))
-      .agg(round(sum(dec(col("v"))).cast("double") / count(lit(1)), 6)
+      .agg(Exact.round(sum(dec(col("v"))).cast("double") / count(lit(1)), 6)
         .as("my"))
     def centerX(b: Column): Column =
       (b.cast("double") + lit(0.5)) * lit(bucketUs.toDouble)
@@ -347,7 +349,7 @@ object Resample {
     withMed.join(broadcast(mad), key)
       .filter(abs(col("resid") - col("med")) > lit(k) * col("mad"))
       .select(col(key), col("h"), col("v"), col("resid"),
-        round(col("med"), 6).as("med"), round(col("mad"), 6).as("mad"))
+        Exact.round(col("med"), 6).as("med"), Exact.round(col("mad"), 6).as("mad"))
   }
 
   /** Per-key lag-k autocorrelation of the hourly series, k = 1..maxLag —
@@ -375,14 +377,14 @@ object Resample {
     require(maxLag >= 1, "need at least lag 1")
     val grid = df
       .groupBy(col(key), date_trunc("hour", col(tsCol)).as("h"))
-      .agg(round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
+      .agg(Exact.round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
         .as("v"))
       .filter(col("v").isNotNull)
       .withColumn("hi",
         expr("CAST(floor(unix_timestamp(h) / 3600) AS BIGINT)"))
     val stats = grid.groupBy(key)
       .agg(count(lit(1)).cast("long").as("__n"),
-        round(sum(dec(col("v"))).cast("double") / count(lit(1)), 6)
+        Exact.round(sum(dec(col("v"))).cast("double") / count(lit(1)), 6)
           .as("__m"))
     // pin the centered term to (18,6): a (19,6)×(19,6) product would
     // blow Spark's 38-digit precision cap and silently round, and the
@@ -407,9 +409,9 @@ object Resample {
     // published values (and the acf division runs on the pinned values)
     pairs.groupBy(col(key), col("lag"))
       .agg(count(lit(1)).cast("long").as("n_pairs"),
-        round(sum(col("__c") * col("__c2")).cast("double"), 6).as("num"))
+        Exact.round(sum(col("__c") * col("__c2")).cast("double"), 6).as("num"))
       .join(broadcast(den), Seq(key))
-      .withColumn("den", round(col("__den").cast("double"), 6))
+      .withColumn("den", Exact.round(col("__den").cast("double"), 6))
       .withColumn("acf", col("num") / col("den"))
       .select(col(key), col("lag"), col("n_pairs"), col("num"),
         col("den"), col("acf"))
@@ -433,13 +435,13 @@ object Resample {
     import graft.functions.Exact.dec
     val grid = df
       .groupBy(col(key), date_trunc("hour", col(tsCol)).as("h"))
-      .agg(round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
+      .agg(Exact.round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
         .as("v"))
       .filter(col("v").isNotNull)
       .withColumn("hi",
         expr("CAST(floor(unix_timestamp(h) / 3600) AS BIGINT)"))
     val stats = grid.groupBy(key)
-      .agg(round(sum(dec(col("v"))).cast("double") / count(lit(1)), 6)
+      .agg(Exact.round(sum(dec(col("v"))).cast("double") / count(lit(1)), 6)
         .as("__m"))
     val w = Window.partitionBy(key).orderBy("hi")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -479,7 +481,7 @@ object Resample {
     import graft.functions.Exact.dec
     val grid = events.filter(col(valCol).isNotNull)
       .groupBy(col(key), to_date(col(tsCol)).as("d"))
-      .agg(round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
+      .agg(Exact.round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
         .as("m"))
     val a = grid.select(col(key).as("type_a"), col("d"), col("m").as("x"))
     val b = grid.select(col(key).as("type_b"), col("d"), col("m").as("y"))
@@ -496,7 +498,7 @@ object Resample {
     val v2 = n * col("syy") - col("sy") * col("sy")
     stats
       .withColumn("r", when(v1 > 0 && v2 > 0,
-        round((n * col("sxy") - col("sx") * col("sy")) / sqrt(v1 * v2), 6)))
+        Exact.round((n * col("sxy") - col("sx") * col("sy")) / sqrt(v1 * v2), 6)))
       .select(col("type_a"), col("type_b"), col("n_days"), col("r"))
   }
 
@@ -521,7 +523,7 @@ object Resample {
     import graft.functions.Exact.dec
     val grid = events.filter(col(valCol).isNotNull)
       .groupBy(col(key), to_date(col(tsCol)).as("d"))
-      .agg(round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
+      .agg(Exact.round(sum(dec(col(valCol))).cast("double") / count(col(valCol)), 6)
         .as("m"))
       .withColumn("di", datediff(col("d"), lit("1970-01-01")).cast("long"))
     val a = grid.select(col(key), col("di").as("d1"), col("m").as("m1"))
@@ -545,7 +547,7 @@ object Resample {
       .withColumn("nd", count(lit(1)).over(wKey))
       .filter(col("rn") === expr("(nd + 1) div 2"))
       .select(col(key), col("nd").as("n_days"), col("n_pairs"),
-        round(col("slope"), 6).as("slope"),
-        round(col("res"), 6).as("intercept"))
+        Exact.round(col("slope"), 6).as("slope"),
+        Exact.round(col("res"), 6).as("intercept"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.functions.Hashing
 import graft.functions.VectorOps._
 
@@ -54,7 +55,7 @@ object Similarity {
       .orderBy("query_id", "neighbor_id")
 
   private def score(q: DataFrame, c: DataFrame): Column =
-    round(cosineWithNorms(col("q.e"), col("c.e"), col("q.nrm"), col("c.nrm")), 6)
+    Exact.round(cosineWithNorms(col("q.e"), col("c.e"), col("q.nrm"), col("c.nrm")), 6)
 
   /** Raw cosine scores of every corpus vector against every query —
     * the scored relation behind [[bruteForceTopK]], exposed for
@@ -150,7 +151,7 @@ object Similarity {
       .join(c.select(col("vec_id").as("nb"), col("e").as("eb"),
         col("nrm").as("nrb")), "nb")
       .select(col("query_id"), col("na"), col("nb"),
-        round(graft.functions.VectorOps.cosineWithNorms(
+        Exact.round(graft.functions.VectorOps.cosineWithNorms(
           col("ea"), col("eb"), col("nra"), col("nrb")), 6).as("sim"))
       .localCheckpoint(false)
     val byScore = Window.partitionBy(col("query_id"))
@@ -222,7 +223,7 @@ object Similarity {
         "query_id")
       .join(c.select(col("vec_id"), col("e").as("ce"), col("nrm").as("cn")), "vec_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6).as("cosine"))
+        Exact.round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6).as("cosine"))
     rankTopK(scored, k)
   }
 
@@ -281,7 +282,7 @@ object Similarity {
       .join(c.select(col("vec_id"), col("e").as("ce"), col("nrm").as("cn")),
         "vec_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
           .as("cosine"))
     val edges = rankTopK(scored, k)
       .localCheckpoint(true) // consumed by both sides of the self-join
@@ -356,7 +357,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id") &&
         col("q_lab") =!= col("c_lab"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
           .as("cosine"))
     val neg = graft.plans.TopK.perKeyTwoPhase(scored, Seq("query_id"),
         Seq(col("cosine").desc, col("neighbor_id")), 1)
@@ -396,7 +397,7 @@ object Similarity {
     probes.join(assign, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
           .as("cosine"))
       .filter(col("cosine") >= tau)
   }
@@ -425,7 +426,7 @@ object Similarity {
         col("nrm").as("qn"))
     val exact = cand.join(c, "neighbor_id").join(broadcast(q), "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
           .as("cosine"))
     rankTopK(exact, k)
   }
@@ -714,7 +715,7 @@ object Similarity {
     // L2 argmin: |v|^2 is constant per (vec,s), so minimize |c|^2 - 2<v,c>
     corpusSub.join(broadcast(cwSub), Seq("s"))
       .select(col("vec_id"), col("s"), col("cid"),
-        round(col("sqc") - lit(2.0) * dot(col("vs"), col("cs")), 6).as("d"))
+        Exact.round(col("sqc") - lit(2.0) * dot(col("vs"), col("cs")), 6).as("d"))
       .groupBy("vec_id", "s")
       .agg(min(struct(col("d"), col("cid"))).getField("cid").as("cid"))
   }
@@ -800,7 +801,7 @@ object Similarity {
     val sdot = (0 until m).map(s => col(s"dq$s")).reduce(_ + _)
     val ssq = (0 until m).map(s => col(s"sqc$s")).reduce(_ + _)
     terms.select(col("query_id"), col("vec_id").as("neighbor_id"),
-      round(sdot / (col("qn") * sqrt(ssq)), 6).as("cosine"))
+      Exact.round(sdot / (col("qn") * sqrt(ssq)), 6).as("cosine"))
   }
 
   /** Trained PQ codebook: per-subspace Lloyd's k-means (m INDEPENDENT
@@ -1351,7 +1352,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("qn"), col("qdotc"), col("cnsq"), partials.as("p"))
       .select(col("query_id"), col("neighbor_id"),
-        round((col("qdotc") + col("p").getItem(0)) /
+        Exact.round((col("qdotc") + col("p").getItem(0)) /
           (col("qn") * sqrt(col("cnsq") + lit(2.0) * col("p").getItem(1) +
             col("p").getItem(2))), 6)
           .as("cosine"))
@@ -1408,7 +1409,7 @@ object Similarity {
     val scored = c.join(broadcast(q),
         col("q_id") =!= col("c_id") && col("q_lab") =!= col("c_lab"))
       .select(col("q_id").as("query_id"), col("c_id").as("neighbor_id"),
-        round(cosineWithNorms(col("q_e"), col("c_e"), col("q_n"), col("c_n")), 6)
+        Exact.round(cosineWithNorms(col("q_e"), col("c_e"), col("q_n"), col("c_n")), 6)
           .as("cosine"))
     rankTopK(scored, k)
   }
@@ -1447,7 +1448,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id") &&
         col("q_lab") =!= col("c_lab"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
           .as("cosine"))
     rankTopK(scored, k)
   }
@@ -1493,11 +1494,14 @@ object Similarity {
           col(idCol).as(s"${p}vec"), e.as(s"${p}e"))
         .withColumn(s"${p}n", norm(col(s"${p}e")))
     }
-    val q = prep(queries, "q_").repartition(col("q_doc"))
+    // explicit count, keyed on the vector: `repartition(q_doc)` let AQE
+    // coalesce the small query side to ONE task, and the cross join then
+    // ran single-threaded, twice (the caller's range sort sampled it)
+    val q = prep(queries, "q_").repartition(shufflePartitions(queries), col("q_vec"))
     val c = prep(corpus, "c_")
     q.crossJoin(c)
       .select(col("q_doc"), col("c_doc"), col("q_vec"),
-        round(cosineWithNorms(col("q_e"), col("c_e"), col("q_n"), col("c_n")), 6)
+        Exact.round(cosineWithNorms(col("q_e"), col("c_e"), col("q_n"), col("c_n")), 6)
           .as("cos"))
       .groupBy("q_doc", "c_doc", "q_vec")
       .agg(max(col("cos")).as("m"))
@@ -1534,7 +1538,7 @@ object Similarity {
     val partials = qA.join(cA, "cid")
       .join(cDoc, "c_vec").join(qDoc, "q_vec")
       .select(col("q_doc"), col("c_doc"), col("q_vec"),
-        round(cosineWithNorms(col("q_e"), col("c_e"), col("q_n"), col("c_n")), 6)
+        Exact.round(cosineWithNorms(col("q_e"), col("c_e"), col("q_n"), col("c_n")), 6)
           .as("cos"))
       .groupBy("q_doc", "c_doc", "q_vec")
       .agg(max(col("cos")).as("m"))
@@ -1548,7 +1552,7 @@ object Similarity {
       .groupBy("q_doc", "c_doc")
       .agg(sum(col("m").cast("decimal(18,6)")).as("s"))
       .select(col("q_doc"), col("c_doc"),
-        round(col("s").cast("double"), 6).as("maxsim"))
+        Exact.round(col("s").cast("double"), 6).as("maxsim"))
 
   /** LSH top-k: queries only score corpus vectors in nearby buckets.
     * `nProbe` is the probing depth: the query searches every bucket
@@ -1574,7 +1578,7 @@ object Similarity {
     val scored = c.as("c").join(broadcast(q), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("e"), col("qn"), col("nrm")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("e"), col("qn"), col("nrm")), 6)
           .as("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
     rankTopK(scored, k)
@@ -1667,7 +1671,7 @@ object Similarity {
         col("nrm").as("qn")), "query_id")
       .join(recon, "vec_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("re"), col("qn"), col("rnrm")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("re"), col("qn"), col("rnrm")), 6)
           .as("cosine"))
     rankTopK(scored, k)
   }

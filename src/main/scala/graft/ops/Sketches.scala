@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 
 /** Approximate (sketch-based) aggregates: the constant-memory summary
   * path for lake-scale dashboard metrics.
@@ -247,7 +248,7 @@ object Sketches {
       .withColumn("s_fp", col("s_present") +
         (lit(m.toLong) - col("n_hit")) *
           pow(lit(2.0), col("r_max")).cast("long"))
-      .withColumn("est_raw", round(
+      .withColumn("est_raw", Exact.round(
         lit(alphaM2) * pow(lit(2.0), col("r_max")) / col("s_fp"), 3))
       .withColumn("use_linear",
         col("n_hit") < m.toLong && col("est_raw") <= lit(2.5 * m))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.functions.Hashing.hash60
 
 /** Deterministic dataset splitting and sampling for training pipelines.
@@ -304,7 +305,7 @@ object Splits {
     val wOff = Window.orderBy(sourceCol)
       .rowsBetween(Window.unboundedPreceding, -1)
     val takes = counts.crossJoin(broadcast(total))
-      .withColumn("share", round(weightOfCount(col("n")) / col("wtot"), 6))
+      .withColumn("share", Exact.round(weightOfCount(col("n")) / col("wtot"), 6))
       .withColumn("take",
         least(col("n"), floor(lit(budget) * col("share")).cast("long")))
       .withColumn("r0", coalesce(sum(col("n")).over(wOff), lit(0L)) + 1)

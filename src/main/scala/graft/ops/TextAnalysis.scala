@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.functions.Hashing._
 
 /** Text-analysis operators for training-data curation: language ID,
@@ -60,10 +61,10 @@ object TextAnalysis {
         .cast("long").as("sum_tok"))
       .select(
         col(idCol), col("n_chars"), col("n_words"),
-        round(col("n_punct") / col("n_chars").cast("double"), 6).as("punct_ratio"),
-        round(col("n_stop") / col("n_words").cast("double"), 6).as("stop_ratio"),
-        round(col("sum_tok") / col("n_words").cast("double"), 6).as("mean_word_len"),
-        round(
+        Exact.round(col("n_punct") / col("n_chars").cast("double"), 6).as("punct_ratio"),
+        Exact.round(col("n_stop") / col("n_words").cast("double"), 6).as("stop_ratio"),
+        Exact.round(col("sum_tok") / col("n_words").cast("double"), 6).as("mean_word_len"),
+        Exact.round(
           lit(0.4) * least(col("n_words") / 100.0, lit(1.0)) +
           lit(0.3) * (lit(1.0) - col("n_punct") / col("n_chars").cast("double")) +
           lit(0.3) * least(lit(5.0) * col("n_stop") / col("n_words").cast("double"), lit(1.0)),
@@ -79,7 +80,7 @@ object TextAnalysis {
       size(tokens(col(textCol))).cast("long").as("ws_tokens"),
       regexp_count(col(textCol), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"))
         .cast("long").as("re_tokens"),
-      round(length(col(textCol)) / size(tokens(col(textCol))).cast("double"), 6)
+      Exact.round(length(col(textCol)) / size(tokens(col(textCol))).cast("double"), 6)
         .as("chars_per_token"))
 
   /** Repetition signals (Gopher-style quality rules): fraction of
@@ -123,10 +124,10 @@ object TextAnalysis {
       .select(
         col(idCol),
         col("n_words").cast("long").as("n_words"),
-        round(col("n_distinct") / col("n_words").cast("double"), 6).as("distinct_frac"),
-        round(col("top_c") / col("n_words").cast("double"), 6).as("top_token_frac"),
+        Exact.round(col("n_distinct") / col("n_words").cast("double"), 6).as("distinct_frac"),
+        Exact.round(col("top_c") / col("n_words").cast("double"), 6).as("top_token_frac"),
         coalesce(
-          round(lit(1.0) - col("n_distinct_bg") / col("n_bigrams").cast("double"), 6),
+          Exact.round(lit(1.0) - col("n_distinct_bg") / col("n_bigrams").cast("double"), 6),
           lit(0.0)).as("dup_bigram_frac"))
   }
 
@@ -156,7 +157,7 @@ object TextAnalysis {
         count(lit(1)).cast("long").as("n_grams"),
         coalesce(sum("hit"), lit(0L)).cast("long").as("n_hits"))
       .withColumn("contamination",
-        round(col("n_hits") / col("n_grams").cast("double"), 6))
+        Exact.round(col("n_hits") / col("n_grams").cast("double"), 6))
   }
 
   /** Top-k characteristic terms per document by TF-IDF, with a RATIONAL
@@ -219,7 +220,7 @@ object TextAnalysis {
         sum(col("bucket") * col("c")).cast("long").as("sum_surprisal"),
         max(col("bucket")).as("max_surprisal"))
       .withColumn("mean_surprisal",
-        round(col("sum_surprisal") / col("n_tokens").cast("double"), 6))
+        Exact.round(col("sum_surprisal") / col("n_tokens").cast("double"), 6))
   }
 
   /** Bigram conditional surprisal (the LM-quality step above
@@ -263,7 +264,7 @@ object TextAnalysis {
         sum(col("bucket") * col("c")).cast("long").as("sum_surprisal"),
         max(col("bucket")).as("max_surprisal"))
       .withColumn("mean_surprisal",
-        round(col("sum_surprisal") / col("n_bigrams").cast("double"), 6))
+        Exact.round(col("sum_surprisal") / col("n_bigrams").cast("double"), 6))
   }
 
   /** Interpolated Kneser–Ney bigram probabilities (Kneser & Ney 1995,
@@ -322,7 +323,7 @@ object TextAnalysis {
       // p_kn evaluates in DOUBLE space (counts enter as doubles, the
       // same left-associated expression both engines) so it stays
       // correct where the integer receipts would overflow
-      .withColumn("p_kn", round(
+      .withColumn("p_kn", Exact.round(
         ((lit(4.0) * col("c_vw") - 3.0) * col("n1p_all") +
           lit(3.0) * col("n1p_v") * col("n1p_w")) /
           (lit(4.0) * col("c_v") * col("n1p_all")), 6))
@@ -365,7 +366,7 @@ object TextAnalysis {
     }
     base.crossJoin(broadcast(stats))
       .select(col(idCol), col("dl"),
-        round(terms.indices.map(term).reduce(_ + _), 6).as("bm25"))
+        Exact.round(terms.indices.map(term).reduce(_ + _), 6).as("bm25"))
   }
 
   /** Inverted index build: term → document frequency + the first
@@ -433,7 +434,7 @@ object TextAnalysis {
         size(col("enc")).cast("long").as("n_bpe_tokens"))
       .withColumn("n_merged", col("n_tokens") - col("n_bpe_tokens"))
       .withColumn("ratio",
-        round(col("n_bpe_tokens") /
+        Exact.round(col("n_bpe_tokens") /
           when(col("n_tokens") === 0, 1L).otherwise(col("n_tokens"))
             .cast("double"), 6))
   }
@@ -656,12 +657,12 @@ object TextAnalysis {
     val sig = base.select(
       col(idCol),
       size(tk).cast("long").as("n_words"),
-      round(aggregate(transform(tk, t => length(t)), lit(0), (a, x) => a + x)
+      Exact.round(aggregate(transform(tk, t => length(t)), lit(0), (a, x) => a + x)
         / size(tk).cast("double"), 6).as("mean_word_len"),
-      round((length(regexp_replace(col("__text"), "[^#]", ""))
+      Exact.round((length(regexp_replace(col("__text"), "[^#]", ""))
         + regexp_count(col("__text"), lit("\\.\\.\\."))).cast("double")
         / size(tk), 6).as("symbol_ratio"),
-      round(size(filter(tk, t => t.rlike("[a-z]"))) / size(tk).cast("double"), 6)
+      Exact.round(size(filter(tk, t => t.rlike("[a-z]"))) / size(tk).cast("double"), 6)
         .as("alpha_frac"),
       size(array_intersect(array_distinct(tk),
         array(en.map(lit): _*))).cast("long").as("stop_distinct"))
@@ -710,10 +711,10 @@ object TextAnalysis {
       .groupBy(col(idCol)).agg(
         sum(col("c")).cast("long").as("n_chars"),
         count(lit(1)).cast("long").as("n_distinct_chars"),
-        sum(round(col("c") * log(2.0, col("c")), 6).cast("decimal(28,6)"))
+        sum(Exact.round(col("c") * log(2.0, col("c")), 6).cast("decimal(28,6)"))
           .as("__clogc"))
       .select(col(idCol), col("n_chars"), col("n_distinct_chars"),
-        round(log(2.0, col("n_chars")) -
+        Exact.round(log(2.0, col("n_chars")) -
           col("__clogc").cast("double") / col("n_chars"), 6).as("entropy"))
 
   /** PMI-style bigram collocations (phrase mining): the top-`k` bigrams
@@ -750,7 +751,7 @@ object TextAnalysis {
         substring_index(col("bg"), " ", -1) === col("__y"))
       .crossJoin(broadcast(totals))
       .select(col("bg").as("bigram"), col("c_xy"), col("c_x"), col("c_y"),
-        round(col("c_xy").cast("double") * col("n") * col("n") /
+        Exact.round(col("c_xy").cast("double") * col("n") * col("n") /
           (col("m").cast("double") * col("c_x") * col("c_y")), 6)
           .as("pmi_lift"))
       .orderBy(col("pmi_lift").desc, col("bigram"))

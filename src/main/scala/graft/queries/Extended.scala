@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{GraftQuery, QueryPack, Tables}
+import graft.functions.Exact
 import graft.functions.Exact._
 import graft.functions.Hashing.{hash60, tokens}
 import graft.ops.{AsOfJoin, Dedup, Reconcile, Upsert}
@@ -182,7 +183,7 @@ object Extended extends QueryPack {
         Tables.lineitem(spark, dir), small, "l_orderkey")
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_lines"),
-        expr("CAST(ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 2) AS DOUBLE)")
+        Exact.round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 2)
           .as("sum_qty"),
         countDistinct(col("l_orderkey")).as("n_orders"))
       .select(col("l_returnflag").as("flag"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{GraftQuery, QueryPack, Tables}
+import graft.functions.Exact
 import graft.functions.Exact._
 
 /** SURVEY.md §2.2 (continued) — relational completeness: CUBE grouping
@@ -173,8 +174,8 @@ object Relational2 extends QueryPack {
         rank().over(w).cast("long").as("rnk"),
         dense_rank().over(w).cast("long").as("drnk"),
         ntile(4).over(w).cast("long").as("quartile"),
-        round(percent_rank().over(w).cast("double"), 6).as("prank"),
-        round(cume_dist().over(w).cast("double"), 6).as("cdist"))
+        Exact.round(percent_rank().over(w).cast("double"), 6).as("prank"),
+        Exact.round(cume_dist().over(w).cast("double"), 6).as("cdist"))
       .orderBy("o_custkey", "o_orderkey").limit(5000)
   }
 
@@ -208,12 +209,12 @@ object Relational2 extends QueryPack {
       sum(d30("l_extendedprice") * d30("l_extendedprice")).cast(DoubleType).as("syy"),
       sum(d30("l_quantity") * d30("l_extendedprice")).cast(DoubleType).as("sxy"))
     s.select(col("n"),
-      round((col("sxy") - col("sx") * col("sy") / col("n")) / (col("n") - 1), 6)
+      Exact.round((col("sxy") - col("sx") * col("sy") / col("n")) / (col("n") - 1), 6)
         .as("covar_samp"),
-      round((col("sxy") - col("sx") * col("sy") / col("n")) /
+      Exact.round((col("sxy") - col("sx") * col("sy") / col("n")) /
         (sqrt(col("sxx") - col("sx") * col("sx") / col("n")) *
          sqrt(col("syy") - col("sy") * col("sy") / col("n"))), 6).as("corr"),
-      round(sqrt((col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1)), 6)
+      Exact.round(sqrt((col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1)), 6)
         .as("std_qty"))
   }
 

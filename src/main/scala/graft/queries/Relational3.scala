@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{GraftQuery, QueryPack, Tables}
+import graft.functions.Exact
 import graft.functions.Exact._
 
 /** SURVEY.md §2.2 (third slice) — relational completeness, continued:
@@ -243,8 +244,8 @@ object Relational3 extends QueryPack {
         Seq("event_type"), Seq(col("cnt").desc, col("user_id")), 1)
       .select(col("event_type"), col("user_id").as("mode_user"))
     pct.join(md, "event_type")
-      .select(col("event_type"), round(col("p25"), 6).as("p25"),
-        round(col("p50"), 6).as("p50"), round(col("p95"), 6).as("p95"),
+      .select(col("event_type"), Exact.round(col("p25"), 6).as("p25"),
+        Exact.round(col("p50"), 6).as("p50"), Exact.round(col("p95"), 6).as("p95"),
         col("mode_user"))
       .orderBy("event_type")
   }
@@ -349,7 +350,7 @@ object Relational3 extends QueryPack {
         length(col("q")) > 0)
       .select(col("doc_id"), col("source"),
         levenshtein(col("p"), col("q")).cast("long").as("dist"),
-        round(lit(1.0) - levenshtein(col("p"), col("q")).cast("double") /
+        Exact.round(lit(1.0) - levenshtein(col("p"), col("q")).cast("double") /
           greatest(length(col("p")), length(col("q"))), 6).as("sim"))
       .orderBy("doc_id")
   }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.{GraftQuery, QueryPack, Tables}
+import graft.functions.Exact
 import graft.ops.Resample
 
 /** SURVEY.md §2.9 — time-series surface: regular-grid gap fill with
@@ -97,9 +98,9 @@ object TimeSeries extends QueryPack {
       FROM orders ORDER BY o_orderkey""".stripMargin.trim)) { (spark, dir) =>
     Tables.orders(spark, dir).select(
       col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-      expr("""CAST(ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+      Exact.round(expr("""CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
           PARTITION BY o_custkey ORDER BY o_orderdate
-          RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE), 2) AS DOUBLE)""")
+          RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE)"""), 2)
         .as("spend_7d"),
       expr("""COUNT(*) OVER (
           PARTITION BY o_custkey ORDER BY o_orderdate

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.{GraftQuery, QueryPack, Tables}
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 
@@ -1789,7 +1790,7 @@ object TrainingData extends QueryPack {
     graft.ops.Splits.importanceResample(
         Tables.documents(spark, dir).select("doc_id", "lang", "text"),
         col("lang") === "de", "doc_id", "text", 150)
-      .select(col("doc_id"), col("lang"), round(col("w"), 6).as("w"),
+      .select(col("doc_id"), col("lang"), Exact.round(col("w"), 6).as("w"),
         col("priority"))
       .orderBy("priority", "doc_id")
   }
@@ -1839,7 +1840,7 @@ object TrainingData extends QueryPack {
         .select(col("doc_id"), col("__tgt"), col("__b"), col("__k"))
       val out = graft.ops.Splits
         .importanceFromBuckets(state, docs, "doc_id", 150)
-        .select(col("doc_id"), col("lang"), round(col("w"), 6).as("w"),
+        .select(col("doc_id"), col("lang"), Exact.round(col("w"), 6).as("w"),
           col("priority"))
         .orderBy("priority", "doc_id")
       spark.createDataFrame(
@@ -2190,7 +2191,7 @@ object TrainingData extends QueryPack {
     ranked.crossJoin(broadcast(total))
       .select(col("term"), col("freq").cast("long").as("freq"),
         col("rank").cast("long").as("rank"),
-        round(col("cum").cast("double") / col("total"), 6).as("cum_share"))
+        Exact.round(col("cum").cast("double") / col("total"), 6).as("cum_share"))
       .orderBy("rank")
   }
 

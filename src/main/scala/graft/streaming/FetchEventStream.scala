@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Exact
 import graft.meteo.{MeteoSchemas, Sources}
 import graft.ops.Upsert
 
@@ -294,6 +295,6 @@ object FetchEventStream {
         count(lit(1)).as("n_jobs"),
         sum(when(col("status") === FetchStatus.Success, 1L).otherwise(0L))
           .as("n_success"),
-        round(sum(when(col("status") === FetchStatus.Success, 1d).otherwise(0d)) /
+        Exact.round(sum(when(col("status") === FetchStatus.Success, 1d).otherwise(0d)) /
           count(lit(1)), 6).as("success_rate"))
 }

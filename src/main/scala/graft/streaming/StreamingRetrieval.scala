@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.functions.Exact
 import graft.functions.VectorOps.cosineWithNorms
 import graft.ops.Similarity
 
@@ -94,7 +95,7 @@ object StreamingRetrieval {
       .filter(col("vec_id") =!= col("query_id") &&
         col("c_lab") =!= col("q_lab"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("e"), col("qn"), col("nrm")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("e"), col("qn"), col("nrm")), 6)
           .as("cosine"))
       // a vector probed via several cells scores once (cosine is
       // cell-independent, so distinct is exact)
@@ -147,7 +148,7 @@ object StreamingRetrieval {
       .filter(col("vec_id") =!= col("query_id") &&
         col("c_lab") =!= col("q_lab"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("e"), col("qn"), col("nrm")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("e"), col("qn"), col("nrm")), 6)
           .as("cosine"), col("__batch"))
       // a vector probed via several cells scores once per ITS batch
       // (cosine is cell-independent, so distinct is exact)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.functions.Exact
 import graft.functions.VectorOps.cosineWithNorms
 import graft.ops.Similarity
 
@@ -145,13 +146,13 @@ object VectorIndex {
       .join(broadcast(newC.as("k")), col("v.cid") === col("k.cid"))
       .select(col("v.vec_id").as("vec_id"), col("v.cid").as("cid"),
         col("v.e").as("e"), col("v.nrm").as("nrm"),
-        round(cosineWithNorms(col("v.e"), col("k.e"),
+        Exact.round(cosineWithNorms(col("v.e"), col("k.e"),
           col("v.nrm"), col("k.nrm")), 6).as("cos_own"))
     val dC = newC.filter(col("cid").isin(drifted: _*))
     val bestDrift = own.as("v")
       .join(broadcast(dC.as("k")), lit(true))
       .select(col("v.vec_id").as("vec_id"),
-        round(cosineWithNorms(col("v.e"), col("k.e"),
+        Exact.round(cosineWithNorms(col("v.e"), col("k.e"),
           col("v.nrm"), col("k.nrm")), 6).as("cos_d"))
       .groupBy("vec_id").agg(max(col("cos_d")).as("best_d"))
     // >= not >: at a tie the global argmax may still flip on the cid
@@ -214,7 +215,7 @@ object VectorIndex {
     val scored = probes.join(index, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
+        Exact.round(cosineWithNorms(col("qe"), col("ce"), col("qn"), col("cn")), 6)
           .as("cosine"))
     graft.plans.TopK.perKeyTwoPhase(scored, Seq("query_id"),
         Seq(col("cosine").desc, col("neighbor_id")), k)

@@ -8,6 +8,15 @@ import org.apache.spark.sql.functions._
   * costing 10× at scale. */
 class PlanAuditSpec extends SparkTestBase {
 
+  /** Every SparkEntry query, constructed once at `sfDir`, in name order —
+    * shared by the full-surface audits. */
+  private lazy val surface: Seq[(String, org.apache.spark.sql.DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (try fn(spark, sfDir)
+        catch { case e: Throwable =>
+          fail(s"$name failed to construct at $sfDir: $e") })
+    }
+
   private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect() // finalize AQE
@@ -1145,11 +1154,7 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.plans.logical._
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     var seen = 0 // unpartitioned windows examined — guards vacuity
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val df =
-        try fn(spark, sfDir)
-        catch { case e: Throwable =>
-          fail(s"$name failed to construct at $sfDir: $e") }
+    for ((name, df) <- surface) {
       df.queryExecution.optimizedPlan.foreach {
         case w: Window if w.partitionSpec.isEmpty =>
           seen += 1
@@ -1175,5 +1180,49 @@ class PlanAuditSpec extends SparkTestBase {
     assert(offenders.isEmpty,
       s"unpartitioned window over an unbounded input in: " +
         s"${offenders.distinct.mkString(", ")}")
+  }
+
+  test("full-surface round audit: no Spark Round over a double in any " +
+      "query's optimized plan (its subqueries and the caches it reads " +
+      "included) — every one runs the native RoundDouble kernel, which " +
+      "is bit-identical and ~20x cheaper (ExactRoundSpec)") {
+    import org.apache.spark.sql.catalyst.expressions.Round
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types.DoubleType
+    def visit(plan: LogicalPlan, f: PartialFunction[Any, Unit]): Unit =
+      plan.foreachWithSubqueries {
+        case m: InMemoryRelation => visit(m.cacheBuilder.logicalPlan, f)
+        case p => p.expressions.foreach(_.foreach(e => f.applyOrElse(e, (_: Any) => ())))
+      }
+    val offenders = scala.collection.mutable.ListBuffer.empty[String]
+    var kernels = 0
+    for ((name, df) <- surface) visit(df.queryExecution.optimizedPlan, {
+      case r: Round if r.child.dataType == DoubleType => offenders += s"$name: $r"
+      case _: graft.functions.RoundDouble => kernels += 1
+    })
+    assert(kernels >= 150, s"round-audit matcher looks vacuous: $kernels kernel rounds")
+    assert(offenders.isEmpty,
+      s"Spark Round over a double:\n${offenders.distinct.mkString("\n")}")
+  }
+
+  test("ann_maxsim: the cross-join stage runs ONCE, in " +
+      "spark.sql.shuffle.partitions tasks — the query side is " +
+      "repartitioned to an explicit count, so AQE cannot coalesce it to " +
+      "one task, and the (q_doc, c_doc) sum reads a shuffle, so the " +
+      "final sort's range sampling does not re-run the pair stage") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    object aqe extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("ann_maxsim")(spark, sfDir)
+    val stages = stagesOf(df.collect())
+    val plan = df.queryExecution.executedPlan
+    val joins = aqe.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size == 1, s"one cross join expected:\n$plan")
+    val rows = joins.head.metrics("numOutputRows").id
+    val runs = stages.filter(_.accumulables.contains(rows))
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(runs.map(_.numTasks) == Seq(n),
+      s"cross-join stage runs (tasks each): ${runs.map(_.numTasks)}, want one of $n:\n$plan")
   }
 }

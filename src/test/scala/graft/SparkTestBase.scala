@@ -1,11 +1,11 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -17,28 +17,56 @@ trait SparkTestBase extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
 
   /** The Spark actions (query executions) `body` runs, by action name
-    * ("count", "localCheckpoint", …). The sentinel-job pattern of
-    * PlanAuditSpec: the session's execution listeners share the listener
-    * bus queue with SparkListeners, which is FIFO, so once a tagged raw
-    * RDD job started after `body` is seen, every action of `body` has
-    * been too. A streaming query started inside `body` is counted too:
-    * its session is cloned at start, with the listeners registered
-    * then. */
+    * ("count", "localCheckpoint", …). A streaming query started inside
+    * `body` is counted too: its session is cloned at start, with the
+    * listeners registered then. */
   protected def actionsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val sentinels = new AtomicInteger(0)
     val names = new ConcurrentLinkedQueue[String]()
-    val jobs = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == "action-sentinel"))
-          sentinels.incrementAndGet()
-    }
     val actions = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         names.add(f)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
         names.add(f)
+    }
+    spark.listenerManager.register(actions)
+    try {
+      fenced(names.clear())(body)
+      names.asScala.toSeq
+    } finally spark.listenerManager.unregister(actions)
+  }
+
+  /** The stages `body` runs to completion, in completion order (skipped
+    * stages, whose shuffle output is reused, never complete). */
+  protected def stagesOf(body: => Unit): Seq[StageInfo] = {
+    val stages = new ConcurrentLinkedQueue[StageInfo]()
+    val fences = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (isSentinel(js)) js.stageIds.foreach(fences.add)
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        stages.add(sc.stageInfo)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      fenced(stages.clear())(body)
+      stages.asScala.toSeq.filterNot(st => fences.contains(st.stageId))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def isSentinel(js: SparkListenerJobStart): Boolean =
+    Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == "action-sentinel")
+
+  /** Runs `body` between two sentinel jobs, `reset` after the first one:
+    * the session's execution listeners share the listener bus queue with
+    * SparkListeners, which is FIFO, so once a tagged raw RDD job started
+    * after `body` is seen, every event of `body` has been delivered, and
+    * none from before `reset`. */
+  private def fenced(reset: => Unit)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val sentinels = new AtomicInteger(0)
+    val jobs = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (isSentinel(js)) sentinels.incrementAndGet()
     }
     def sentinel(): Unit = {
       val seen = sentinels.get()
@@ -49,17 +77,12 @@ trait SparkTestBase extends AnyFunSuite {
       assert(sentinels.get() > seen, "sentinel job never observed")
     }
     sc.addSparkListener(jobs)
-    spark.listenerManager.register(actions)
     try {
       sentinel()
-      names.clear()
+      reset
       body
       sentinel()
-      names.asScala.toSeq
-    } finally {
-      spark.listenerManager.unregister(actions)
-      sc.removeSparkListener(jobs)
-    }
+    } finally sc.removeSparkListener(jobs)
   }
 }
 
