@@ -20,7 +20,7 @@ object Exact {
   def exactSum(c: Column): Column = sum(dec(c)).cast(DoubleType)
 
   /** `round(c, scale)`, HALF_UP, with Spark's results: on a double it
-    * runs the native [[RoundDouble]] kernel (bit-identical, ~20× cheaper
+    * runs the native [[RoundDouble]] kernel (bit-identical, 15–20× cheaper
     * than Spark's BigDecimal round), on any other numeric type Spark's
     * own `round`. Use it for every `round` in DataFrame code. */
   def round(c: Column, scale: Int): Column =

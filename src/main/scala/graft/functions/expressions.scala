@@ -79,7 +79,7 @@ case class ExactRound(child: Expression, scale: Int)
     copy(child = newChild)
 }
 
-/** Spark's `round(x, scale)` on a double, bit for bit, at ~20× less cost.
+/** Spark's `round(x, scale)` on a double, bit for bit, at 15–20× less cost.
   * Spark rounds a double through `BigDecimal.valueOf(x).setScale(scale,
   * HALF_UP).doubleValue()` (~450 ns, mostly `Double.toString`); see
   * [[RoundDouble.round]] for the fast path and why it is exact. */

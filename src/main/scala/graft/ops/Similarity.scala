@@ -1494,9 +1494,10 @@ object Similarity {
           col(idCol).as(s"${p}vec"), e.as(s"${p}e"))
         .withColumn(s"${p}n", norm(col(s"${p}e")))
     }
-    // explicit count, keyed on the vector: `repartition(q_doc)` let AQE
-    // coalesce the small query side to ONE task, and the cross join then
-    // ran single-threaded, twice (the caller's range sort sampled it)
+    // explicit count (see shufflePartitions): AQE would coalesce the
+    // small query side, and the cross join with it, into one task. The
+    // q_vec key leaves the (q_doc, c_doc) sum a shuffle of its own, so a
+    // caller's range sort samples that shuffle, not the cross join.
     val q = prep(queries, "q_").repartition(shufflePartitions(queries), col("q_vec"))
     val c = prep(corpus, "c_")
     q.crossJoin(c)

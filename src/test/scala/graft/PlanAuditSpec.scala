@@ -1185,7 +1185,7 @@ class PlanAuditSpec extends SparkTestBase {
   test("full-surface round audit: no Spark Round over a double in any " +
       "query's optimized plan (its subqueries and the caches it reads " +
       "included) — every one runs the native RoundDouble kernel, which " +
-      "is bit-identical and ~20x cheaper (ExactRoundSpec)") {
+      "is bit-identical and 15-20x cheaper (ExactRoundSpec)") {
     import org.apache.spark.sql.catalyst.expressions.Round
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
