@@ -167,24 +167,21 @@ object Stress100 {
       results(("semantic_dedup", f)) = time("semantic_dedup", f) {
         ops.Dedup.semanticDedup(embsF, centsF).count()
       }
-      // prefix-filtered Jaccard: same output as the full shingle join,
-      // candidate join bounded by prefix collisions — the pruning is
-      // exactly what must hold up when the corpus (and its boilerplate)
-      // scales
+      // prefix-filtered Jaccard: candidate join bounded by prefix
+      // collisions — the pruning is exactly what must hold up when the
+      // corpus (and its boilerplate) scales
       results(("ngram_prefix", f)) = time("ngram_prefix", f) {
-        ops.Dedup.ngramJaccardPrefix(docsF).count()
+        ops.Dedup.ngramJaccard(docsF).count()
       }
-      // DF-capped candidate generation with the hot-shingle set joined
-      // UN-HINTED (round 8 — judge r7 #1): the hot set grows with the
-      // corpus vocabulary here exactly as it would on a boilerplate-
-      // heavy crawl, so this tier certifies the anti-join/AQE path the
-      // hint used to bypass. cache=false: the one-shot tier reuses
-      // nothing across factors
+      // the same join with the hot-shingle cap: the hot set joins back
+      // UN-HINTED and grows with the corpus vocabulary here exactly as
+      // it would on a boilerplate-heavy crawl, so this tier certifies
+      // the AQE shuffle-join fallback a broadcast hint would bypass
       results(("ngram_capped", f)) = time("ngram_capped", f) {
-        ops.Dedup.ngramJaccardCapped(docsF, cache = false).count()
+        ops.Dedup.ngramJaccard(docsF, maxDf = 20).count()
       }
       results(("containment_capped", f)) = time("containment_capped", f) {
-        ops.Dedup.ngramContainmentCapped(docsF, cache = false).count()
+        ops.Dedup.ngramContainment(docsF, maxDf = 20).count()
       }
       // transitive-closure engine at scale (round 8): mutual-kNN edges
       // (corpus·k mass — cells scale with the corpus like the SemDeDup
@@ -223,7 +220,7 @@ object Stress100 {
           trainIters = 1).count()
       }
       // composed curation pipeline END TO END (pipeline_curation's
-      // shape on the scale path: quality gate → PPJoin near-dup losers
+      // shape on the scale path: quality gate → prefix-join near-dup losers
       // → survivor census) — the components have individual receipts;
       // this certifies their composition under one scheduler. The
       // stopword test strips the tier's per-replica token tag so every
@@ -235,7 +232,7 @@ object Stress100 {
             size(filter(tk, t => split(t, "_").getItem(0)
               .isin("the", "a", "of", "and", "is"))).as("n_stop"))
           .filter(col("n_words") >= 30 && col("n_stop") > 0)
-        val losers = ops.Dedup.ngramJaccardPrefix(docsF, threshold = 0.5)
+        val losers = ops.Dedup.ngramJaccard(docsF, threshold = 0.5)
           .select(col("id_b").as("doc_id")).distinct()
         keep.join(losers, Seq("doc_id"), "left_anti")
           .groupBy("source")

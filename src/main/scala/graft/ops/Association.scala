@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * excluded from the relation ENTIRELY (pair generation, item supports
   * and the basket universe count) — one consistent capped relation,
   * exact given the cap, the same DF-cap contract as
-  * [[Dedup.ngramJaccardCapped]] and [[Graph.bipartiteLinkPredict]];
+  * the `maxDf` of [[Dedup.ngramJaccard]] and [[Graph.bipartiteLinkPredict]];
   * the oracle replicates the cap so the gate proves the capped
   * semantics, not an approximation of the uncapped ones.
   *
@@ -31,13 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Association {
 
-  /** Association rules over item pairs co-occurring in a basket.
-    *
-    * Returns one row per unordered pair (item_a < item_b) with
-    * `support_ab` ≥ `minSupport`: both item supports, pair support,
-    * `confidence` (a→b), and `lift`, ranked by descending pair support
-    * (ties broken on the pair itself).
-    */
   /** Plan-stats gate for caching the width-filtered basket table:
     * below it the 3× recompute of a small fact is cheaper than building
     * the serialized cache (measured round 13, same window: sf0.1
@@ -49,6 +42,17 @@ object Association {
     * crossover. */
   val CacheBasketsMinBytes: Long = 64L << 20
 
+  /** Association rules over item pairs co-occurring in a basket.
+    *
+    * Returns one row per unordered pair (item_a < item_b) with
+    * `support_ab` ≥ `minSupport`: both item supports, pair support,
+    * `confidence` (a→b), and `lift`.
+    *
+    * Above the `cacheBasketsMinBytes` gate the call runs one Spark
+    * action and returns a frame persisted `MEMORY_AND_DISK_SER`; the
+    * caller owns that cache and should unpersist it once consumed.
+    * Below the gate the returned frame is lazy and nothing is cached.
+    */
   def basketRules(df: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long = 2, maxBasket: Int = 64,
       packPairs: Boolean = true,
@@ -163,7 +167,7 @@ object Association {
       // materialized rows; the caller may unpersist the returned frame
       // once consumed (HygieneSpec pins zero residual blocks).
       val out = result
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       out.count()
       baskets.unpersist(blocking = false)
       out

@@ -9,7 +9,13 @@ import graft.functions.Hashing._
 import graft.functions.VectorOps
 
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH,
-  * SimHash, n-gram Jaccard, embedding cosine.
+  * SimHash, n-gram Jaccard and containment, embedding cosine.
+  *
+  * Exact shingle overlap has ONE implementation, the private
+  * prefix-filtered join [[overlapPairs]]: the two public ops
+  * [[ngramJaccard]] and [[ngramContainment]] (each with an optional
+  * hot-shingle cap `maxDf`) and the exact truth of [[lshRecallAudit]]
+  * and [[bandingFrontier]] all read their pairs from it.
   *
   * Scale notes (100 TB):
   *  - No operator materializes the O(n²) pair space. Candidates come from
@@ -160,269 +166,174 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** N-gram Jaccard near-dup pairs: candidates share ≥1 shingle (an
-    * equality join on the shingle — never a cross join), then exact
-    * set-Jaccard ≥ `threshold`.
+  /** N-gram Jaccard near-dup pairs: every doc pair with exact shingle-set
+    * Jaccard ≥ `threshold`, from the prefix-filtered [[overlapPairs]]
+    * join (never all-pairs).
     *
-    * The intersection size is the per-pair match COUNT of the shingle
-    * join itself (shingle sets are distinct), so the verify step never
-    * touches the shingle arrays again — the pair shuffle carries two ids
-    * and a count, and |A∪B| = |A|+|B|−|A∩B| comes from a size lookup.
-    */
+    * `maxDf` is the hot-shingle cap for dup-heavy corpora: a pair is
+    * reported only if it also shares a shingle held by at most `maxDf`
+    * docs, so a boilerplate shingle shared by thousands of docs adds no
+    * candidates. The Jaccard of a reported pair is still over the FULL
+    * shingle sets; only pairs whose every shared shingle is hot are
+    * missed. The default `Int.MaxValue` is uncapped. */
   def ngramJaccard(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", threshold: Double = 0.5): DataFrame = {
-    val sh = shingleSets(docs, idCol, textCol)
-    val ex = sh.select(col("doc_id"), explode(col("s")).as("g"))
-    val sizes = sh.select(col("doc_id"), size(col("s")).as("n"))
-    ex.as("a").join(ex.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        Exact.round(col("inter") / (col("na") + col("nb") - col("inter")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      textCol: String = "text", threshold: Double = 0.5,
+      maxDf: Int = Int.MaxValue): DataFrame =
+    jaccardOf(overlapPairs(shingleSets(docs, idCol, textCol), threshold,
+      maxDf, containment = false), threshold)
       .orderBy("id_a", "id_b")
-  }
-
-  /** Prefix-filtered n-gram Jaccard (AllPairs/PPJoin candidate
-    * generation — Bayardo, Ma & Srikant, WWW 2007): IDENTICAL result to
-    * [[ngramJaccard]], strictly fewer candidate pairs. Under any fixed
-    * global shingle order, two sets with Jaccard ≥ t must share an
-    * element within their first |X| − ⌈t·|X|⌉ + 1 shingles (if the
-    * smallest shared shingle sat past A's prefix, A would hold ≥
-    * |A| − ⌈t|A|⌉ + 1 unshared shingles, forcing |A∩B| ≤ ⌈t|A|⌉ − 1 <
-    * ⌈t|A|⌉ ≤ |A∩B|) — so the candidate join explodes only PREFIXES:
-    * at t = 0.5 roughly half the shingle rows, and pairs overlapping
-    * only outside both prefixes never become candidates at all.
-    *
-    * Global order = ascending 60-bit shingle hash (engine-stable, no
-    * extra corpus pass; frequency-ascending order — classic AllPairs —
-    * prunes boilerplate-heavy corpora harder but costs a DF pass).
-    * Everything runs on SORTED HASH ARRAYS (native
-    * [[graft.functions.SortedHash60Array]], a narrow per-row map): join
-    * keys and verify payloads are 8-byte longs, never shingle strings.
-    * Two more PPJoin prunes fire INSIDE the candidate join, before the
-    * distinct or any verify work:
-    *  - size filter: J ≥ t ⇒ t·|A| ≤ |B| ≤ |A|/t;
-    *  - positional filter: a match at 1-based sorted positions (ra, rb)
-    *    bounds |A∩B| ≤ min(na−ra, nb−rb) + 1 for the pair's FIRST
-    *    shared prefix element, and J ≥ t needs |A∩B| ≥
-    *    ⌈t(na+nb)/(1+t)⌉; later shared elements only shrink the bound,
-    *    so per-row filtering keeps a pair iff its first match passes.
-    * Verification is one linear merge per surviving pair
-    * ([[graft.functions.SortedLongIntersectCount]]) — exact set
-    * intersection (modulo 2^-60 hash collisions, the family-wide
-    * shingle-key convention). Threshold equality is exact: Jaccard is
-    * a rational with denominator ≤ |A|+|B|, so document-sized sets
-    * cannot round across the 6-decimal verify edge; the prune bounds
-    * subtract 1e-9 before ceil/compare so a boundary-exact pair is
-    * never pruned.
-    */
-  def ngramJaccardPrefix(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", threshold: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    val t = threshold
-    val sh = shingleSets(docs, idCol, textCol)
-      .select(col("doc_id"),
-        column(graft.functions.SortedHash60Array(expression(col("s"))))
-          .as("hs"))
-      .withColumn("n", size(col("hs")))
-    val pfxLen = (col("n") - ceil(lit(t) * col("n")) + 1).cast("int")
-    val prefix = sh.select(col("doc_id"), col("n"),
-        posexplode(slice(col("hs"), lit(1), pfxLen)).as(Seq("i", "hg")))
-      .select(col("doc_id"), col("n"), (col("i") + 1).as("r"), col("hg"))
-    val oMin = ceil((lit(t) / (1 + t)) * (col("a.n") + col("b.n")) - 1e-9)
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.hg") === col("b.hg") && col("a.doc_id") < col("b.doc_id") &&
-        col("b.n") >= lit(t) * col("a.n") - 1e-9 &&
-        col("a.n") >= lit(t) * col("b.n") - 1e-9 &&
-        (least(col("a.n") - col("a.r"), col("b.n") - col("b.r")) + 1) >= oMin)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val inter = column(graft.functions.SortedLongIntersectCount(
-      expression(col("ha")), expression(col("hb"))))
-    cand
-      .join(sh.select(col("doc_id").as("id_a"), col("hs").as("ha"),
-        col("n").as("na")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("hs").as("hb"),
-        col("n").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"), inter.as("i"), col("na"), col("nb"))
-      .select(col("id_a"), col("id_b"),
-        Exact.round(col("i") / (col("na") + col("nb") - col("i")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= t)
-      .orderBy("id_a", "id_b")
-  }
 
   /** Asymmetric near-dup detection by shingle CONTAINMENT
     * (|A∩B| / min(|A|,|B|), with both directions reported): a document
     * pasted inside a larger one has LOW Jaccard (the union is big) but
     * HIGH containment — the quote/subset-duplication case Jaccard
-    * dedup structurally misses. Same bucketed candidate shape as
-    * [[ngramJaccard]] (equality join on shared shingles, id_a < id_b —
-    * never all-pairs); threshold applies to max(cont_a, cont_b).
-    *
-    * HAZARD: candidates come from the RAW shingle join with no
-    * document-frequency cap, and containment corpora are exactly the
-    * boilerplate-heavy case — one shingle shared by k docs is C(k,2)
-    * candidate pairs. Dup-heavy corpora should use
-    * [[ngramContainmentCapped]], which bounds any shingle's
-    * contribution at C(dfCap,2) with the intersection still exact. */
+    * dedup structurally misses. Threshold applies to
+    * max(cont_a, cont_b); `maxDf` caps candidates exactly as in
+    * [[ngramJaccard]] (containment corpora are the boilerplate-heavy
+    * case, where one shingle shared by k docs is C(k,2) pairs). */
   def ngramContainment(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", threshold: Double = 0.8): DataFrame = {
-    val sh = shingleSets(docs, idCol, textCol)
-    val ex = sh.select(col("doc_id"), explode(col("s")).as("g"))
-    val sizes = sh.select(col("doc_id"), size(col("s")).as("n"))
-    ex.as("a").join(ex.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        Exact.round(col("inter") / col("na").cast("double"), 6).as("cont_a"),
-        Exact.round(col("inter") / col("nb").cast("double"), 6).as("cont_b"))
-      .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** DF-capped n-gram Jaccard: like [[ngramJaccard]], but shingles whose
-    * document frequency exceeds `dfCap` are excluded from CANDIDATE
-    * GENERATION. In a dup-heavy corpus a boilerplate shingle shared by
-    * thousands of docs makes the candidate join quadratic in that count;
-    * the cap bounds every shingle's pair contribution at C(dfCap, 2).
-    * Verification stays exact over the FULL shingle sets (array verify),
-    * so precision is unchanged — only pairs whose every common shingle
-    * is hot can be missed (approximate recall, deterministic result).
-    *
-    * Plan shape: the DF census is a map-side-combined count over the
-    * exploded shingles, and hotness comes back as ONE un-hinted left
-    * join that TAGS each exploded row (the hot set grows with the
-    * corpus vocabulary, so it gets no broadcast() — AQE broadcasts
-    * while small). Everything downstream reads the tag: the cold
-    * candidate join filters on it, and one per-doc aggregate yields
-    * BOTH the full set size and the tiny hot-shingle subset — no
-    * anti-join + semi-join split, no per-doc size re-joins against the
-    * shingle table, and never a window sort over the exploded rows.
-    * The exact intersection is split into two cheap parts: the cold
-    * share is COUNTED directly off the candidate join (map-side-
-    * combined aggregate — no distinct pass over the pair blow-up, no
-    * full-array intersect per pair), and the hot share comes from
-    * intersecting tiny per-doc hot-shingle subsets (≤ the global
-    * hot-set size by construction). |A∩B| = cold + hot exactly, so the
-    * emitted Jaccard is identical to the full array verify (measured
-    * 5.3s → ~2s at sf0.1; the tag form took the ×100 stress receipt
-    * from 177s to 141s over the anti-join form, identical rows).
-    */
-  def ngramJaccardCapped(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", threshold: Double = 0.5,
-      dfCap: Int = 20, cache: Boolean = true): DataFrame = {
-    val (pairs, working) = cappedPairIntersections(docs, idCol, textCol, dfCap, cache)
-    val result = pairs
-      .select(col("id_a"), col("id_b"),
-        Exact.round(col("inter") / (col("na") + col("nb") - col("inter")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy("id_a", "id_b")
-    if (cache) materializeThenRelease(result, working) else result
-  }
-
-  /** DF-capped CONTAINMENT twin of [[ngramJaccardCapped]] — the same
-    * capped candidate generation applied to [[ngramContainment]]'s
-    * asymmetric overlap. Containment corpora are exactly the
-    * boilerplate-heavy case (quotes, pasted subsets, templated docs),
-    * so the uncapped form's raw shingle join is at its most quadratic
-    * here: one shingle shared by k docs is C(k,2) candidate pairs. The
-    * cap bounds every shingle's contribution at C(dfCap,2); the emitted
-    * containment values stay EXACT (cold share counted off the join,
-    * hot share from tiny per-doc hot subsets). Recall caveat sharpens,
-    * though: a short doc fully contained in boilerplate has mostly-hot
-    * shingles, and if ALL its shingles are hot the pair is missed —
-    * corpora like that should raise `dfCap` (candidates grow as
-    * C(cap,2)·|hot|, still never corpus²). */
-  def ngramContainmentCapped(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.8,
-      dfCap: Int = 20, cache: Boolean = true): DataFrame = {
-    val (pairs, working) = cappedPairIntersections(docs, idCol, textCol, dfCap, cache)
-    val result = pairs
+      maxDf: Int = Int.MaxValue): DataFrame =
+    overlapPairs(shingleSets(docs, idCol, textCol), threshold, maxDf,
+        containment = true)
       .select(col("id_a"), col("id_b"),
         Exact.round(col("inter") / col("na").cast("double"), 6).as("cont_a"),
         Exact.round(col("inter") / col("nb").cast("double"), 6).as("cont_b"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
       .orderBy("id_a", "id_b")
-    if (cache) materializeThenRelease(result, working) else result
+
+  /** (id_a, id_b, jaccard) of an [[intersections]] table, unsorted,
+    * keeping pairs at or above `t`. */
+  private def jaccardOf(pairs: DataFrame, t: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        Exact.round(col("inter") / (col("na") + col("nb") - col("inter"))
+          .cast("double"), 6).as("jaccard"))
+      .filter(col("jaccard") >= t)
+
+  /** `sh` as (doc_id, hs, n): each shingle set as its SORTED array of
+    * 60-bit hashes ([[graft.functions.SortedHash60Array]], a narrow
+    * per-row map) and its size. Join keys and verify payloads are 8-byte
+    * longs, never shingle strings (2^-60 collisions, the family-wide
+    * shingle-key convention). */
+  private def hashedSets(sh: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    sh.select(col("doc_id"),
+        column(graft.functions.SortedHash60Array(expression(col("s")))).as("hs"))
+      .withColumn("n", size(col("hs")))
   }
 
-  /** Shared engine of the DF-capped near-dup ops: candidate pairs from
-    * the COLD (df ≤ cap) shingle join, with the EXACT intersection size
-    * reassembled as cold share (counted straight off the join) + hot
-    * share (array-intersect of tiny per-doc hot-shingle subsets).
-    * Returns the (id_a, id_b, inter, na, nb) pair table PLUS the list
-    * of working caches the caller must release once its result is
-    * materialized (via [[materializeThenRelease]]) — inter and the
-    * sizes are over FULL shingle sets, so any overlap measure computed
-    * from them is exact; only candidate RECALL is capped. */
-  private def cappedPairIntersections(docs: DataFrame, idCol: String,
-      textCol: String, dfCap: Int, cache: Boolean): (DataFrame, Seq[DataFrame]) = {
-    // cache=true persists the EXPLODED SHINGLES — the tokenize+shingle
-    // compute is the expensive narrow work and it feeds two branches
-    // (the DF census and the tag join's probe side) that no exchange
-    // reuse covers once AQE broadcasts the hot set; everything after
-    // the tag join is join/aggregate work whose exchanges the planner
-    // already reuses. Both working persists are RELEASED by the public
-    // caller once its output-sized result is materialized — they never
-    // outlive the operator.
-    val exBase = shingleSets(docs, idCol, textCol)
-      .select(col("doc_id"), explode(col("s")).as("g"))
-    val exAll = if (cache)
-      exBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else exBase
-    // The hot-shingle set is NOT plan-time-bounded: its size grows with
-    // the corpus vocabulary (every boilerplate shingle lands here), so
-    // it gets NO broadcast() hint — on a boilerplate-heavy 100 TB crawl
-    // a forced broadcast is a hard broadcast-limit/driver-OOM cliff,
-    // while the un-hinted tag join lets AQE broadcast while the set is
-    // actually small and degrade to a shuffle join (whose skewed g
-    // partitions AQE can additionally split) when it is not. Same rule
-    // as the link-predict degree joins (judge r6 #3 / r7 #1).
-    val hot = exAll.groupBy("g").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select(col("g"), lit(true).as("__hot"))
-    // ONE join tags every exploded row; both the candidate filter and
-    // the per-doc census read the tag. The tag join is ALSO persisted:
-    // it has three consumers (both candidate self-join sides plus the
-    // per-doc census) and re-running it per consumer measured 2.5×
-    // slower than the block-store read-back at sf0.1 — the two caches
-    // together hold the shingling exactly once and the tag exactly
-    // once, which is the minimum any plan shape pays.
-    val taggedBase = exAll.join(hot, Seq("g"), "left")
-    val tagged = if (cache)
-      taggedBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else taggedBase
-    // shared COLD shingles per pair, straight off the join (shingle sets
-    // are distinct per doc, so each shared cold shingle matches once)
-    val ex = tagged.filter(col("__hot").isNull)
-    val cold = ex.as("a").join(ex.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter_cold"))
-    // full set size AND tiny hot-shingle subset in one per-doc pass
-    // (collect_list drops the nulls the when() leaves on cold rows)
-    val perDoc = tagged.groupBy("doc_id").agg(
-      count(lit(1)).as("n"),
-      collect_list(when(col("__hot"), col("g"))).as("hs"))
-    val inter = col("inter_cold") +
-      size(array_intersect(col("ha"), col("hb")))
-    val pairs = cold
-      .join(perDoc.select(col("doc_id").as("id_a"), col("n").as("na"),
-        col("hs").as("ha")), "id_a")
-      .join(perDoc.select(col("doc_id").as("id_b"), col("n").as("nb"),
-        col("hs").as("hb")), "id_b")
-      .select(col("id_a"), col("id_b"), inter.as("inter"),
+  /** Exact intersections of candidate pairs `cand` (id_a, id_b) over a
+    * [[hashedSets]] table: (id_a, id_b, inter, na, nb), one linear merge
+    * per pair ([[graft.functions.SortedLongIntersectCount]]). */
+  private def intersections(cand: DataFrame, hashed: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    cand
+      .join(hashed.select(col("doc_id").as("id_a"), col("hs").as("ha"),
+        col("n").as("na")), "id_a")
+      .join(hashed.select(col("doc_id").as("id_b"), col("hs").as("hb"),
+        col("n").as("nb")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        column(graft.functions.SortedLongIntersectCount(
+          expression(col("ha")), expression(col("hb")))).as("inter"),
         col("na"), col("nb"))
-    (pairs, if (cache) Seq(exAll, tagged) else Nil)
+  }
+
+  /** The exact shingle-overlap join behind every near-dup op and the
+    * audits' truth: over a (doc_id, s) shingle table, the candidate pairs
+    * (id_a < id_b) of measure `t` as (id_a, id_b, inter, na, nb) with
+    * the EXACT intersection. Every pair that meets the measure and
+    * shares a cool shingle (document frequency ≤ `maxDf`) is among them;
+    * callers apply the rounded measure.
+    *
+    * Measures. Jaccard J = I/(na+nb−I) ≥ t needs I ≥ t·max(na, nb), so
+    * I ≥ ⌈t·|x|⌉ for both docs x. Containment max(I/na, I/nb) ≥ t needs
+    * I ≥ t·min(na, nb), a bound on the SMALLER doc only (smaller by
+    * (n, doc_id)).
+    *
+    * Prefix filter (AllPairs, Bayardo, Ma & Srikant, WWW'07; PPJoin,
+    * Xiao et al., WWW'08) on the cap. Order each doc's COOL hashes C_x
+    * ascending; H_x are its hot ones. A cool hash is cool in every doc,
+    * so the pair's shared cool hashes are C_a ∩ C_b and
+    * |C_a∩C_b| ≥ I − |H_x| for either doc x, and ≥ 1 by the cap rule.
+    * With β_x = max(1, ⌈t·|x|⌉ − |H_x|), at least β_x shared cool hashes
+    * sit at or after the FIRST one, so it lies within the first
+    * |C_x| − β_x + 1 of C_x (clamped at 0). Joining prefixes on the hash
+    * therefore finds every such pair; for containment only the smaller
+    * doc is prefixed and the larger joins with its full cool set.
+    * Uncapped, H = ∅ and the prefix is the classic |x| − ⌈t·|x|⌉ + 1.
+    * Without the −|H_x| term the bound is wrong: the first shared
+    * shingle may be hot, which pushes the first shared cool one past
+    * the prefix.
+    *
+    * Positional filter (PPJoin), inside the join: a match at 1-based
+    * cool positions (ra, rb) bounds the shared cool hashes from it on by
+    * min(|C_a|−ra, |C_b|−rb) + 1, so I ≤ that + min(|H_a|, |H_b|) at the
+    * pair's first match. A row is kept when that reaches the measure's
+    * required overlap (Jaccard ⌈t(na+nb)/(1+t)⌉, containment
+    * ⌈t·min(na, nb)⌉); later matches only shrink the bound, so per-row
+    * filtering keeps a pair iff its first match passes. Every bound
+    * subtracts 1e-9 before its ceil, so a boundary-exact pair (t·|x| an
+    * integer that floating point lands just above) is never pruned. The
+    * rounded measure cannot cross the 6-decimal edge either: it is a
+    * rational with denominator ≤ na+nb.
+    *
+    * Plan: uncapped, the hash table feeds the prefix explode and both
+    * verify fetches. Capped, a map-side-combined DF census over the
+    * exploded hashes finds the hot set, which joins back UN-HINTED (it
+    * grows with the corpus vocabulary, so no broadcast() — AQE
+    * broadcasts while it is small) into a per-doc hot list; no window,
+    * no anti/semi-join. Candidates are deduplicated before the verify,
+    * whose merge runs over the full hash arrays, so the intersection is
+    * exact whatever the cap. Lazy: building it runs no Spark action. */
+  private def overlapPairs(sh: DataFrame, t: Double, maxDf: Int,
+      containment: Boolean): DataFrame = {
+    require(maxDf > 0, "maxDf must be positive")
+    val hashed = hashedSets(sh)
+    val none = typedLit(Array.empty[Long])
+    val split =
+      if (maxDf == Int.MaxValue)
+        hashed.select(col("doc_id"), col("n"), col("hs").as("c"), none.as("hh"))
+      else {
+        val ex = hashed.select(col("doc_id"), explode(col("hs")).as("g"))
+        val hot = ex.groupBy("g").agg(count(lit(1)).as("df"))
+          .filter(col("df") > maxDf).select("g")
+        val hotByDoc = ex.join(hot, "g").groupBy("doc_id")
+          .agg(collect_list(col("g")).as("hh"))
+        hashed.join(hotByDoc, Seq("doc_id"), "left")
+          .withColumn("hh", coalesce(col("hh"), none))
+          .select(col("doc_id"), col("n"),
+            array_except(col("hs"), col("hh")).as("c"), col("hh"))
+      }
+    val beta = greatest(lit(1L),
+      ceil(lit(t) * col("n") - 1e-9) - size(col("hh")))
+    val pfx = greatest(lit(0L), size(col("c")) - beta + 1).cast("int")
+    val rows = split
+      .select(col("doc_id"), col("n"), size(col("hh")).as("nh"),
+        size(col("c")).as("nc"), pfx.as("pfx"),
+        posexplode(slice(col("c"), lit(1),
+          if (containment) size(col("c")) else pfx)).as(Seq("i", "g")))
+      .select(col("doc_id"), col("n"), col("nh"), col("nc"), col("g"),
+        (col("i") + 1).as("r"), (col("i") < col("pfx")).as("p"))
+    val need =
+      if (containment) ceil(lit(t) * least(col("a.n"), col("b.n")) - 1e-9)
+      else ceil(lit(t) / (1 + t) * (col("a.n") + col("b.n")) - 1e-9)
+    val cand = rows.as("a").join(rows.as("b"),
+        col("a.g") === col("b.g") && col("a.p") &&
+          (col("a.n") < col("b.n") ||
+            (col("a.n") === col("b.n") && col("a.doc_id") < col("b.doc_id"))) &&
+          least(col("a.nc") - col("a.r"), col("b.nc") - col("b.r")) + 1 +
+            least(col("a.nh"), col("b.nh")) >= need)
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
+    // ids are made canonical (id_a < id_b) only after the distinct: on
+    // the bare join ids it is partitioned like the join's doc-keyed
+    // input and needs no shuffle of its own
+    val inOrder = col("id_a") < col("id_b")
+    intersections(cand, hashed)
+      .select(least(col("id_a"), col("id_b")).as("id_a"),
+        greatest(col("id_a"), col("id_b")).as("id_b"), col("inter"),
+        when(inOrder, col("na")).otherwise(col("nb")).as("na"),
+        when(inOrder, col("nb")).otherwise(col("na")).as("nb"))
   }
 
   /** (doc_id, band, bkey) band table for a shingle-set table — the
@@ -493,9 +404,8 @@ object Dedup {
 
   /** Banding-recall AUDIT: how much of the exact near-dup truth does
     * the MinHash-LSH banding actually surface? One row — true pairs
-    * (every pair with Jaccard ≥ threshold, via the shingle-sharing
-    * candidate generator, which is EXHAUSTIVE for any threshold > 0:
-    * a pair with positive Jaccard shares a shingle), LSH band
+    * (every pair with Jaccard ≥ threshold, from the exact
+    * [[overlapPairs]] join), LSH band
     * candidates, verified LSH pairs, recall (found/true) and candidate
     * precision (found/candidates — the verify-cost efficiency).
     * Verified LSH pairs are a subset of the truth by construction
@@ -504,13 +414,13 @@ object Dedup {
     * This is the audit a curation team runs before trusting a banding
     * config at scale: the published (bands, rows) S-curve says what
     * recall SHOULD be at a given similarity; this measures it on real
-    * data. Cost is dominated by the exact baseline (the shingle-
-    * sharing pair scan, O(Σ df(g)²) pairs) — at corpus scale run it on
+    * data. Cost is dominated by the exact baseline (the prefix join,
+    * O(Σ df(g)²) pairs over prefix hashes) — at corpus scale run it on
     * a documented SAMPLE, the standard recall-audit protocol; the LSH
     * side costs what the production operator costs.
     *
-    * `maxDf` is the hot-shingle guard for that exact generator (the
-    * same DF-cap mechanics as [[ngramJaccardCapped]]): shingles shared
+    * `maxDf` is the hot-shingle guard for that exact join (the
+    * `maxDf` of [[ngramJaccard]]): shingles shared
     * by more than `maxDf` docs are excluded from CANDIDATE generation,
     * bounding the pair scan at maxDf² per shingle instead of letting
     * one boilerplate shingle square the corpus. A capped truth is an
@@ -542,26 +452,21 @@ object Dedup {
     val sh = shingleSets(base, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = bandTable(sh, numPerms, bands)
-    // ONE verify pass over the TAGGED UNION of both candidate streams
-    // (round 12, guide §1.2/§2.4): the exact-truth and LSH candidate
-    // sets overlap almost entirely (verified LSH pairs ⊆ truth by
-    // construction), yet the old shape deduped each stream separately
-    // and then ran verifyJaccard twice — two full shingle-fetch joins
-    // over near-identical pair sets. Tagging each RAW (pre-distinct)
-    // stream with its source and folding both through a single
-    // (id_a, id_b) aggregate replaces 2 distincts + 2 verifies + 3
-    // count aggregates + 2 crossJoins with 1 aggregate + 1 verify +
-    // 1 aggregate. max(flag) over the merged group ≡ set membership,
-    // so n_true / n_lsh_candidates / n_found are exactly the old
-    // counts (oracle hash unchanged).
+    // ONE verify pass over the TAGGED UNION of the raw LSH candidates
+    // and the (already verified) true pairs: one (id_a, id_b) aggregate
+    // dedups the LSH stream and merges the source flags (max(flag) over
+    // the merged group ≡ set membership), and one verify decides
+    // `found` for every LSH candidate, including those outside a capped
+    // truth.
     val lshRaw = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         lit(false).as("ex"), lit(true).as("ls"))
-    val exactRaw = cappedExactCandRaw(sh, maxDf)
+    val truth = jaccardOf(overlapPairs(sh, threshold, maxDf,
+        containment = false), threshold)
       .select(col("id_a"), col("id_b"), lit(true).as("ex"), lit(false).as("ls"))
-    val pairs = lshRaw.unionByName(exactRaw)
+    val pairs = lshRaw.unionByName(truth)
       .groupBy("id_a", "id_b")
       .agg(max(col("ex")).as("ex"), max(col("ls")).as("ls"))
     val inter = size(array_intersect(col("sa"), col("sb")))
@@ -586,36 +491,6 @@ object Dedup {
         when(col("n_lsh_candidates") > 0,
           Exact.round(col("n_found") / col("n_lsh_candidates").cast("double"), 6)))
     materializeThenRelease(result, Seq(sh))
-  }
-
-  /** Exhaustive (for positive Jaccard) shingle-sharing candidate pairs
-    * with the optional hot-shingle DF cap — the exact-truth generator
-    * shared by [[lshRecallAudit]] and [[bandingFrontier]]. */
-  private def cappedExactCand(sh: DataFrame, maxDf: Int): DataFrame =
-    cappedExactCandRaw(sh, maxDf).distinct()
-
-  /** [[cappedExactCand]] BEFORE the distinct — a pair appears once per
-    * shared under-cap shingle. [[lshRecallAudit]] folds this raw stream
-    * through its tagged-union aggregate so the dedup and the
-    * source-flag merge cost ONE exchange instead of two. */
-  private def cappedExactCandRaw(sh: DataFrame, maxDf: Int): DataFrame = {
-    val explodedAll = sh.select(col("doc_id"), explode(col("s")).as("g"))
-    val exploded =
-      if (maxDf == Int.MaxValue) explodedAll
-      else {
-        // semi-join against the under-cap shingle census rather than a
-        // window over the explode: the census is map-side-combined and
-        // shingle-sized, and the filter prunes hot shingles BEFORE the
-        // pair self-join sees them.
-        val cool = explodedAll.groupBy(col("g"))
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= maxDf)
-          .select(col("g"))
-        explodedAll.join(cool, Seq("g"), "left_semi")
-      }
-    exploded.as("a").join(exploded.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
   }
 
   /** Banding AUTO-TUNE frontier (the round-10 verdict's follow-through
@@ -653,7 +528,8 @@ object Dedup {
     // both columns from the same cached rows.
     val both = withMinHash(shingleSets(docs, idCol, textCol), numPerms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nTrue = verifyJaccard(cappedExactCand(both, maxDf), both, threshold)
+    val nTrue = jaccardOf(overlapPairs(both.select(col("doc_id"), col("s")),
+        threshold, maxDf, containment = false), threshold)
       .agg(count(lit(1)).as("n_true"))
     // NESTED-CHAIN fast path (round 12, guide §1.2): when every bands
     // choice divides the finest one, the candidate sets are nested
@@ -733,16 +609,9 @@ object Dedup {
     * the direct join and matches).
     */
   def simHash(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", maxHamming: Int = 5,
-      cache: Boolean = true): DataFrame = {
+      textCol: String = "text", maxHamming: Int = 5): DataFrame = {
     require(maxHamming <= 5, "6x10-bit banding guarantees recall only to Hamming 5")
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    val simBase = docs
-      .repartition(shufflePartitions(docs), col(idCol)) // compute parallelism (see shingleSets)
-      .select(col(idCol).as("doc_id"),
-        transform(tokens(col(textCol)), t => hash60(t)).as("hs"))
-      .select(col("doc_id"),
-        column(graft.functions.SimHash60(expression(col("hs")))).as("sh"))
     // The signature pass (tokenize + 60-bit majority vote per doc) is
     // the dominant cost and feeds BOTH sides of the band self-join.
     // Exchange reuse does not always cover it: when AQE picks a
@@ -750,9 +619,13 @@ object Dedup {
     // scan+SimHash subtree. Persisting the signature table — 16 bytes a
     // doc — computes it exactly once at any corpus size. Released once
     // the output-sized result is materialized (see minHashLsh).
-    val sim = if (cache)
-      simBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else simBase
+    val sim = docs
+      .repartition(shufflePartitions(docs), col(idCol)) // compute parallelism (see shingleSets)
+      .select(col(idCol).as("doc_id"),
+        transform(tokens(col(textCol)), t => hash60(t)).as("hs"))
+      .select(col("doc_id"),
+        column(graft.functions.SimHash60(expression(col("hs")))).as("sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = sim
       .select(col("doc_id"), col("sh"),
         explode(sequence(lit(0), lit(5))).as("band"))
@@ -774,7 +647,7 @@ object Dedup {
         expr("CAST(bit_count(a.sh ^ b.sh) AS BIGINT)").as("hamming"))
       .distinct()
       .orderBy("id_a", "id_b")
-    if (cache) materializeThenRelease(result, Seq(sim)) else result
+    materializeThenRelease(result, Seq(sim))
   }
 
   /** Sorted-neighborhood near-dup pairs (Hernández & Stolfo, SIGMOD'95
@@ -785,8 +658,8 @@ object Dedup {
     * exact shingle Jaccard.
     *
     * Candidate count is exactly N·window by construction — immune to
-    * hot shingles and hot bands (the blowup the capped/PPJoin variants
-    * exist to contain) at the price of recall limited to what the sort
+    * hot shingles and hot bands (the blowup the prefix filter and
+    * `maxDf` of [[ngramJaccard]] contain) at the price of recall limited to what the sort
     * key co-locates; production merge/purge runs several passes with
     * different keys and unions the pairs.
     *
@@ -864,38 +737,16 @@ object Dedup {
         greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
   }
 
-  /** Exact-Jaccard verify over an arbitrary candidate pair set, on
-    * SORTED 60-BIT HASH ARRAYS with the native linear merge (the
-    * PPJoin machinery): 8-byte longs + one merge per pair keep the
-    * verify narrow — carrying string shingle arrays through the verify
-    * join is the measured knee of the pre-PPJoin prefix path. Same
-    * 2^-60 collision convention as the rest of the shingle family.
-    * Candidates here need not share a shingle (unlike the shingle-join
-    * families), so empty shingle sets are dropped from the verify feed
-    * before they can hit the 0/0 Jaccard edge (engine-divergent). */
+  /** Exact Jaccard ≥ `threshold` of arbitrary candidate pairs, via the
+    * [[overlapPairs]] verify. Candidates here need not share a shingle,
+    * so empty shingle sets are dropped before they can hit the 0/0
+    * Jaccard edge (engine-divergent). */
   private def verifyCandidatesJaccard(docs: DataFrame, idCol: String,
-      textCol: String, cand: DataFrame, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    val sh = shingleSets(docs, idCol, textCol)
-      .select(col("doc_id"),
-        column(graft.functions.SortedHash60Array(expression(col("s"))))
-          .as("hs"))
-      .withColumn("n", size(col("hs")))
-      .filter(col("n") > 0)
-    val inter = column(graft.functions.SortedLongIntersectCount(
-      expression(col("ha")), expression(col("hb"))))
-    cand
-      .join(sh.select(col("doc_id").as("id_a"), col("hs").as("ha"),
-        col("n").as("na")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("hs").as("hb"),
-        col("n").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"), inter.as("i"), col("na"), col("nb"))
-      .select(col("id_a"), col("id_b"),
-        Exact.round(col("i") / (col("na") + col("nb") - col("i")).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      textCol: String, cand: DataFrame, threshold: Double): DataFrame =
+    jaccardOf(intersections(cand,
+        hashedSets(shingleSets(docs, idCol, textCol)).filter(col("n") > 0)),
+      threshold)
       .orderBy("id_a", "id_b")
-  }
 
   /** Survivorship — the last rung of the record-linkage ladder the
     * dedup family climbs (blocking → matching → clustering →
@@ -904,11 +755,10 @@ object Dedup {
     * merge/purge "most complete record wins" convention), with the
     * per-cluster keep/drop accounting a curation report needs.
     *
-    * Pairs come from [[ngramJaccardPrefix]] (identical output to the
-    * full shingle join, strictly fewer candidates — survivorship
-    * corpora are BY DEFINITION dup-heavy, the exact case the raw
+    * Pairs come from [[ngramJaccard]] (prefix-filtered — survivorship
+    * corpora are BY DEFINITION dup-heavy, the exact case a raw
     * shared-shingle join quadratics on: the 10× replicated-twin stress
-    * measured 183 s on the raw join vs the prefix path below),
+    * measured 183 s on the raw join vs the prefix path),
     * clusters from [[duplicateClusters]]; unpaired docs are singleton
     * clusters of themselves. The survivor election is ONE
     * map-side-combined aggregate — `max(struct(len, −id))` — never a
@@ -918,7 +768,7 @@ object Dedup {
     * chars_dropped), one row per cluster. */
   def survivorship(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.5): DataFrame = {
-    val pairs = ngramJaccardPrefix(docs, idCol, textCol, threshold)
+    val pairs = ngramJaccard(docs, idCol, textCol, threshold)
       .select("id_a", "id_b")
     val clusters = duplicateClusters(pairs)
     docs.select(col(idCol).as("doc_id"),

@@ -164,12 +164,11 @@ object TrainingData extends QueryPack {
     Dedup.sortedNeighborhoodMulti(Tables.documents(spark, dir))
   }
 
-  /** Prefix-filtered Jaccard (AllPairs/PPJoin candidate generation):
-    * IDENTICAL output contract to `dedup_ngram_jaccard` — the oracle is
-    * the same full-join formulation, which is exactly the point: the
-    * prefix filter is a pure candidate-pruning optimization whose
-    * correctness (no false negatives) the oracle gate proves. See
-    * [[graft.ops.Dedup.ngramJaccardPrefix]]. */
+  /** Prefix-filtered Jaccard (AllPairs/PPJoin candidate generation),
+    * the same operator as `dedup_ngram_jaccard`
+    * ([[graft.ops.Dedup.ngramJaccard]]). The oracle is the full-join
+    * formulation, so the gate proves that the prefix filter, a pure
+    * candidate-pruning step, admits no false negatives. */
   val dedupNgramPrefix = GraftQuery(
     "dedup_ngram_prefix",
     Some(s"""
@@ -180,7 +179,7 @@ object TrainingData extends QueryPack {
          ROUND(len(list_intersect(x.s, y.s)) / CAST(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)) AS DOUBLE), 6) AS jaccard
        FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b)
       SELECT * FROM j WHERE jaccard >= 0.5 ORDER BY id_a, id_b""".trim)) { (spark, dir) =>
-    Dedup.ngramJaccardPrefix(Tables.documents(spark, dir))
+    Dedup.ngramJaccard(Tables.documents(spark, dir))
   }
 
   /** Asymmetric containment near-dups: subset/quote duplication that
@@ -212,11 +211,11 @@ object TrainingData extends QueryPack {
          ROUND(len(list_intersect(x.s, y.s)) / CAST(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)) AS DOUBLE), 6) AS jaccard
        FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b)
       SELECT * FROM j WHERE jaccard >= 0.5 ORDER BY id_a, id_b""".trim)) { (spark, dir) =>
-    Dedup.ngramJaccardCapped(Tables.documents(spark, dir))
+    Dedup.ngramJaccard(Tables.documents(spark, dir), maxDf = 20)
   }
 
   /** Capped-candidate containment: the boilerplate-heavy-corpus form of
-    * dedup_containment (see [[graft.ops.Dedup.ngramContainmentCapped]]).
+    * dedup_containment (see [[graft.ops.Dedup.ngramContainment]]).
     * Oracle applies the identical df≤20 candidate cap, so the expected
     * pair set is the capped one by construction. */
   val dedupContainmentCapped = GraftQuery(
@@ -233,7 +232,7 @@ object TrainingData extends QueryPack {
        FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b)
       SELECT * FROM j WHERE greatest(cont_a, cont_b) >= 0.8 ORDER BY id_a, id_b""".trim)) {
     (spark, dir) =>
-    Dedup.ngramContainmentCapped(Tables.documents(spark, dir))
+    Dedup.ngramContainment(Tables.documents(spark, dir), maxDf = 20)
   }
 
   val dedupMinhash = GraftQuery(
@@ -1599,7 +1598,7 @@ object TrainingData extends QueryPack {
     * near-duplicate of a TRAIN document — the benchmark-contamination
     * check a training pipeline must run before the eval numbers mean
     * anything. Near-dup pairs come from the prefix-filtered Jaccard
-    * path ([[graft.ops.Dedup.ngramJaccardPrefix]] — the scale-safe
+    * path ([[graft.ops.Dedup.ngramJaccard]] — the scale-safe
     * candidate generator), then one broadcast-sized join tags each side
     * with its split; pairs with exactly one train side are leaks
     * (val↔test cross-pairs are benign for training and excluded).
@@ -1632,7 +1631,7 @@ object TrainingData extends QueryPack {
     val docs = Tables.documents(spark, dir)
     val sp = graft.ops.Splits.assign(docs, "doc_id")
       .select(col("doc_id"), col("split"))
-    val pairs = Dedup.ngramJaccardPrefix(docs)
+    val pairs = Dedup.ngramJaccard(docs)
     pairs
       .join(sp.select(col("doc_id").as("id_a"), col("split").as("split_a")), "id_a")
       .join(sp.select(col("doc_id").as("id_b"), col("split").as("split_b")), "id_b")

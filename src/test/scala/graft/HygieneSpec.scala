@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.{Dedup, Similarity, Upsert}
 
@@ -48,15 +49,31 @@ class HygieneSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
+  // The two capped tests keep their names, from when the capped forms
+  // were the separate ops ngramJaccardCapped / ngramContainmentCapped.
   test("ngramJaccardCapped releases the exploded-shingle and tag-join " +
       "caches") {
-    val leaked = leakedBlocks(Dedup.ngramJaccardCapped(docs))
+    val leaked = leakedBlocks(Dedup.ngramJaccard(docs, maxDf = 20))
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
   test("ngramContainmentCapped releases its working caches") {
-    val leaked = leakedBlocks(Dedup.ngramContainmentCapped(docs))
+    val leaked = leakedBlocks(Dedup.ngramContainment(docs, maxDf = 20))
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+  }
+
+  test("ngramJaccard is lazy: building it, capped or not, runs no Spark " +
+      "action and persists nothing") {
+    var built = Seq.empty[DataFrame]
+    val leaked = leakedBy {
+      val actions = actionsOf {
+        built = Seq(Dedup.ngramJaccard(docs),
+          Dedup.ngramJaccard(docs, maxDf = 20))
+      }
+      assert(actions.isEmpty, s"actions while building: $actions")
+    }
+    assert(leaked.isEmpty, s"persisted while building: $leaked")
+    assert(built.forall(_.storageLevel == StorageLevel.NONE))
   }
 
   test("dedupCascade releases everything it created: the signature " +
@@ -78,10 +95,17 @@ class HygieneSpec extends SparkTestBase {
       "release leaves zero blocks (round 13: the width-filtered basket " +
       "table is persisted across its three consumers above the " +
       "plan-stats gate — forced on here)") {
-    val leaked = leakedBlocks(graft.ops.Association.basketRules(
-      Tables.lineitem(spark, sfDir), "l_orderkey", "l_partkey",
-      minSupport = 3, maxBasket = 16, cacheBasketsMinBytes = 0L))
+    var level = StorageLevel.NONE
+    val leaked = leakedBlocks {
+      val out = graft.ops.Association.basketRules(
+        Tables.lineitem(spark, sfDir), "l_orderkey", "l_partkey",
+        minSupport = 3, maxBasket = 16, cacheBasketsMinBytes = 0L)
+      level = out.storageLevel
+      out
+    }
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+    // the returned frame, which the caller owns, is held serialized
+    assert(level == StorageLevel.MEMORY_AND_DISK_SER, s"result level: $level")
   }
 
   test("basketRules below the gate creates no persistent blocks " +
@@ -97,7 +121,6 @@ class HygieneSpec extends SparkTestBase {
   test("cache=false paths create no persistent blocks at all") {
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     Dedup.minHashLsh(docs, cache = false).count()
-    Dedup.ngramJaccardCapped(docs, cache = false).count()
     val after = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(after.isEmpty, s"cache=false persisted: $after")
   }

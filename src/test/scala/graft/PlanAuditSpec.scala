@@ -101,11 +101,9 @@ class PlanAuditSpec extends SparkTestBase {
     // hint-freedom: with size-based broadcasts killed, NO broadcast may
     // survive in the capped path — the hot set and the doc-hot subsets
     // must shuffle (a hint would pin a corpus-growing relation to the
-    // driver). cache=false AND clearCache first: the gated run above
-    // leaves its materialized RESULT cached (the round-9 lifecycle
-    // contract), and the CacheManager would substitute that cached
-    // fragment — compiled under the default thresholds — for this
-    // identical logical plan, masking the join shapes under audit.
+    // driver). clearCache first: a cached fragment of an identical
+    // logical plan, compiled under the default thresholds, would mask
+    // the join shapes under audit.
     spark.catalog.clearCache()
     val conf = spark.conf
     val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
@@ -113,8 +111,8 @@ class PlanAuditSpec extends SparkTestBase {
     val saved = keys.map(k => k -> conf.getOption(k))
     try {
       keys.foreach(conf.set(_, "-1"))
-      val df = graft.ops.Dedup.ngramJaccardCapped(
-        Tables.documents(spark, sfDir), cache = false)
+      val df = graft.ops.Dedup.ngramJaccard(
+        Tables.documents(spark, sfDir), maxDf = 20)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)

@@ -258,4 +258,36 @@ class PropertySpec extends SparkTestBase {
       }
     }
   }
+
+  test("packPairs=false returns the packed default's rows for basketRules " +
+      "and bipartiteLinkPredict; an id >= 2^31 fails naming the operator") {
+    import graft.ops.{Association, Graph}
+    val li = Tables.lineitem(spark, sfDir)
+    def rules(pack: Boolean) = Association.basketRules(li, "l_orderkey",
+        "l_partkey", minSupport = 2, maxBasket = 16, packPairs = pack)
+      .collect().toSet
+    def links(pack: Boolean) = Graph.bipartiteLinkPredict(li, "l_partkey",
+        "l_suppkey", minCommon = 2, packPairs = pack)
+      .collect().toSet
+    val packedRules = rules(true)
+    assert(packedRules.nonEmpty, "fixture yields no rules")
+    assert(rules(false) == packedRules, "basketRules: struct path != packed")
+    val packedLinks = links(true)
+    assert(packedLinks.nonEmpty, "fixture yields no links")
+    assert(links(false) == packedLinks,
+      "bipartiteLinkPredict: struct path != packed")
+    // one id just past the packable domain [0, 2^31)
+    val bad = Seq((1L, 1L << 31), (1L, 2L), (2L, 2L)).toDF("b", "i")
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    for ((op, run) <- Seq[(String, () => Unit)](
+        "basketRules" -> (() =>
+          Association.basketRules(bad, "b", "i", minSupport = 1).collect()),
+        "bipartiteLinkPredict" -> (() =>
+          Graph.bipartiteLinkPredict(bad, "b", "i", minCommon = 1).collect()))) {
+      val ex = intercept[Exception](run())
+      assert(msgs(ex).exists(m => m.contains(op) && m.contains("packPairs=false")),
+        s"$op: expected the packed-domain error, got: $ex")
+    }
+  }
 }

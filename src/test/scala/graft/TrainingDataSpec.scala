@@ -135,36 +135,6 @@ class TrainingDataSpec extends SparkTestBase {
     }
   }
 
-  test("ngramJaccardPrefix equals the full-join variant exactly") {
-    // planted near-dups at several overlap levels straddling t = 0.5,
-    // plus unrelated docs — prefix filtering must drop candidates, not
-    // results
-    val d = docs(
-      (Seq(
-        1L -> baseWords.mkString(" "),
-        2L -> perturbed(20),            // high-Jaccard pair with 1
-        3L -> perturbed(5),             // and with each other
-        4L -> (baseWords.take(20) ++ (1 to 20).map(i => s"z$i")).mkString(" "),
-        5L -> (200 to 240).map(i => s"w$i").mkString(" ")) ++
-        (10L to 29L).map(i =>
-          i -> (0 to 35).map(j => s"d${i}t$j").mkString(" "))): _*)
-    for (t <- Seq(0.3, 0.5, 0.8)) {
-      val full = Dedup.ngramJaccard(d, threshold = t).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pfx = Dedup.ngramJaccardPrefix(d, threshold = t).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(pfx == full, s"threshold $t")
-      if (t == 0.5) assert(full.exists(_._1 == 1L))
-    }
-    // and on the real sf0.001 corpus
-    val real = Tables.documents(spark, sfDir)
-    val fullR = Dedup.ngramJaccard(real).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val pfxR = Dedup.ngramJaccardPrefix(real).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pfxR == fullR)
-  }
-
   test("split leakage: a train/test near-dup pair is flagged, " +
       "within-split and val/test dups are not") {
     import graft.ops.Splits
@@ -183,7 +153,7 @@ class TrainingDataSpec extends SparkTestBase {
       va -> perturbed(21),                   // val/test + val/train dups
       999999L -> (500 to 540).map(i => s"q$i").mkString(" "))
     val sp = Splits.assign(d, "doc_id").select(col("doc_id"), col("split"))
-    val pairs = Dedup.ngramJaccardPrefix(d)
+    val pairs = Dedup.ngramJaccard(d)
     val leaks = pairs
       .join(sp.select(col("doc_id").as("id_a"), col("split").as("split_a")), "id_a")
       .join(sp.select(col("doc_id").as("id_b"), col("split").as("split_b")), "id_b")
@@ -219,6 +189,7 @@ class TrainingDataSpec extends SparkTestBase {
     assert(jac.isEmpty, "low-union subset pair must be invisible to Jaccard")
   }
 
+  // named for the capped op that is now ngram*(…, maxDf)
   test("ngramJaccardCapped drops only hot-shingle candidates; verify stays exact") {
     // docs 1..2: a genuine near-dup pair via RARE shingles.
     // docs 10..19: each unique EXCEPT a shared boilerplate sentence whose
@@ -229,7 +200,7 @@ class TrainingDataSpec extends SparkTestBase {
       (Seq(1L -> baseWords.mkString(" "), 2L -> perturbed(20)) ++
         (10L to 19L).map(i =>
           i -> s"$boiler ${(1 to 30).map(j => s"u${i}w$j").mkString(" ")}")): _*)
-    val capped = Dedup.ngramJaccardCapped(d, threshold = 0.05, dfCap = 5).collect()
+    val capped = Dedup.ngramJaccard(d, threshold = 0.05, maxDf = 5).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     val uncapped = Dedup.ngramJaccard(d, threshold = 0.05).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
@@ -238,7 +209,7 @@ class TrainingDataSpec extends SparkTestBase {
     assert(!capped.exists(p => p._1 >= 10L), "hot-shingle pairs must be dropped")
     assert(capped.subsetOf(uncapped), "cap may only remove pairs, never add")
     // verify is exact: the surviving pair's jaccard matches the uncapped one
-    val jCapped = Dedup.ngramJaccardCapped(d, threshold = 0.05, dfCap = 5)
+    val jCapped = Dedup.ngramJaccard(d, threshold = 0.05, maxDf = 5)
       .filter(col("id_a") === 1L).head().getAs[Double]("jaccard")
     val jFull = Dedup.ngramJaccard(d, threshold = 0.05)
       .filter(col("id_a") === 1L).head().getAs[Double]("jaccard")
@@ -304,6 +275,7 @@ class TrainingDataSpec extends SparkTestBase {
     assert(mGroups.contains(None), "NULL source must receive a mix quota")
   }
 
+  // named for the capped op that is now ngram*(…, maxDf)
   test("ngramContainmentCapped: same pairs and exact values as the " +
       "uncapped op when shared shingles are cold; boilerplate capped") {
     val small = (1 to 10).map(i => s"w$i").mkString(" ")
@@ -314,7 +286,7 @@ class TrainingDataSpec extends SparkTestBase {
     val filler = (10L to 39L).map(i => (i, s"unique u${i}a u${i}b u${i}c " + boiler))
     val d = docs(Seq((1L, small), (2L, big), (3L, "totally different words here"))
       ++ filler: _*)
-    val capped = Dedup.ngramContainmentCapped(d, threshold = 0.8).collect()
+    val capped = Dedup.ngramContainment(d, threshold = 0.8, maxDf = 20).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     // the contained pair survives (its shingles are cold) with the
     // identical exact values the uncapped op reports
