@@ -245,9 +245,13 @@ object Dedup {
     * shares a cool shingle (document frequency ≤ `maxDf`) is among them;
     * callers apply the rounded measure.
     *
-    * Measures. Jaccard J = I/(na+nb−I) ≥ t needs I ≥ t·max(na, nb), so
-    * I ≥ ⌈t·|x|⌉ for both docs x. Containment max(I/na, I/nb) ≥ t needs
-    * I ≥ t·min(na, nb), a bound on the SMALLER doc only (smaller by
+    * Measures. Callers keep a pair when its measure ROUNDED to 6
+    * decimals (HALF_UP) is ≥ t, and that holds for some values just
+    * below t (2/3 rounds up to 0.666667), so every bound here is taken at
+    * t' = t − 5e-7: round6(m) ≥ t implies m ≥ t'. Jaccard
+    * J = I/(na+nb−I) ≥ t' needs I ≥ t'·max(na, nb), so I ≥ ⌈t'·|x|⌉ for
+    * both docs x. Containment max(I/na, I/nb) ≥ t' needs
+    * I ≥ t'·min(na, nb), a bound on the SMALLER doc only (smaller by
     * (n, doc_id)).
     *
     * Prefix filter (AllPairs, Bayardo, Ma & Srikant, WWW'07; PPJoin,
@@ -255,12 +259,12 @@ object Dedup {
     * ascending; H_x are its hot ones. A cool hash is cool in every doc,
     * so the pair's shared cool hashes are C_a ∩ C_b and
     * |C_a∩C_b| ≥ I − |H_x| for either doc x, and ≥ 1 by the cap rule.
-    * With β_x = max(1, ⌈t·|x|⌉ − |H_x|), at least β_x shared cool hashes
+    * With β_x = max(1, ⌈t'·|x|⌉ − |H_x|), at least β_x shared cool hashes
     * sit at or after the FIRST one, so it lies within the first
     * |C_x| − β_x + 1 of C_x (clamped at 0). Joining prefixes on the hash
     * therefore finds every such pair; for containment only the smaller
     * doc is prefixed and the larger joins with its full cool set.
-    * Uncapped, H = ∅ and the prefix is the classic |x| − ⌈t·|x|⌉ + 1.
+    * Uncapped, H = ∅ and the prefix is the classic |x| − ⌈t'·|x|⌉ + 1.
     * Without the −|H_x| term the bound is wrong: the first shared
     * shingle may be hot, which pushes the first shared cool one past
     * the prefix.
@@ -269,13 +273,11 @@ object Dedup {
     * cool positions (ra, rb) bounds the shared cool hashes from it on by
     * min(|C_a|−ra, |C_b|−rb) + 1, so I ≤ that + min(|H_a|, |H_b|) at the
     * pair's first match. A row is kept when that reaches the measure's
-    * required overlap (Jaccard ⌈t(na+nb)/(1+t)⌉, containment
-    * ⌈t·min(na, nb)⌉); later matches only shrink the bound, so per-row
+    * required overlap (Jaccard ⌈t'(na+nb)/(1+t')⌉, containment
+    * ⌈t'·min(na, nb)⌉); later matches only shrink the bound, so per-row
     * filtering keeps a pair iff its first match passes. Every bound
-    * subtracts 1e-9 before its ceil, so a boundary-exact pair (t·|x| an
-    * integer that floating point lands just above) is never pruned. The
-    * rounded measure cannot cross the 6-decimal edge either: it is a
-    * rational with denominator ≤ na+nb.
+    * subtracts 1e-9 before its ceil, so a boundary-exact pair (t'·|x| an
+    * integer that floating point lands just above) is never pruned.
     *
     * Plan: uncapped, the hash table feeds the prefix explode and both
     * verify fetches. Capped, a map-side-combined DF census over the
@@ -304,8 +306,9 @@ object Dedup {
           .select(col("doc_id"), col("n"),
             array_except(col("hs"), col("hh")).as("c"), col("hh"))
       }
+    val tl = t - 5e-7
     val beta = greatest(lit(1L),
-      ceil(lit(t) * col("n") - 1e-9) - size(col("hh")))
+      ceil(lit(tl) * col("n") - 1e-9) - size(col("hh")))
     val pfx = greatest(lit(0L), size(col("c")) - beta + 1).cast("int")
     val rows = split
       .select(col("doc_id"), col("n"), size(col("hh")).as("nh"),
@@ -315,8 +318,8 @@ object Dedup {
       .select(col("doc_id"), col("n"), col("nh"), col("nc"), col("g"),
         (col("i") + 1).as("r"), (col("i") < col("pfx")).as("p"))
     val need =
-      if (containment) ceil(lit(t) * least(col("a.n"), col("b.n")) - 1e-9)
-      else ceil(lit(t) / (1 + t) * (col("a.n") + col("b.n")) - 1e-9)
+      if (containment) ceil(lit(tl) * least(col("a.n"), col("b.n")) - 1e-9)
+      else ceil(lit(tl) / (1 + tl) * (col("a.n") + col("b.n")) - 1e-9)
     val cand = rows.as("a").join(rows.as("b"),
         col("a.g") === col("b.g") && col("a.p") &&
           (col("a.n") < col("b.n") ||
@@ -457,7 +460,9 @@ object Dedup {
     // dedups the LSH stream and merges the source flags (max(flag) over
     // the merged group ≡ set membership), and one verify decides
     // `found` for every LSH candidate, including those outside a capped
-    // truth.
+    // truth. The true pairs pass this verify a second time; they are
+    // output-sized, so they are not split off the merged pairs (which
+    // would take a second aggregate).
     val lshRaw = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))

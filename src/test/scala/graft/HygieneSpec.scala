@@ -49,8 +49,6 @@ class HygieneSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
-  // The two capped tests keep their names, from when the capped forms
-  // were the separate ops ngramJaccardCapped / ngramContainmentCapped.
   test("ngramJaccardCapped releases the exploded-shingle and tag-join " +
       "caches") {
     val leaked = leakedBlocks(Dedup.ngramJaccard(docs, maxDf = 20))

@@ -52,19 +52,21 @@ class NearDupJoinSpec extends SparkTestBase {
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Checks both ops against the reference at every (t, maxDf); returns
-    * the uncapped Jaccard reference rows, for vacuity checks. */
-  private def checkAll(d: DataFrame): Seq[(Long, Long, Double)] = {
+    * the uncapped Jaccard reference rows at `ts.head`, for vacuity
+    * checks. */
+  private def checkAll(d: DataFrame, ts: Seq[Double] = thresholds):
+      Seq[(Long, Long, Double)] = {
     var uncapped = Seq.empty[(Long, Long, Double)]
     for (maxDf <- caps) {
       val ref = reference(d, maxDf)
-      for (t <- thresholds) {
+      for (t <- ts) {
         val wantJ = ref.map { case (a, b, i, na, nb) =>
           (a, b, round6(i / (na + nb - i).toDouble)) }.filter(_._3 >= t)
         val gotJ = Dedup.ngramJaccard(d, threshold = t, maxDf = maxDf)
           .as[(Long, Long, Double)].collect().toSeq
         assert(gotJ == wantJ, s"ngramJaccard t=$t maxDf=$maxDf: " +
           s"missing ${wantJ.diff(gotJ)}, extra ${gotJ.diff(wantJ)}")
-        if (maxDf == Int.MaxValue && t == thresholds.head) uncapped = wantJ
+        if (maxDf == Int.MaxValue && t == ts.head) uncapped = wantJ
         val wantC = ref.map { case (a, b, i, na, nb) =>
           (a, b, round6(i / na.toDouble), round6(i / nb.toDouble)) }
           .filter(p => math.max(p._3, p._4) >= t)
@@ -157,6 +159,30 @@ class NearDupJoinSpec extends SparkTestBase {
       "the all-pairs reference") {
     val uncapped = checkAll(Tables.documents(spark, sfDir))
     assert(uncapped.nonEmpty, "sf0.001 corpus has no near-dup pair")
+  }
+
+  test("a threshold the rounded measure reaches from below: pairs whose " +
+      "exact measure is just under t but rounds to t are kept") {
+    // t = 0.666667: Jaccard 2/3 (2 of 2 and 3 shingles) and containment
+    // 2/3 (2 of the small doc's 3 shingles) round up to t. t = 0.571429:
+    // Jaccard 4/7 (4 shared, 5 and 6 shingles) rounds up to t. Four
+    // namespaces give four hash orders; a hot run adds a capped case.
+    val rows = ArrayBuffer.empty[(Long, String)]
+    def add(toks: Seq[String]): Unit = rows += ((rows.size + 1L) -> toks.mkString(" "))
+    def run(tag: String, n: Int): Seq[String] = (1 to n).map(j => s"$tag.$j")
+    for (ns <- 1 to 4) {
+      add(run(s"j$ns", 4))
+      add(run(s"j$ns", 5))
+      add(run(s"c$ns", 4) :+ s"c$ns.s")
+      add(run(s"c$ns", 4) ++ run(s"c$ns.l", 6))
+      add(run(s"q$ns", 7))
+      add(run(s"q$ns", 6) ++ run(s"q$ns.b", 2))
+      add(run("hot", 3) ++ run(s"h$ns", 4))
+      add(run("hot", 3) ++ run(s"h$ns", 5))
+    }
+    val uncapped = checkAll(rows.toSeq.toDF("doc_id", "text"),
+      Seq(0.666667, 0.571429))
+    assert(uncapped.count(_._3 == 0.666667) >= 4, s"no 2/3 pair: $uncapped")
   }
 
   test("empty input yields no pairs, capped or not") {

@@ -189,7 +189,6 @@ class TrainingDataSpec extends SparkTestBase {
     assert(jac.isEmpty, "low-union subset pair must be invisible to Jaccard")
   }
 
-  // named for the capped op that is now ngram*(…, maxDf)
   test("ngramJaccardCapped drops only hot-shingle candidates; verify stays exact") {
     // docs 1..2: a genuine near-dup pair via RARE shingles.
     // docs 10..19: each unique EXCEPT a shared boilerplate sentence whose
@@ -275,7 +274,6 @@ class TrainingDataSpec extends SparkTestBase {
     assert(mGroups.contains(None), "NULL source must receive a mix quota")
   }
 
-  // named for the capped op that is now ngram*(…, maxDf)
   test("ngramContainmentCapped: same pairs and exact values as the " +
       "uncapped op when shared shingles are cold; boilerplate capped") {
     val small = (1 to 10).map(i => s"w$i").mkString(" ")
