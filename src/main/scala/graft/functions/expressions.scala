@@ -433,90 +433,17 @@ object StableHash60 {
   }
 }
 
-/** Argmin codeword assignment against a DRIVER-RESIDENT codebook (the
-  * Lloyd-training hot loop): for subspace `s` (second child), return the
-  * cid minimizing |c|² − 2·(vs·c) over `codebook(s)`, ties to the
-  * smallest cid. A compact generated loop (JIT-friendly, stays inside
-  * WSCG) — the unrolled `least(struct(...))` formulation it replaces
-  * generated a method past the JIT's size threshold and ran in the
-  * bytecode interpreter, ~100× slower. Distances compare exact-IEEE
-  * (no round-to-6): this path backs rows-only-gated trained codebooks,
-  * not the cross-engine-rounded oracle-gated [[graft.ops.Similarity]]
-  * `pqEncode` formulation. `sq` (per-codeword |c|²) is precomputed
-  * driver-side with the same sequential fold as `dot(c, c)`. */
-case class NearestCodeword(left: Expression, right: Expression,
-    codebook: Array[Array[Array[Double]]], sq: Array[Array[Double]])
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_nearest_codeword"
-
-  override def nullSafeEval(a: Any, sAny: Any): Any = {
-    val vs = a.asInstanceOf[ArrayData]
-    val s = sAny.asInstanceOf[Int]
-    val cws = codebook(s)
-    val sqs = sq(s)
-    var best = 0
-    var bestD = Double.PositiveInfinity
-    var j = 0
-    while (j < cws.length) {
-      val cw = cws(j)
-      var acc = 0.0
-      var i = 0
-      val n = math.min(vs.numElements(), cw.length)
-      while (i < n) { acc += vs.getDouble(i) * cw(i); i += 1 }
-      val d = sqs(j) - 2.0 * acc
-      if (d < bestD) { bestD = d; best = j }
-      j += 1
-    }
-    best
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, s) => {
-      val cbRef = ctx.addReferenceObj("codebook", codebook, "double[][][]")
-      val sqRef = ctx.addReferenceObj("sq", sq, "double[][]")
-      val cws = ctx.freshName("cws")
-      val sqs = ctx.freshName("sqs")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val cw = ctx.freshName("cw")
-      s"""
-         |final double[][] $cws = $cbRef[$s];
-         |final double[] $sqs = $sqRef[$s];
-         |int $best = 0;
-         |double $bestD = Double.POSITIVE_INFINITY;
-         |for (int $j = 0; $j < $cws.length; $j++) {
-         |  final double[] $cw = $cws[$j];
-         |  double $acc = 0.0;
-         |  final int $n = java.lang.Math.min($a.numElements(), $cw.length);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $a.getDouble($i) * $cw[$i];
-         |  }
-         |  final double $d = $sqs[$j] - 2.0 * $acc;
-         |  if ($d < $bestD) { $bestD = $d; $best = $j; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestCodeword =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Argmin codeword assignment against a RUNTIME packed codebook column
   * (array<struct<cid:int, cs:array<double>>>, cid-sorted — the
   * per-(cell, subspace) broadcastable form): returns the entry's cid
   * minimizing |cs|² − 2·(vs·cs), first-wins on ties (= smallest cid).
-  * Null for an empty array. Same compact-loop/exact-IEEE rationale as
-  * [[NearestCodeword]]; |cs|² is recomputed per row with the sequential
-  * `dot(cs, cs)` fold. */
+  * Null for an empty array. A compact generated loop (JIT-friendly,
+  * stays inside WSCG — an unrolled `least(struct(...))` generates a
+  * method past the JIT's size threshold and runs in the bytecode
+  * interpreter). Distances compare exact-IEEE (no round-to-6): this
+  * backs rows-only-gated trained codebooks, not the cross-engine-rounded
+  * oracle-gated `pqEncode`. |cs|² is recomputed per row with the
+  * sequential `dot(cs, cs)` fold. */
 case class NearestPackedCodeword(left: Expression, right: Expression)
     extends BinaryExpression {
 

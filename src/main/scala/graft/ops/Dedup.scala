@@ -214,12 +214,16 @@ object Dedup {
     * 60-bit hashes ([[graft.functions.SortedHash60Array]], a narrow
     * per-row map) and its size. Join keys and verify payloads are 8-byte
     * longs, never shingle strings (2^-60 collisions, the family-wide
-    * shingle-key convention). */
+    * shingle-key convention). `n` is non-nullable (0 for a null text,
+    * which has no shingle rows anyway): a nullable `n` lets Catalyst
+    * infer `isnotnull(n)` from the joins on it and push that filter
+    * below [[shingleSets]]' repartition, where it reruns the whole
+    * shingle + hash pass in the scan stage. */
   private def hashedSets(sh: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     sh.select(col("doc_id"),
         column(graft.functions.SortedHash60Array(expression(col("s")))).as("hs"))
-      .withColumn("n", size(col("hs")))
+      .withColumn("n", coalesce(size(col("hs")), lit(0)))
   }
 
   /** Exact intersections of candidate pairs `cand` (id_a, id_b) over a

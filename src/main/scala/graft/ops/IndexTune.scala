@@ -52,9 +52,9 @@ object IndexTune {
     for (nc <- cellCounts.distinct.sorted) {
       val seeds = corpus.orderBy(col(idCol)).limit(nc)
         .select(col(idCol), col(vecCol))
-      val trained = Similarity.kmeansRefine(corpus, seeds, refineIters,
-        idCol, vecCol)
-      val cent = trained.select(col("cid").as(idCol), col("e").as(vecCol))
+      val cent = Similarity.kmeansRefine(corpus, seeds, refineIters,
+          idCol, vecCol)
+        .select(col("cid").as(idCol), col("e").as(vecCol))
       for (np <- probes.distinct.sorted if np <= nc) {
         val t0 = System.nanoTime()
         val approx = Similarity.ivfTopK(corpus, queries, cent, np, k,
@@ -64,7 +64,6 @@ object IndexTune {
         val wall = (System.nanoTime() - t0) / 1e9
         out += FrontierRow(nc, np, k, math.rint(mean * 1e6) / 1e6, wall)
       }
-      trained.unpersist(blocking = false) // kmeansRefine's returned persist
     }
     exact.unpersist(blocking = false)
     out.toSeq

@@ -437,127 +437,103 @@ object Similarity {
     * fixed cells into TRAINED cells — tighter cells, better
     * recall-per-probe at the same query cost.
     *
-    * Scale shape per round: one broadcast argmin assignment over the
-    * corpus (no shuffle of vectors), then ONE shuffle of (cid, pos,
-    * component) triples for the elementwise mean — map-side combined,
-    * state k·dim, independent of corpus size. Rounds materialize via
-    * persist so lineage stays flat. Empty cells keep their previous
-    * centroid (deterministic; no resampling randomness).
+    * Runs on [[lloyd]]: the k centroids live on the driver, each round
+    * is one broadcast argmin assignment over the corpus
+    * ([[graft.functions.NearestCellsL2]], no shuffle of vectors) and ONE
+    * Spark job, the map-side-combined per-cell means, state k·dim and
+    * independent of corpus size. Empty cells keep their previous
+    * centroid (deterministic; no resampling randomness). The seed id
+    * column must be integral; the result is a LocalRelation (cid, e),
+    * so nothing stays cached.
     */
-  /** Centroid row cap for the driver-resident Lloyd loop in
-    * [[kmeansRefine]]: k rows × (dim + 1) doubles ≈ 32 MB of driver
-    * state at the cap. A seed set past it (or a non-integral cid
-    * column) takes the distributed persist-per-round path. */
-  private val DriverCentroidMaxRows = 1 << 16
-
   def kmeansRefine(corpus: DataFrame, seeds: DataFrame, iters: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    import scala.jdk.CollectionConverters._
-    val spark = corpus.sparkSession
     val c = withNorm(corpus, idCol, vecCol).persist(MEMORY_AND_DISK)
-    val cent0 = withNorm(seeds, idCol, vecCol)
+    val seed = withNorm(seeds, idCol, vecCol)
       .select(col("vec_id").as("cid"), col("e"))
-    val cidT = cent0.schema("cid").dataType
-    // the per-round means aggregate — the ONLY fact-scale work of a
-    // round, identical in both paths below (posexplode → per-(cid,pos)
-    // avg → re-assembled array; the aggregation plan is byte-for-byte
-    // the one the old join-per-round form ran, so the float means are
-    // unchanged)
-    def roundMeans(centPacked: DataFrame): DataFrame = {
-      val assign = c.as("v").crossJoin(broadcast(centPacked))
-        .select(col("v.vec_id").as("vid"), col("v.e").as("e"),
-          explode(column(graft.functions.NearestCellsL2(
-            expression(col("v.e")), expression(col("cpack")), 1))).as("cid"))
-      assign
-        .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos").agg(avg(col("x")).as("m"))
-        .groupBy("cid")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cid"), expr("transform(pm, p -> p.m)").as("e"))
+    // NearestCellsL2 ranks by the rounded-6 distance with a cid
+    // tie-break, not NearestPackedCodeword's exact one
+    val out = lloyd("kmeansRefine", c, seed, Nil, "e", iters, (v, pack) =>
+      explode(column(graft.functions.NearestCellsL2(
+        expression(v), expression(pack), 1))))
+    c.unpersist()
+    localState(seed, out)
+  }
+
+  /** Driver-state bound of [[lloyd]], in doubles (state rows × vector
+    * width): 2^22 doubles = 32 MB, e.g. 65,536 centroids of 64 dims. */
+  private val LloydMaxDoubles = 1 << 22
+
+  /** The Lloyd's k-means loop behind [[kmeansRefine]], [[pqTrain]] and
+    * [[residualTrain]]. The state is a table of codewords `seed` =
+    * (keys…, cid, vector): `keys` name independent codebooks (none for
+    * k-means; (cell, s) for the quantizers) and the integral `cid` is
+    * unique per key. `data` holds the training rows (keys…, `vec`, …).
+    *
+    * The seed state is collected once (at most `maxDoubles` + 1 rows)
+    * and must hold at most `maxDoubles` doubles (rows × width), else the
+    * loop throws, naming `op` and the bound, before any round runs. Each round packs the
+    * state on the driver into one row per key — its codewords as a
+    * cid-sorted array<struct<cid, vector>> `pack` — broadcasts it as a
+    * LocalRelation, assigns each `data` row with `assign(vec, pack)` and
+    * runs ONE Spark job: the map-side-combined per-(keys, cid)
+    * elementwise means, whose state-sized result is all that crosses
+    * back. A codeword no row chose keeps its previous value. The
+    * rounds cache nothing; the result is the final state rows,
+    * cid-sorted ([[localState]] makes them a LocalRelation). */
+  private[graft] def lloyd(op: String, data: DataFrame, seed: DataFrame,
+      keys: Seq[String], vec: String, iters: Int,
+      assign: (Column, Column) => Column,
+      maxDoubles: Int = LloydMaxDoubles): Array[Row] = {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val spark = data.sparkSession
+    val nk = keys.length
+    val cidT = seed.schema(nk).dataType
+    require(cidT == LongType || cidT == IntegerType,
+      s"$op: codeword ids must be integral, got ${cidT.simpleString}")
+    val packT = StructType(
+      keys.map(k => StructField(k, seed.schema(k).dataType)) :+
+        StructField("pack", ArrayType(StructType(Seq(
+          StructField("cid", cidT), StructField("cv", ArrayType(DoubleType)))))))
+    def key(r: Row): (Seq[Any], Long) =
+      (r.toSeq.take(nk), r.getAs[Number](nk).longValue)
+    var state = seed.limit(maxDoubles + 1).collect().sortBy(key(_)._2)
+    val width = state.map(_.getSeq[Double](nk + 1).length).maxOption.getOrElse(0)
+    if (state.length.toLong * width > maxDoubles) {
+      val n = if (state.length > maxDoubles) s"over $maxDoubles"
+        else state.length.toString
+      throw new IllegalArgumentException(s"$op: $n codewords × $width " +
+        s"doubles exceed the driver-state bound of $maxDoubles doubles")
     }
-    val integralCid = cidT match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
+    for (_ <- 0 until iters) {
+      val packed = state.groupBy(_.toSeq.take(nk)).map { case (k, rs) =>
+        Row.fromSeq(k :+ rs.map(r => Row(r.get(nk), r.get(nk + 1))).toSeq)
+      }
+      val pack = spark.createDataFrame(packed.toSeq.asJava, packT)
+      val means = data.join(broadcast(pack), keys)
+        .select(keys.map(col) :+ assign(col(vec), col("pack")).as("cid") :+
+          col(vec): _*)
+        .groupBy((keys :+ "cid").map(col): _*)
+        .agg(array((0 until width).map(i => avg(col(vec).getItem(i))): _*))
+        .collect()
+        .map(r => key(r) -> r.getSeq[Double](nk + 1)).toMap
+      state = state.map(r => means.get(key(r))
+        .fold(r)(mu => Row.fromSeq(r.toSeq.take(nk + 1) :+ mu)))
     }
-    val probe =
-      if (integralCid) cent0.limit(DriverCentroidMaxRows + 1).collect()
-      else Array.empty[Row]
-    if (integralCid && probe.length <= DriverCentroidMaxRows &&
-        probe.nonEmpty) {
-      // DRIVER-SIDE rounds (round 13 — the pqTrain/residualTrain
-      // lifecycle): the k-row centroid state lives on the driver, each
-      // round broadcasts it as a locally packed LocalRelation (no pack
-      // job, no per-round persist+count, no stale-round cache to
-      // release) and runs exactly ONE Spark job — the means aggregate,
-      // whose k·dim result is all that crosses back. Values are the
-      // collected doubles bit-for-bit and the keep-previous
-      // empty-cell merge is the old left-join coalesce run locally,
-      // so trained centroids are unchanged (oracle + [R] dump gates
-      // re-proven this round).
-      def cidKey(r: Row): Long = r.get(0) match {
-        case l: java.lang.Long => l
-        case i: java.lang.Integer => i.longValue
-        case other => sys.error(s"non-integral cid: $other")
-      }
-      val packSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cpack",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("cid", cidT),
-              org.apache.spark.sql.types.StructField("ce",
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.DoubleType))))))))
-      var rows: Array[Row] = probe.sortBy(cidKey)
-      for (_ <- 0 until iters) {
-        val packedDf = spark.createDataFrame(
-          Seq(Row(rows.map(r => Row(r.get(0), r.get(1))).toSeq)).asJava,
-          packSchema)
-        val upd = roundMeans(packedDf).collect()
-          .map(r => cidKey(r) -> r.getSeq[Double](1)).toMap
-        rows = rows.map(r =>
-          upd.get(cidKey(r)).fold(r)(mu => Row(r.get(0), mu)))
-      }
-      c.unpersist()
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid", cidT),
-        org.apache.spark.sql.types.StructField("e",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-      // LocalRelation return: nothing stays cached at all — the caller
-      // unpersist in the hygiene contract becomes a no-op
-      spark.createDataFrame(rows.toSeq.asJava, outSchema)
-    } else {
-      // DISTRIBUTED fallback (oversized or non-integral-cid seed sets):
-      // each round's persist supersedes the previous one — release the
-      // stale round immediately so an iters-round refine leaves exactly
-      // ONE k-row table cached, not iters of them (session-cache
-      // hygiene; a localCheckpoint formulation was tried round 12 and
-      // rejected: it truncates the lineage but its blocks are invisible
-      // to the caller-unpersist hygiene contract, and at k-row round
-      // size the plan-analysis saving did not justify breaking that
-      // contract)
-      var cent = cent0
-      var prevRound: Option[DataFrame] = None
-      for (_ <- 0 until iters) {
-        val packed = cent.groupBy()
-          .agg(array_sort(collect_list(struct(col("cid"), col("e").as("ce"))))
-            .as("cpack"))
-        val means = roundMeans(packed)
-        val next = cent.select(col("cid"), col("e").as("prev"))
-          .join(means.withColumnRenamed("e", "upd"), Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("upd"), col("prev")).as("e"))
-          .persist(MEMORY_AND_DISK)
-        next.count() // materialize: flat lineage round to round
-        prevRound.foreach(_.unpersist(blocking = false))
-        prevRound = Some(next)
-        cent = next
-      }
-      c.unpersist()
-      cent
-    }
+    state
+  }
+
+  /** [[lloyd]] state rows as a LocalRelation shaped like its seed. */
+  private def localState(seed: DataFrame, rows: Array[Row]): DataFrame = {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val t = StructType(seed.schema.fields.init.map(f =>
+      StructField(f.name, f.dataType)) :+
+      StructField(seed.schema.last.name, ArrayType(DoubleType)))
+    seed.sparkSession.createDataFrame(rows.toSeq.asJava, t)
   }
 
   /** Mean squared L2 distortion of `corpus` under `centroids` — the
@@ -805,21 +781,20 @@ object Similarity {
   }
 
   /** Trained PQ codebook: per-subspace Lloyd's k-means (m INDEPENDENT
-    * codebooks — the defining property of product quantization), run as
-    * ONE composite-keyed iteration: assignment is a broadcast argmin
-    * join keyed on the subspace, means are a map-side-combined
-    * (s, cid, pos) aggregation, so every subspace trains in the same
-    * two jobs per round. Codewords materialize as k full-width vectors
-    * (subspace s's codeword j = slice s of vector j) — the exact shape
+    * codebooks — the defining property of product quantization), run
+    * as ONE [[lloyd]] loop keyed on the subspace: the sub-vectors of one
+    * constant cell in [[residualTrain]]'s (cell, s) layout, so every
+    * subspace trains in the same single job per round. Codewords
+    * materialize as k full-width vectors (subspace s's codeword j =
+    * slice s of vector j), reshaped on the driver — the exact shape
     * [[pqEncode]]/[[pqTopK]] consume, so a trained codebook drops in
     * for the fixed one.
     *
     * Deterministic seeding (the k smallest-id corpus vectors) and
-    * deterministic empty-cell handling (keep the previous codeword);
-    * per-round state is k·dim, lineage cut per round. Float means make
-    * the trained values fold-order-sensitive in the last ulp, so the
-    * composed query is rows-only gated (like `ann_ivf_trained`), with
-    * quality spec-gated via [[pqDistortion]]. */
+    * deterministic empty-cell handling (keep the previous codeword).
+    * Float means make the trained values fold-order-sensitive in the
+    * last ulp, so the composed query is rows-only gated (like
+    * `ann_ivf_trained`), with quality spec-gated via [[pqDistortion]]. */
   def pqTrain(corpus: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -828,59 +803,24 @@ object Similarity {
     val subDim = 64 / m
     val c = withNorm(corpus, idCol, vecCol)
     val ss = explode(array((0 until m).map(lit): _*)).as("s")
-    val sub = c.select(ss, col("e"))
-      .withColumn("vs", slice(col("e"), col("s") * subDim + 1, lit(subDim)))
-      .select("s", "vs")
-      .persist(MEMORY_AND_DISK)
-    // The codebook lives on the DRIVER between rounds (k·64 doubles —
-    // the spark.ml-KMeans shape): assignment is a row-local unrolled
-    // argmin against the LITERAL codewords (whole-stage codegen, no
-    // join, no shuffle), so each Lloyd round is exactly ONE job — the
-    // map-side-combined elementwise-mean pass, whose k·m·subDim result
-    // is the only thing crossing to the driver. Absent (s, cid, pos)
-    // rows are empty cells: the codeword keeps its previous value
-    // (deterministic; no resampling randomness).
-    // seeds: the k smallest-id corpus vectors
-    val seedVecs = c.orderBy("vec_id").limit(k).select("e")
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(seedVecs.length == k, s"corpus has fewer than $k vectors")
-    val cb = Array.tabulate(m, k)((s, j) =>
-      seedVecs(j).slice(s * subDim, (s + 1) * subDim))
-    for (_ <- 0 until iters) {
-      val cid = literalArgmin(col("vs"), col("s"), cb)
-      // one avg column per position (see residualTrainFromSub): the
-      // same per-round single job, subDim× fewer shuffled rows, hash
-      // aggregate instead of the posexplode round trip
-      sub.select(col("s"), cid.as("cid"), col("vs"))
-        .groupBy("s", "cid")
-        .agg(array((0 until subDim).map(i =>
-          avg(col("vs").getItem(i))): _*).as("mu"))
-        .collect()
-        .foreach { r =>
-          val mu = r.getSeq[Double](2)
-          var p = 0
-          while (p < subDim) { cb(r.getInt(0))(r.getInt(1))(p) = mu(p); p += 1 }
-        }
-    }
+    def subvectors(v: DataFrame, cols: Column*) =
+      v.select(lit(0).as("cell") +: ss +: cols :+ col("e"): _*)
+        .withColumn("vs", slice(col("e"), col("s") * subDim + 1, lit(subDim)))
+        .drop("e")
+    val sub = subvectors(c).persist(MEMORY_AND_DISK)
+    // seeds: the k smallest-id corpus vectors, codeword j = the j-th
+    val seed = subvectors(c.orderBy("vec_id").limit(k)
+        .withColumn("cid", row_number().over(Window.orderBy("vec_id")) - 1),
+        col("cid"))
+    val cb = lloyd("pqTrain", sub, seed, Seq("cell", "s"), "vs", iters,
+      packedArgmin)
     sub.unpersist(blocking = false)
+    require(cb.length == k * m, s"pqTrain: corpus has fewer than $k vectors")
     // package the m per-subspace codebooks as k full-width vectors
     // (a plain literal table — nothing stays cached)
-    (0 until k).map(j => (j.toLong, (0 until m).flatMap(s => cb(s)(j).toSeq)))
+    val cw = cb.map(r => (r.getInt(1), r.getInt(2)) -> r.getSeq[Double](3)).toMap
+    (0 until k).map(j => (j.toLong, (0 until m).flatMap(s => cw((s, j)))))
       .toDF(idCol, vecCol)
-  }
-
-  /** Row-local argmin of `vs` against subspace `s` of a driver-resident
-    * codebook — the native [[graft.functions.NearestCodeword]] loop
-    * (an unrolled `least(struct(...))` here generates a method past the
-    * JIT threshold and drops to the bytecode interpreter). Identical
-    * distance math and smallest-cid tie-break as the join+`min(struct)`
-    * formulation it replaces, but zero joins and zero shuffles. */
-  private def literalArgmin(vs: Column, s: Column,
-      cb: Array[Array[Array[Double]]]): Column = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    // per-codeword |c|², same sequential fold order as dot(c, c)
-    val sq = cb.map(_.map(_.foldLeft(0.0)((a, x) => a + x * x)))
-    column(graft.functions.NearestCodeword(expression(vs), expression(s), cb, sq))
   }
 
   /** Mean PQ reconstruction error (summed squared subspace residuals) of
@@ -1049,12 +989,12 @@ object Similarity {
 
   /** Train PER-CELL residual PQ codebooks (the IVFADC layout): Lloyd's
     * k-means over each cell's residual sub-vectors, for all (cell,
-    * subspace) pairs AT ONCE — the [[pqTrain]] composite-key trick with
-    * the cell joining the key, so however many cells the index has,
-    * every codebook trains in the same two jobs per round (assignment =
-    * one equi-join on (cell, s); means = one map-side-combined
-    * (cell, s, cid) hash aggregate with an avg column per position). Seeds are each cell's `k`
-    * smallest-id members (bounded-heap selection, no per-cell sort);
+    * subspace) pairs AT ONCE — one [[lloyd]] loop keyed on (cell, s),
+    * so however many cells the index has, every codebook trains in the
+    * same single job per round (row-local argmin against the broadcast
+    * packed codebooks, then one map-side-combined (cell, s, cid) hash
+    * aggregate with an avg column per position). Seeds are each cell's
+    * `k` smallest-id members (bounded-heap selection, no per-cell sort);
     * cells with fewer than `k` members keep their seed count. Empty
     * codewords persist unchanged (deterministic, like [[pqTrain]]).
     *
@@ -1066,7 +1006,7 @@ object Similarity {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sub = resSub(residuals(corpus, centroids, idCol, vecCol), m)
       .persist(MEMORY_AND_DISK)
-    val cw = residualTrainFromSub(sub, m, k, iters)
+    val cw = residualTrainFromSub(sub, k, iters)
     sub.unpersist(blocking = false)
     cw
   }
@@ -1099,53 +1039,11 @@ object Similarity {
     column(graft.functions.NearestPackedCodeword(expression(vs), expression(cbk)))
   }
 
-  /** Codebook row cap for the driver-resident Lloyd loop below:
-    * cells·k·m rows × subDim doubles ≈ 16 MB of driver state at the cap
-    * (the spark.ml-KMeans / [[pqTrain]] shape). Indexes whose cell count
-    * pushes past it (per-cell codebooks grow with the cell count, which
-    * is data-dependent at lake scale) take the distributed
-    * checkpoint-per-round path instead — never a silent driver OOM. */
-  private val DriverCodebookMaxRows = 1 << 18
-
   /** [[residualTrain]] body over an already-sliced (ideally persisted)
     * residual-subspace table — the composed train-and-serve path shares
-    * one residual pass between training and encoding. Per Lloyd round:
-    * pack+broadcast the (cell, s, cid) codebook, row-local argmin, ONE
-    * map-side-combined (cell, s, cid) mean aggregate — the corpus is
-    * never joined against candidate rows and never shuffled whole.
-    *
-    * The codebook lives on the DRIVER between rounds (round 13, judge
-    * r12 #4 — the [[pqTrain]] lifecycle, generalized): the seed
-    * codebook is collected once (bounded by
-    * [[DriverCodebookMaxRows]] — cells·k·m rows, NOT data-sized), each
-    * round broadcasts the locally-packed codebook as a LocalRelation
-    * (built driver-side, no pack job, no JIT-threshold literal — the
-    * argmin stays the [[NearestPackedCodeword]] broadcast-join form)
-    * and runs exactly ONE Spark job: the map-side-combined means
-    * aggregate, whose cells·k·m result is the only thing crossing back.
-    * The r12 form paid 2–3 jobs per round (pack-codebook aggregate
-    * feeding the broadcast + the checkpoint materialization) plus a
-    * left join, and — as the r12 advisor noted — left every
-    * intermediate round's localCheckpoint blocks to the ContextCleaner
-    * while forfeiting recompute-on-executor-loss; driver state has
-    * neither problem. Per-position means, empty-codeword keep-previous
-    * semantics and the cid-ordered first-wins argmin tie-break are
-    * IDENTICAL (an absent (cell,s,cid) group keeps its codeword via the
-    * local merge exactly as the old left-join coalesce did); the
-    * composed ann_ivfadc_r [R] rows were dump-compared bit-identical
-    * pre/post.
-    *
-    * When the collect guard trips, the distributed fallback runs the
-    * pre-r13 loop: eager localCheckpoint per round (plan truncation —
-    * the composed plan reached ~1,900 Exchange nodes without it, guide
-    * §3.3/§7.3). Cluster-mode caveat (advisor r12): localCheckpoint
-    * blocks of intermediate rounds linger until ContextCleaner GC and
-    * are not executor-loss tolerant — acceptable for bounded
-    * (cells·k·m) rounds, and the driver path makes it the rare branch. */
-  private[graft] def residualTrainFromSub(sub: DataFrame, m: Int, k: Int,
+    * one residual pass between training and encoding. */
+  private[graft] def residualTrainFromSub(sub: DataFrame, k: Int,
       iters: Int): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val spark = sub.sparkSession
     // per-cell seeds: k smallest member ids, densely renumbered 0..k-1
     // per cell via a bounded heap (never a per-cell corpus sort)
     val seedRows = graft.plans.TopK.perKeyTwoPhase(
@@ -1156,79 +1054,8 @@ object Similarity {
       .withColumn("cid", row_number().over(seedW) - 1)
     val seedCw = seeds.join(sub, Seq("vec_id", "cell"))
       .select(col("cell"), col("s"), col("cid"), col("vs").as("cs"))
-    val subDim = 64 / m
-    // bounded collect probe: one job either way (the seed codebook had
-    // to materialize before round 1 regardless — the old path did it
-    // inside round 1's checkpoint job)
-    val probe = seedCw.limit(DriverCodebookMaxRows + 1).collect()
-    if (probe.length <= DriverCodebookMaxRows) {
-      val cellT = sub.schema("cell").dataType
-      val sT = sub.schema("s").dataType
-      val csT = org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)
-      val cbkSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell", cellT),
-        org.apache.spark.sql.types.StructField("s", sT),
-        org.apache.spark.sql.types.StructField("cbk",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("cid",
-                org.apache.spark.sql.types.IntegerType),
-              org.apache.spark.sql.types.StructField("cs", csT)))))))
-      // local rows as (cell, s, cid, cs) — cs kept as the collected
-      // Seq[Double] values bit-for-bit
-      var cw: Array[Row] = probe
-      for (_ <- 0 until iters) {
-        // pack locally: (cell, s) → cid-SORTED (cid, cs) entries, the
-        // exact array_sort(collect_list(struct(cid, cs))) layout
-        // NearestPackedCodeword indexes (cid unique per (cell, s))
-        val packedLocal: Seq[Row] = cw.toSeq.groupBy(r => (r.get(0), r.get(1)))
-          .map { case ((cell, s), rows) =>
-            Row(cell, s,
-              rows.sortBy(_.getInt(2)).map(r => Row(r.getInt(2), r.get(3))))
-          }.toSeq
-        val cbkDf = spark.createDataFrame(packedLocal.asJava, cbkSchema)
-        val means = sub.join(broadcast(cbkDf), Seq("cell", "s"))
-          .select(col("cell"), col("s"),
-            packedArgmin(col("vs"), col("cbk")).as("cid"), col("vs"))
-          .groupBy("cell", "s", "cid")
-          .agg(array((0 until subDim).map(i =>
-            avg(col("vs").getItem(i))): _*).as("upd"))
-          .collect()
-        val upd = means.map(r =>
-          ((r.get(0), r.get(1), r.get(2)), r.getSeq[Double](3))).toMap
-        cw = cw.map { r =>
-          upd.get((r.get(0), r.get(1), r.get(2))) match {
-            case Some(mu) => Row(r.get(0), r.get(1), r.get(2), mu)
-            case None => r // empty codeword: keep the previous value
-          }
-        }
-      }
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell", cellT),
-        org.apache.spark.sql.types.StructField("s", sT),
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cs", csT)))
-      spark.createDataFrame(cw.toSeq.asJava, outSchema)
-    } else {
-      // distributed fallback — the pre-r13 loop, see scaladoc
-      var cw = seedCw
-      for (_ <- 0 until iters) {
-        val assigned = sub.join(broadcast(packCodebook(cw)), Seq("cell", "s"))
-          .select(col("cell"), col("s"),
-            packedArgmin(col("vs"), col("cbk")).as("cid"), col("vs"))
-        val means = assigned
-          .groupBy("cell", "s", "cid")
-          .agg(array((0 until subDim).map(i =>
-            avg(col("vs").getItem(i))): _*).as("upd"))
-        cw = cw.join(means, Seq("cell", "s", "cid"), "left")
-          .select(col("cell"), col("s"), col("cid"),
-            coalesce(col("upd"), col("cs")).as("cs"))
-          .localCheckpoint(true)
-      }
-      cw
-    }
+    localState(seedCw, lloyd("residualTrain", sub, seedCw, Seq("cell", "s"),
+      "vs", iters, packedArgmin))
   }
 
   /** Encode every corpus vector against its OWN cell's residual
@@ -1286,7 +1113,7 @@ object Similarity {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sub = resSub(residuals(corpus, centroids, idCol, vecCol), m)
       .persist(MEMORY_AND_DISK)
-    val cb = residualTrainFromSub(sub, m, codeK, trainIters)
+    val cb = residualTrainFromSub(sub, codeK, trainIters)
     // the encoded index IS the serving artifact — checkpoint it so the
     // query-time plan reads a LogicalRDD instead of re-analyzing the
     // whole residual+train+encode lineage per action (guide §3.3)

@@ -969,40 +969,11 @@ object TrainingData extends QueryPack {
     * spec-gated instead. */
   val annIvfTrained = GraftQuery("ann_ivf_trained", None) { (spark, dir) =>
     val embs = Tables.embeddings(spark, dir)
-    val trained = Similarity.kmeansRefine(
+    // kmeansRefine returns a LocalRelation, so the probe path's plan
+    // reads the trained centroids as literals, not the Lloyd lineage
+    val cents = Similarity.kmeansRefine(
         embs, embs.filter(col("vec_id") < 16), iters = 2)
-    // the trained centroids are ≤ 16 rows (the seed-set size, a design
-    // constant — the same bounded-driver-side shape as pqTrain's
-    // codebook): re-literalize them so the probe path's plan reads a
-    // LocalRelation instead of nesting the 2-round Lloyd lineage TWICE
-    // (corpus + query cell assignment), which pushed the composed plan
-    // to 224 Exchange nodes re-analyzed per action (guide §3.3/§7.3).
-    // Values are the collected doubles bit-for-bit, and cell argmin is
-    // centroid-order-free, so the [R] rows are unchanged; the refine's
-    // returned cache is released here (hygiene contract).
-    val rows = trained.collect()
-    trained.unpersist(blocking = false)
-    // guard the driver-sized assumption this collect rides on (advisor
-    // r12): the seed set bounds the output at 16 rows, and the schema
-    // must still be (long vec_id, array<double> embedding) — fail with
-    // the assumption named rather than an anonymous ClassCastException
-    assert(rows.length <= 16,
-      s"kmeansRefine returned ${rows.length} centroids — the ≤16-row " +
-        "seed-set bound this driver-side re-literalization relies on no " +
-        "longer holds")
-    assert(trained.schema.map(_.dataType) == Seq(
-      org.apache.spark.sql.types.LongType,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, false)) ||
-      trained.schema.map(_.dataType) == Seq(
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, true)),
-      s"kmeansRefine schema drifted: ${trained.schema.simpleString} — " +
-        "expected (bigint, array<double>)")
-    import spark.implicits._
-    val cents = rows.map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .toSeq.toDF("vec_id", "embedding")
+      .select(col("cid").as("vec_id"), col("e").as("embedding"))
     Similarity.ivfTopK(embs, embs.filter(col("vec_id") < 10), cents)
   }
 

@@ -49,29 +49,23 @@ class HygieneSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
-  test("ngramJaccardCapped releases the exploded-shingle and tag-join " +
-      "caches") {
-    val leaked = leakedBlocks(Dedup.ngramJaccard(docs, maxDf = 20))
-    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
-  }
-
-  test("ngramContainmentCapped releases its working caches") {
-    val leaked = leakedBlocks(Dedup.ngramContainment(docs, maxDf = 20))
-    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
-  }
-
   test("ngramJaccard is lazy: building it, capped or not, runs no Spark " +
       "action and persists nothing") {
     var built = Seq.empty[DataFrame]
     val leaked = leakedBy {
       val actions = actionsOf {
         built = Seq(Dedup.ngramJaccard(docs),
-          Dedup.ngramJaccard(docs, maxDf = 20))
+          Dedup.ngramJaccard(docs, maxDf = 20),
+          Dedup.ngramContainment(docs, maxDf = 20))
       }
       assert(actions.isEmpty, s"actions while building: $actions")
     }
     assert(leaked.isEmpty, s"persisted while building: $leaked")
     assert(built.forall(_.storageLevel == StorageLevel.NONE))
+    // running them (the capped hot-shingle census and tag join
+    // included) leaves nothing cached either
+    val ran = leakedBy(built.foreach(_.count()))
+    assert(ran.isEmpty, s"leaked cached RDDs: $ran")
   }
 
   test("dedupCascade releases everything it created: the signature " +
@@ -81,12 +75,22 @@ class HygieneSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
-  test("kmeansRefine keeps exactly one (returned) table cached — stale " +
-      "rounds and the corpus norm cache are released as it runs") {
+  test("kmeansRefine, pqTrain and residualTrain leave zero new " +
+      "persistent RDDs when they return: the Lloyd state is driver-side " +
+      "and the result a LocalRelation, so no caller unpersist is owed") {
     val seeds = embs.filter(col("vec_id") < 4)
-    val leaked = leakedBlocks(
-      Similarity.kmeansRefine(embs, seeds, iters = 3))
-    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+    val ops = Seq[(String, () => DataFrame)](
+      "kmeansRefine" -> (() => Similarity.kmeansRefine(embs, seeds, iters = 3)),
+      "pqTrain" -> (() => Similarity.pqTrain(embs, iters = 3)),
+      "residualTrain" -> (() =>
+        Similarity.residualTrain(embs, seeds, k = 4, iters = 3)))
+    for ((name, op) <- ops) {
+      var out: DataFrame = null
+      val leaked = leakedBy { out = op() }
+      assert(leaked.isEmpty, s"$name left cached RDDs: $leaked")
+      assert(out.storageLevel == StorageLevel.NONE, s"$name result is cached")
+      assert(out.count() > 0, s"$name returned no codewords")
+    }
   }
 
   test("basketRules releases its serialized basket cache; result " +

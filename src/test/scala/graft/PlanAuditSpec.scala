@@ -633,6 +633,22 @@ class PlanAuditSpec extends SparkTestBase {
       s"prefix path fell back to an explode+window rank:\n$plan")
   }
 
+  test("dedup_ngram_jaccard: no filter below the doc_id repartition " +
+      "touches the shingle or hash kernels — the shingle + hash pass runs " +
+      "once, after the repartition that spreads it") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, RepartitionByExpression}
+    val plan = SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir)
+      .queryExecution.optimizedPlan
+    val kernels = Set("graft_shingles3", "graft_sorted_hash60")
+    val repartitions = plan.collect { case r: RepartitionByExpression => r }
+    assert(repartitions.nonEmpty, s"doc_id repartition missing:\n$plan")
+    val offenders = repartitions.flatMap(_.collect {
+      case f: Filter if f.condition.exists(e => kernels(e.prettyName)) => f
+    })
+    assert(offenders.isEmpty,
+      s"filters recompute shingles below the repartition:\n${offenders.mkString("\n")}")
+  }
+
   test("q38 retention: one user_id exchange feeds both the first-touch " +
       "aggregate and the activity join (exchange reuse), type filter " +
       "absent — full scan is intended; q39 funnel pushes its event-type " +
