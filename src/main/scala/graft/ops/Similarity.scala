@@ -513,13 +513,21 @@ object Similarity {
         Row.fromSeq(k :+ rs.map(r => Row(r.get(nk), r.get(nk + 1))).toSeq)
       }
       val pack = spark.createDataFrame(packed.toSeq.asJava, packT)
+      // per-position sums and one count, divided here: one avg column
+      // per position (two buffer fields each) would push the partial
+      // aggregate past whole-stage codegen's field limit at k-means
+      // widths; sum / count is avg's own arithmetic
       val means = data.join(broadcast(pack), keys)
         .select(keys.map(col) :+ assign(col(vec), col("pack")).as("cid") :+
           col(vec): _*)
         .groupBy((keys :+ "cid").map(col): _*)
-        .agg(array((0 until width).map(i => avg(col(vec).getItem(i))): _*))
+        .agg(count(lit(1)),
+          (0 until width).map(i => sum(col(vec).getItem(i))): _*)
         .collect()
-        .map(r => key(r) -> r.getSeq[Double](nk + 1)).toMap
+        .map { r =>
+          val n = r.getLong(nk + 1).toDouble
+          key(r) -> (0 until width).map(i => r.getDouble(nk + 2 + i) / n)
+        }.toMap
       state = state.map(r => means.get(key(r))
         .fold(r)(mu => Row.fromSeq(r.toSeq.take(nk + 1) :+ mu)))
     }
