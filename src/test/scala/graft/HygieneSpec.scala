@@ -49,6 +49,17 @@ class HygieneSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
+  test("ngramJaccardCapped releases the exploded-shingle and tag-join " +
+      "caches") {
+    val leaked = leakedBlocks(Dedup.ngramJaccard(docs, maxDf = 20))
+    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+  }
+
+  test("ngramContainmentCapped releases its working caches") {
+    val leaked = leakedBlocks(Dedup.ngramContainment(docs, maxDf = 20))
+    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+  }
+
   test("ngramJaccard is lazy: building it, capped or not, runs no Spark " +
       "action and persists nothing") {
     var built = Seq.empty[DataFrame]
