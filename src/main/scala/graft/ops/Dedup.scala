@@ -748,12 +748,15 @@ object Dedup {
 
   /** Exact Jaccard ≥ `threshold` of arbitrary candidate pairs, via the
     * [[overlapPairs]] verify. Candidates here need not share a shingle,
-    * so empty shingle sets are dropped before they can hit the 0/0
-    * Jaccard edge (engine-divergent). */
+    * so pairs with an empty shingle set are dropped before they can hit
+    * the 0/0 Jaccard edge (engine-divergent). The filter reads both
+    * sides of the pair, so Catalyst cannot push it below
+    * [[shingleSets]]' repartition, where it would rerun the shingle +
+    * hash pass in the scan stage. */
   private def verifyCandidatesJaccard(docs: DataFrame, idCol: String,
       textCol: String, cand: DataFrame, threshold: Double): DataFrame =
-    jaccardOf(intersections(cand,
-        hashedSets(shingleSets(docs, idCol, textCol)).filter(col("n") > 0)),
+    jaccardOf(intersections(cand, hashedSets(shingleSets(docs, idCol, textCol)))
+        .filter(least(col("na"), col("nb")) > 0),
       threshold)
       .orderBy("id_a", "id_b")
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Exact
@@ -86,14 +86,18 @@ object FetchEventStream {
     * the lake root, the parent of `bronzeDir` (the reference writes
     * `bronze/<file>`); an absolute one is used as given. A micro-batch
     * reads only the files its events name — never the whole bronze
-    * root — and joins on `fetch_id` inside them, since one file may
+    * root — and matches `fetch_id` inside them, since one file may
     * hold many payloads. A named file that does not exist fails the
     * batch with an error naming the path.
     *
-    * Spark actions per micro-batch into an existing table: the path
-    * probe (one `collect`; an empty batch stops there), the touched-days
-    * `collect` and the merge write, which reads the bronze files once
-    * ([[Upsert.mergePartitioned]] evaluates its input once).
+    * Spark jobs per micro-batch into an existing table: 4. One
+    * `collect` of the batch's events (an empty batch stops there), one
+    * single-stage job that reads the bronze files once, caches the
+    * normalized rows and returns their touched days, and the two jobs
+    * of the merge write ([[Upsert.mergePartitioned]]). The events are
+    * never read again: bronze rows are matched to them by plan-time
+    * literals, not by a join. Three of the jobs are SQL actions
+    * (events, touched days, write).
     *
     * Returns the started query; callers own checkpoint location. */
   def normalizeToSilver(events: DataFrame, bronzeDir: String,
@@ -104,9 +108,10 @@ object FetchEventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val files = referencedFiles(batch, lakeRoot)
+        val events = collectEvents(batch)
+        val files = referencedFiles(events, lakeRoot)
         if (files.nonEmpty) {
-          val batchObs = batchObservations(batch, files)
+          val batchObs = batchObservations(spark, events, files)
           // partition-bounded MERGE: the silver table is day-partitioned
           // and only the days present in this batch are read + rewritten
           // (Upsert.mergePartitioned) — a micro-batch costs its touched
@@ -130,35 +135,52 @@ object FetchEventStream {
     fs.makeQualified(bronze).getParent.toString
   }
 
-  /** The distinct bronze files a micro-batch's events name, resolved
-    * against `lakeRoot`: one `collect` of the (few, short) path strings,
-    * de-duplicated on the driver — one job, where a Spark `distinct`
-    * would run two. Empty for an empty batch. */
-  private def referencedFiles(batch: DataFrame, lakeRoot: String): Seq[String] =
-    batch.select("path").collect().iterator
-      .flatMap(r => Option(r.getString(0))).toSeq.distinct
+  /** A micro-batch's events on the driver, as (fetch_id, source,
+    * version, path) rows: one `collect` of the columns the batch needs,
+    * one short row per event. `version` is the event's `finished_at` as
+    * epoch seconds, the last-write-wins order. Empty for an empty batch. */
+  private def collectEvents(batch: DataFrame): Array[Row] =
+    batch.select(col("fetch_id"), col("source"),
+        col("finished_at").cast("long").as("version"), col("path"))
+      .collect()
+
+  /** The distinct bronze files a micro-batch's `events` name, resolved
+    * against `lakeRoot`, de-duplicated on the driver. Empty for an empty
+    * batch. */
+  private def referencedFiles(events: Array[Row], lakeRoot: String)
+      : Seq[String] =
+    events.iterator.flatMap(r => Option(r.getString(3))).toSeq.distinct
       .map { p =>
         val path = new Path(p)
         (if (path.isAbsolute) path else new Path(lakeRoot, p)).toString
       }
 
-  /** One micro-batch of success events → normalized observation rows
-    * (with their last-write-wins `version`): join events to the bronze
-    * payloads in `files` (the batch's [[referencedFiles]]) and resolve
-    * each event's transform through the source registry
+  /** One micro-batch's `events` → normalized observation rows (with
+    * their last-write-wins `version`): the bronze rows in `files` (the
+    * batch's [[referencedFiles]]) whose `fetch_id` an event carries,
+    * each event's transform resolved through the source registry
     * (streaming/load.py:49-52); events from unregistered sources are
-    * skipped, the consumer's StreamLoadError path. */
-  private def batchObservations(batch: DataFrame, files: Seq[String])
-      : DataFrame = {
-    val bronze = batch.sparkSession
-      .read.schema("fetch_id STRING, payload STRING").json(files: _*)
+    * skipped, the consumer's StreamLoadError path.
+    *
+    * Bronze rows meet their events through plan-time literals (a
+    * `fetch_id` IN-set and a fetch_id → version map per source), not a
+    * join: the plan never re-reads the batch, and no job broadcasts it.
+    * A replayed `fetch_id` takes its newest version, the row
+    * last-write-wins would keep among the replays. */
+  private def batchObservations(spark: SparkSession, events: Array[Row],
+      files: Seq[String]): DataFrame = {
+    val bronze = spark.read.schema("fetch_id STRING, payload STRING")
+      .json(files: _*)
     Sources.registry.values.toSeq.map { src =>
+      val versions: Map[String, Option[Long]] = events.toSeq
+        .filter(r => !r.isNullAt(0) && r.getString(1) == src.url)
+        .groupMapReduce(_.getString(0))(r =>
+          if (r.isNullAt(2)) None else Some(r.getLong(2)))(
+          Ordering[Option[Long]].max)
       src.normalize(
-        batch.filter(col("source") === src.url)
-          .select(col("fetch_id"), col("finished_at"))
-          .join(bronze, "fetch_id")
-          .withColumn("version", col("finished_at").cast("long"))
-          .select("fetch_id", "payload", "version"))
+        bronze.filter(col("fetch_id").isin(versions.keys.toSeq: _*))
+          .select(col("fetch_id"), col("payload"),
+            element_at(typedLit(versions), col("fetch_id")).as("version")))
     }.reduce(_ unionByName _)
   }
 
@@ -199,9 +221,10 @@ object FetchEventStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val files = referencedFiles(batch, lakeRoot)
+        val events = collectEvents(batch)
+        val files = referencedFiles(events, lakeRoot)
         if (files.nonEmpty) {
-          val batchObs = batchObservations(batch, files)
+          val batchObs = batchObservations(spark, events, files)
           val keys = Seq("latitude", "longitude", "timestamp")
           val merged = TxManifest.latestTx(spark, txRoot) match {
             case Some(tx) =>

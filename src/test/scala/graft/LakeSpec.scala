@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Upsert
 import graft.sources.Layout
@@ -42,6 +47,138 @@ class LakeSpec extends SparkTestBase {
     assert(after.filter(col("key") === 2).head().getAs[String]("payload") == "b")
     assert(fileState("2026-01-02") == before2, "untouched partition rewritten!")
     assert(fileState("2026-01-03") == before3, "untouched partition rewritten!")
+  }
+
+  /** A fresh table root under the `lakefs` scheme, whose listings and
+    * opens [[LakeSpec.TouchCountingFileSystem]] records. */
+  private def countedRoot(): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.lakefs.impl", classOf[LakeSpec.TouchCountingFileSystem].getName)
+    "lakefs://" + Files.createTempDirectory("silver").resolve("obs")
+  }
+
+  /** The table at `root` read with `schema`, as sorted row strings. */
+  private def tableRows(root: String, schema: StructType): Seq[String] =
+    spark.read.schema(schema).parquet(root).select(schema.fieldNames.map(col).toSeq: _*)
+      .collect().map(_.toString).sorted.toSeq
+
+  /** Merges `batch` into the `part`-partitioned table at `root` on
+    * `(part, key)` by `ver`, and returns the paths the merge listed or
+    * opened. The merged table must equal a merge of the whole table. */
+  private def mergeCounted(root: String, batch: DataFrame, part: String)
+      : Seq[String] = {
+    val keys = Seq(part, "key")
+    val whole = Upsert.mergeByKey(spark.read.schema(batch.schema).parquet(root),
+      batch, keys, col("ver"))
+    val want = whole.select(batch.columns.map(col).toSeq: _*)
+      .collect().map(_.toString).sorted.toSeq
+    LakeSpec.TouchCountingFileSystem.touched.clear()
+    Upsert.mergePartitioned(spark, root, batch, keys, col("ver"), part)
+    val touched = LakeSpec.TouchCountingFileSystem.touched.asScala.toSeq
+    assert(tableRows(root, batch.schema) == want, "merge differs from a whole-table merge")
+    touched
+  }
+
+  private def under(touched: Seq[String], part: String, days: Seq[String]) =
+    touched.filter(p => days.exists(d => p.contains(s"/$part=$d")))
+
+  test("mergePartitioned reads only the touched partition directories " +
+      "that exist: untouched days and a new day's absent directory are " +
+      "never listed or opened") {
+    val root = countedRoot()
+    Upsert.mergePartitioned(spark, root,
+      Seq(("2026-01-01", 1, "a", 1L), ("2026-01-01", 2, "b", 1L),
+        ("2026-01-02", 3, "c", 1L), ("2026-01-03", 4, "d", 1L))
+        .toDF("day", "key", "payload", "ver"),
+      Seq("day", "key"), col("ver"), "day")
+    val batch = Seq(("2026-01-01", 1, "a2", 2L), ("2026-01-04", 5, "e", 2L))
+      .toDF("day", "key", "payload", "ver")
+    val touched = mergeCounted(root, batch, "day")
+    assert(under(touched, "day", Seq("2026-01-01")).nonEmpty,
+      s"the touched day was never read: $touched")
+    assert(under(touched, "day", Seq("2026-01-02", "2026-01-03")).isEmpty,
+      s"untouched days listed or opened: $touched")
+  }
+
+  test("mergePartitioned: a batch whose days are all new lists and opens " +
+      "no existing partition directory") {
+    val root = countedRoot()
+    Upsert.mergePartitioned(spark, root,
+      Seq(("2026-01-01", 1, "a", 1L), ("2026-01-02", 2, "b", 1L))
+        .toDF("day", "key", "payload", "ver"),
+      Seq("day", "key"), col("ver"), "day")
+    val batch = Seq(("2026-01-05", 1, "x", 2L), ("2026-01-06", 2, "y", 2L))
+      .toDF("day", "key", "payload", "ver")
+    val touched = mergeCounted(root, batch, "day")
+    assert(under(touched, "day", Seq("2026-01-01", "2026-01-02")).isEmpty,
+      s"existing days listed or opened: $touched")
+  }
+
+  test("mergePartitioned over a Date-typed partition column reads only the " +
+      "touched days") {
+    val root = countedRoot()
+    def rows(rs: (String, Int, String, Long)*) =
+      rs.toDF("day", "key", "payload", "ver").withColumn("day", to_date(col("day")))
+    Upsert.mergePartitioned(spark, root,
+      rows(("2026-01-01", 1, "a", 1L), ("2026-01-02", 2, "b", 1L),
+        ("2026-01-03", 3, "c", 1L)),
+      Seq("day", "key"), col("ver"), "day")
+    val batch = rows(("2026-01-02", 2, "b2", 2L), ("2026-01-02", 7, "g", 2L),
+      ("2026-01-09", 8, "h", 2L))
+    val touched = mergeCounted(root, batch, "day")
+    assert(under(touched, "day", Seq("2026-01-02")).nonEmpty,
+      s"the touched day was never read: $touched")
+    assert(under(touched, "day", Seq("2026-01-01", "2026-01-03")).isEmpty,
+      s"untouched days listed or opened: $touched")
+    assert(spark.read.parquet(root).filter(col("key") === 2)
+      .select("payload").as[String].collect().toSeq == Seq("b2"))
+  }
+
+  test("mergePartitioned keeps the table's null-partition rows when a " +
+      "batch carries a null partition value") {
+    val root = countedRoot()
+    Upsert.mergePartitioned(spark, root,
+      Seq((null: String, 1, "a", 1L), (null: String, 3, "c", 1L),
+        ("2026-01-01", 4, "d", 1L)).toDF("day", "key", "payload", "ver"),
+      Seq("day", "key"), col("ver"), "day")
+    val batch = Seq((null: String, 2, "b", 2L), (null: String, 1, "a2", 2L))
+      .toDF("day", "key", "payload", "ver")
+    val touched = mergeCounted(root, batch, "day")
+    assert(under(touched, "day", Seq("2026-01-01")).isEmpty,
+      s"untouched days listed or opened: $touched")
+    assert(spark.read.parquet(root).select("key", "payload").as[(Int, String)]
+      .collect().sorted.toSeq == Seq(1 -> "a2", 2 -> "b", 3 -> "c", 4 -> "d"))
+  }
+
+  test("a micro-batch replaying a fetch_id at two finished_at values " +
+      "keeps the newest version and reads only its touched day") {
+    import graft.streaming.{FetchEventStream, JsonLinesSource}
+    import StreamingSpec.{eventJson, payload, writeBronze}
+    val events = Files.createTempDirectory("replayev")
+    val bronze = Files.createTempDirectory("replaylake").resolve("bronze")
+    val silver = countedRoot(); val ckpt = Files.createTempDirectory("replayckpt")
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0),
+      "f2" -> payload(2.0, 21.0, "2026-01-02T00:00"),
+      "f3" -> payload(1.0, 99.0))
+    def consume(): Unit = {
+      val q = FetchEventStream.consume(spark, JsonLinesSource(events.toString),
+        bronze.toString, silver, ckpt.toString)
+      try q.processAllAvailable() finally q.stop()
+    }
+    Files.writeString(events.resolve("b0.json"),
+      eventJson("f1", "success", 1000) + "\n" + eventJson("f2", "success", 2000))
+    consume()
+    Files.writeString(events.resolve("b1.json"),
+      eventJson("f3", "success", 9000) + "\n" + eventJson("f3", "success", 5000))
+    LakeSpec.TouchCountingFileSystem.touched.clear()
+    consume()
+    val touched = LakeSpec.TouchCountingFileSystem.touched.asScala.toSeq
+    assert(under(touched, "obs_date", Seq("2026-01-02")).isEmpty,
+      s"untouched day listed or opened: $touched")
+    val got = spark.read.parquet(silver)
+      .select("latitude", "fetch_id", "version", "temperature")
+      .as[(Double, String, Long, Double)].collect().sorted.toSeq
+    assert(got == Seq((1.0, "f3", 9L, 99.0), (2.0, "f2", 2L, 21.0)), s"silver: $got")
   }
 
   test("bucketed tables join without a shuffle exchange") {
@@ -692,5 +829,28 @@ class LakeSpec extends SparkTestBase {
     // old version still reads its own snapshot (time travel intact)
     assert(Manifest.read(spark, root, Some(0L)).as[Long].collect().toSeq
       == Seq(1L))
+  }
+}
+
+object LakeSpec {
+  /** The local filesystem under the `lakefs` scheme, recording the path
+    * of every directory listing and file open. */
+  class TouchCountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("lakefs:///")
+    override def getScheme: String = "lakefs"
+    override def listStatus(f: org.apache.hadoop.fs.Path)
+        : Array[org.apache.hadoop.fs.FileStatus] = {
+      TouchCountingFileSystem.touched.add(f.toUri.getPath)
+      super.listStatus(f)
+    }
+    override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+        : org.apache.hadoop.fs.FSDataInputStream = {
+      TouchCountingFileSystem.touched.add(f.toUri.getPath)
+      super.open(f, bufferSize)
+    }
+  }
+
+  object TouchCountingFileSystem {
+    val touched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   }
 }

@@ -633,20 +633,34 @@ class PlanAuditSpec extends SparkTestBase {
       s"prefix path fell back to an explode+window rank:\n$plan")
   }
 
-  test("dedup_ngram_jaccard: no filter below the doc_id repartition " +
-      "touches the shingle or hash kernels — the shingle + hash pass runs " +
-      "once, after the repartition that spreads it") {
+  /** Asserts that no filter below `query`'s doc_id repartitions calls
+    * the shingle or hash kernels: such a filter reruns the shingle +
+    * hash pass in the scan stage. */
+  private def assertShinglesAfterRepartition(query: String): Unit = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, RepartitionByExpression}
-    val plan = SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir)
+    val plan = SparkEntry.queries(query)(spark, sfDir)
       .queryExecution.optimizedPlan
     val kernels = Set("graft_shingles3", "graft_sorted_hash60")
     val repartitions = plan.collect { case r: RepartitionByExpression => r }
-    assert(repartitions.nonEmpty, s"doc_id repartition missing:\n$plan")
+    assert(repartitions.nonEmpty, s"$query: doc_id repartition missing:\n$plan")
     val offenders = repartitions.flatMap(_.collect {
       case f: Filter if f.condition.exists(e => kernels(e.prettyName)) => f
     })
     assert(offenders.isEmpty,
-      s"filters recompute shingles below the repartition:\n${offenders.mkString("\n")}")
+      s"$query: filters recompute shingles below the repartition:\n${offenders.mkString("\n")}")
+  }
+
+  test("dedup_ngram_jaccard: no filter below the doc_id repartition " +
+      "touches the shingle or hash kernels — the shingle + hash pass runs " +
+      "once, after the repartition that spreads it") {
+    assertShinglesAfterRepartition("dedup_ngram_jaccard")
+  }
+
+  test("dedup_sorted_neighborhood and dedup_sorted_multi: the verify's " +
+      "empty-set filter stays above the doc_id repartition — the shingle " +
+      "+ hash pass runs once") {
+    Seq("dedup_sorted_neighborhood", "dedup_sorted_multi")
+      .foreach(assertShinglesAfterRepartition)
   }
 
   test("q38 retention: one user_id exchange feeds both the first-touch " +

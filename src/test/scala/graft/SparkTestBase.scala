@@ -53,6 +53,22 @@ trait SparkTestBase extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** The Spark jobs `body` starts, in start order: SQL actions, the
+    * jobs inside them (broadcasts, AQE stages, listings) and raw RDD
+    * jobs alike. */
+  protected def jobsOf(body: => Unit): Seq[SparkListenerJobStart] = {
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (!isSentinel(js)) jobs.add(js)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      fenced(jobs.clear())(body)
+      jobs.asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def isSentinel(js: SparkListenerJobStart): Boolean =
     Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == "action-sentinel")
 

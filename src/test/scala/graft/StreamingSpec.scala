@@ -428,6 +428,25 @@ class StreamingSpec extends SparkTestBase {
     assert(opens.map(_._2).distinct.size == 1,
       s"bronze read under several SQL executions: $opens")
   }
+
+  test("a micro-batch into an existing table runs at most 4 Spark jobs: " +
+      "the events collect, one single-stage job that caches the batch and " +
+      "returns its touched days, and the merge write's two") {
+    val events = tmp("jobev"); val bronze = tmp("joblake").resolve("bronze")
+    val silver = tmp("jobsilver").resolve("obs"); val ckpt = tmp("jobckpt")
+    writeBronze(bronze, "f1" -> payload(1.0, 20.0), "f2" -> payload(2.0, 21.0),
+      "f3" -> payload(3.0, 22.0, "2026-01-02T00:00"))
+    def consume(): Unit = consumeAll(spark, events, bronze.toString, silver, ckpt)
+    Files.writeString(events.resolve("b0.json"), eventJson("f1", "success", 1000))
+    consume() // lays out the silver table
+    Files.writeString(events.resolve("b1.json"),
+      eventJson("f2", "success", 2000) + "\n" + eventJson("f3", "success", 3000))
+    val jobs = jobsOf(consume())
+    assert(jobs.size <= 4, s"${jobs.size} jobs: " +
+      jobs.map(j => (j.stageIds.size,
+        Option(j.properties).map(_.getProperty("spark.job.description")).orNull)))
+    assert(spark.read.parquet(silver.toString).count() == 3)
+  }
 }
 
 object StreamingSpec {
