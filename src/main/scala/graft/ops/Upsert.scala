@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale: one shuffle on the key columns; the window never sorts more
   * than one key-group per task. For a 100 TB silver table the merge is
-  * bounded by partition pruning — only date partitions present in the
-  * incoming batch are rewritten (see [[mergeByKey]]'s pruning join).
+  * bounded by the touched partitions — only date partitions present in
+  * the incoming batch are read and rewritten (see [[mergePartitioned]]).
   */
 object Upsert {
 
@@ -200,11 +200,10 @@ object Upsert {
     else {
       val cached = incoming.persist()
       try {
-        val touched = cached.select(col(partitionCol).cast("string"))
+        val dirs = cached.select(col(partitionCol).cast("string"))
           .as(Encoders.STRING)
           .mapPartitions(_.toSet.iterator)(Encoders.STRING)
-          .collect()
-        val dirs = touched.toSeq
+          .collect().toSeq
           .map(v => new Path(rootPath,
             ExternalCatalogUtils.getPartitionPathString(partitionCol, v)))
           .distinct.filter(fs.exists)

@@ -166,7 +166,12 @@ object FetchEventStream {
     * `fetch_id` IN-set and a fetch_id → version map per source), not a
     * join: the plan never re-reads the batch, and no job broadcasts it.
     * A replayed `fetch_id` takes its newest version, the row
-    * last-write-wins would keep among the replays. */
+    * last-write-wins would keep among the replays. Both literals hold
+    * one entry per event, like the collected events themselves; the IN
+    * filter is a hash-set probe, but a map lookup scans its keys, so a
+    * bronze row costs O(events in the batch) — nothing at this lane's
+    * hundreds of events per batch, the first cost to revisit if batches
+    * reach ~10^5 events. */
   private def batchObservations(spark: SparkSession, events: Array[Row],
       files: Seq[String]): DataFrame = {
     val bronze = spark.read.schema("fetch_id STRING, payload STRING")

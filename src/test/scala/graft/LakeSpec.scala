@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.ops.Upsert
 import graft.sources.Layout
@@ -57,25 +56,20 @@ class LakeSpec extends SparkTestBase {
     "lakefs://" + Files.createTempDirectory("silver").resolve("obs")
   }
 
-  /** The table at `root` read with `schema`, as sorted row strings. */
-  private def tableRows(root: String, schema: StructType): Seq[String] =
-    spark.read.schema(schema).parquet(root).select(schema.fieldNames.map(col).toSeq: _*)
-      .collect().map(_.toString).sorted.toSeq
-
   /** Merges `batch` into the `part`-partitioned table at `root` on
     * `(part, key)` by `ver`, and returns the paths the merge listed or
     * opened. The merged table must equal a merge of the whole table. */
   private def mergeCounted(root: String, batch: DataFrame, part: String)
       : Seq[String] = {
     val keys = Seq(part, "key")
-    val whole = Upsert.mergeByKey(spark.read.schema(batch.schema).parquet(root),
-      batch, keys, col("ver"))
-    val want = whole.select(batch.columns.map(col).toSeq: _*)
+    def rows(df: DataFrame) = df.select(batch.columns.map(col).toSeq: _*)
       .collect().map(_.toString).sorted.toSeq
+    def table = spark.read.schema(batch.schema).parquet(root)
+    val want = rows(Upsert.mergeByKey(table, batch, keys, col("ver")))
     LakeSpec.TouchCountingFileSystem.touched.clear()
     Upsert.mergePartitioned(spark, root, batch, keys, col("ver"), part)
     val touched = LakeSpec.TouchCountingFileSystem.touched.asScala.toSeq
-    assert(tableRows(root, batch.schema) == want, "merge differs from a whole-table merge")
+    assert(rows(table) == want, "merge differs from a whole-table merge")
     touched
   }
 
@@ -83,8 +77,8 @@ class LakeSpec extends SparkTestBase {
     touched.filter(p => days.exists(d => p.contains(s"/$part=$d")))
 
   test("mergePartitioned reads only the touched partition directories " +
-      "that exist: untouched days and a new day's absent directory are " +
-      "never listed or opened") {
+      "that exist: untouched days are never listed or opened, and a new " +
+      "day's absent directory is skipped") {
     val root = countedRoot()
     Upsert.mergePartitioned(spark, root,
       Seq(("2026-01-01", 1, "a", 1L), ("2026-01-01", 2, "b", 1L),
