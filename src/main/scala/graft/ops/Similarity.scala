@@ -122,67 +122,62 @@ object Similarity {
     * plants a pool whose top-2 are twins: plain top-k keeps both, MMR
     * skips to the distinct third).
     *
-    * Deterministic and oracle-exact: the greedy unrolls as selectK − 1
-    * relational steps (anti-join the picked set, max-sim join against
-    * it, one argmax window per query with (score DESC, id) ties);
-    * every score is one mult/sub pair over round-6 cosines, identical
+    * Deterministic and oracle-exact: each query's pool, sorted by id,
+    * is one row; its pool × pool similarity matrix is round-6 cosines
+    * built by the same expressions as the relevance scores, and one
+    * per-row greedy ([[mmrGreedy]]) picks under (score DESC, id) ties.
+    * Every score is one mult/sub pair over round-6 cosines, identical
     * in both engines. λ is rationally 1/2 so the expression carries no
     * literal-precision risk.
     *
-    * Scale: pools are per-query constants (poolK rows), so the pair
-    * table is queries × poolK² and every step is pool-sized —
-    * the corpus is touched ONCE, by the relevance search that builds
-    * the pool (swap in [[ivfTopK]]/[[filteredIvfTopK]] upstream for
-    * the probed or filtered variants; the re-rank is agnostic). */
+    * Scale: pools are per-query constants (poolK rows), so the work
+    * after the relevance search is queries × poolK² — the corpus is
+    * scored once, by the relevance search that builds the pool, and
+    * joined once more for the pool's vectors (swap in
+    * [[ivfTopK]]/[[filteredIvfTopK]] upstream for the probed or
+    * filtered variants; the re-rank is agnostic). */
   def mmrDiversify(corpus: DataFrame, queries: DataFrame, poolK: Int = 8,
       selectK: Int = 4, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(selectK >= 1 && poolK >= selectK)
-    val cands = bruteForceTopK(corpus, queries, poolK, idCol, vecCol)
-      .localCheckpoint(false) // reused by every greedy step
-    val c = withNorm(corpus, idCol, vecCol)
-    val pairs = cands.select(col("query_id"), col("neighbor_id").as("na"))
-      .join(cands.select(col("query_id"), col("neighbor_id").as("nb")),
-        Seq("query_id"))
-      .filter(col("na") =!= col("nb"))
-      .join(c.select(col("vec_id").as("na"), col("e").as("ea"),
-        col("nrm").as("nra")), "na")
-      .join(c.select(col("vec_id").as("nb"), col("e").as("eb"),
-        col("nrm").as("nrb")), "nb")
-      .select(col("query_id"), col("na"), col("nb"),
-        Exact.round(graft.functions.VectorOps.cosineWithNorms(
-          col("ea"), col("eb"), col("nra"), col("nrb")), 6).as("sim"))
-      .localCheckpoint(false)
-    val byScore = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    var selected = cands
-      .withColumn("__rn", row_number().over(byScore))
-      .filter(col("__rn") === 1)
-      .select(col("query_id"), col("neighbor_id"),
-        lit(1).as("rank"), col("cosine").as("mmr_score"))
-    for (i <- 2 to selectK) {
-      val picked = selected.select(col("query_id"), col("neighbor_id"))
-      val remaining = cands.join(picked,
-        Seq("query_id", "neighbor_id"), "left_anti")
-      val msim = pairs
-        .join(picked.withColumnRenamed("neighbor_id", "nb"),
-          Seq("query_id", "nb"))
-        .groupBy(col("query_id"), col("na").as("neighbor_id"))
-        .agg(max(col("sim")).as("__msim"))
-      val byMmr = Window.partitionBy(col("query_id"))
-        .orderBy(col("__score").desc, col("neighbor_id"))
-      val pick = remaining
-        .join(msim, Seq("query_id", "neighbor_id"))
-        .withColumn("__score",
-          lit(0.5) * col("cosine") - lit(0.5) * col("__msim"))
-        .withColumn("__rn", row_number().over(byMmr))
-        .filter(col("__rn") === 1)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(i).as("rank"), col("__score").as("mmr_score"))
-      selected = selected.unionByName(pick)
+    require(selectK >= 1 && poolK >= selectK, "mmrDiversify needs " +
+      s"1 <= selectK <= poolK, got selectK = $selectK, poolK = $poolK")
+    val pools = bruteForceTopK(corpus, queries, poolK, idCol, vecCol)
+      .join(withNorm(corpus, idCol, vecCol)
+        .withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
+      .groupBy("query_id")
+      .agg(sort_array(collect_list(
+        struct("neighbor_id", "cosine", "e", "nrm"))).as("pool"))
+    val sims = transform(col("pool"), a => transform(col("pool"), b =>
+      Exact.round(cosineWithNorms(a("e"), b("e"), a("nrm"), b("nrm")), 6)))
+    val greedy = udf((cos: Seq[Double], sim: Seq[Seq[Double]]) =>
+      mmrGreedy(cos, sim, selectK))
+    pools.select(col("query_id"), col("pool"),
+        posexplode(greedy(col("pool.cosine"), sims)))
+      .select(col("query_id"),
+        col("pool")(col("col._1"))("neighbor_id").as("neighbor_id"),
+        (col("pos") + 1).as("rank"), col("col._2").as("mmr_score"))
+  }
+
+  /** The MMR greedy over one pool sorted by id: `(pool index, score)`
+    * per pick, at most `k`. The first pick maximizes the cosine, each
+    * later one `0.5·cos − 0.5·max sim to the picked set`; max and
+    * argmax compare as Spark orders doubles, and a tie goes to the
+    * lower index, so the lower id. */
+  private def mmrGreedy(cos: Seq[Double], sim: Seq[Seq[Double]],
+      k: Int): Seq[(Int, Double)] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val msim = new Array[Double](cos.length)
+    val free = Array.fill(cos.length)(true)
+    (1 to math.min(k, cos.length)).map { rank =>
+      def score(i: Int) = if (rank == 1) cos(i) else 0.5 * cos(i) - 0.5 * msim(i)
+      val best = cos.indices.filter(free).reduce((a, b) =>
+        if (compareDoubles(score(b), score(a)) > 0) b else a)
+      val pick = (best, score(best))
+      free(best) = false
+      for (i <- cos.indices if rank == 1 || compareDoubles(sim(i)(best), msim(i)) > 0)
+        msim(i) = sim(i)(best)
+      pick
     }
-    selected
   }
 
   private def ivfTopKCore(corpus: DataFrame, queries: DataFrame,

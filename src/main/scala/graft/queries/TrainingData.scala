@@ -100,6 +100,10 @@ object TrainingData extends QueryPack {
     Dedup.exactRollup(Tables.documents(spark, dir)).orderBy("canonical_id")
   }
 
+  /** Prefix-filtered Jaccard (AllPairs/PPJoin candidate generation,
+    * [[graft.ops.Dedup.ngramJaccard]]). The oracle is the full-join
+    * formulation, so the gate proves that the prefix filter, a pure
+    * candidate-pruning step, admits no false negatives. */
   val dedupNgram = GraftQuery(
     "dedup_ngram_jaccard",
     Some(s"""
@@ -162,24 +166,6 @@ object TrainingData extends QueryPack {
       SELECT * FROM j WHERE jaccard >= 0.3 ORDER BY id_a, id_b""".trim)) {
     (spark, dir) =>
     Dedup.sortedNeighborhoodMulti(Tables.documents(spark, dir))
-  }
-
-  /** Prefix-filtered Jaccard (AllPairs/PPJoin candidate generation),
-    * the same operator as `dedup_ngram_jaccard`
-    * ([[graft.ops.Dedup.ngramJaccard]]). The oracle is the full-join
-    * formulation, so the gate proves that the prefix filter, a pure
-    * candidate-pruning step, admits no false negatives. */
-  val dedupNgramPrefix = GraftQuery(
-    "dedup_ngram_prefix",
-    Some(s"""
-      WITH $SH,
-      ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id),
-      j AS (SELECT id_a, id_b,
-         ROUND(len(list_intersect(x.s, y.s)) / CAST(len(x.s) + len(y.s) - len(list_intersect(x.s, y.s)) AS DOUBLE), 6) AS jaccard
-       FROM cand JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b)
-      SELECT * FROM j WHERE jaccard >= 0.5 ORDER BY id_a, id_b""".trim)) { (spark, dir) =>
-    Dedup.ngramJaccard(Tables.documents(spark, dir))
   }
 
   /** Asymmetric containment near-dups: subset/quote duplication that
@@ -628,10 +614,10 @@ object TrainingData extends QueryPack {
   /** MMR diversified retrieval (Carbonell & Goldstein 1998): each
     * query's exact top-8 relevance pool greedily re-ranked to 4 picks
     * under λ = 1/2 relevance-vs-redundancy — the diversity pass every
-    * RAG stack runs on its retriever output. The greedy unrolls as 3
-    * relational steps (anti-join picked, max-sim against picked,
-    * per-query argmax); oracle replays every step verbatim. See
-    * [[graft.ops.Similarity.mmrDiversify]]. */
+    * RAG stack runs on its retriever output. The oracle replays the
+    * greedy as 3 relational steps (anti-join picked, max-sim against
+    * picked, per-query argmax); the operator runs it per query over the
+    * pool's similarity matrix. See [[graft.ops.Similarity.mmrDiversify]]. */
   val annMmr = GraftQuery(
     "ann_mmr",
     Some {
@@ -2937,7 +2923,7 @@ object TrainingData extends QueryPack {
     textRepeatedSpans, dedupSubstring,
     textHeavyHitters, textHeavyHittersBySource, pipelineFeatures, pipelineSplitLeakage,
     dataQuota, dataMix, dataCurriculum, dataEpochShuffle,
-    dedupExact, dedupNgram, dedupNgramPrefix, dedupSortedNeighborhood,
+    dedupExact, dedupNgram, dedupSortedNeighborhood,
     dedupSortedMulti,
     dedupNgramCapped, dedupContainment,
     dedupContainmentCapped, dedupMinhash, dedupLshRecall,

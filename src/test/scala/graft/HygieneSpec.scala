@@ -104,6 +104,13 @@ class HygieneSpec extends SparkTestBase {
     }
   }
 
+  test("mmrDiversify leaves zero new persistent RDDs: the pool is one " +
+      "row per query, so no checkpoint is held for greedy steps") {
+    val leaked = leakedBy(
+      Similarity.mmrDiversify(embs, embs.filter(col("vec_id") < 10)).count())
+    assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+  }
+
   test("basketRules releases its serialized basket cache; result " +
       "release leaves zero blocks (round 13: the width-filtered basket " +
       "table is persisted across its three consumers above the " +

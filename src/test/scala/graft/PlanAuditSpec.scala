@@ -621,10 +621,10 @@ class PlanAuditSpec extends SparkTestBase {
       v.fold(conf.unset(k))(conf.set(k, _)) }
   }
 
-  test("dedup_ngram_prefix: sorted-hash arrays end to end — narrow " +
+  test("dedup_ngram_jaccard: sorted-hash arrays end to end — narrow " +
       "native prefix map (no window rank), 8-byte join keys, native " +
       "merge-intersect verify, positional prune inside the join") {
-    val plan = planOf("dedup_ngram_prefix")
+    val plan = planOf("dedup_ngram_jaccard")
     assert(plan.contains("graft_sorted_hash60"),
       s"native sorted-hash map missing:\n$plan")
     assert(plan.contains("graft_sorted_intersect"),
@@ -1252,5 +1252,20 @@ class PlanAuditSpec extends SparkTestBase {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(runs.map(_.numTasks) == Seq(n),
       s"cross-join stage runs (tasks each): ${runs.map(_.numTasks)}, want one of $n:\n$plan")
+  }
+
+  test("ann_mmr: the greedy is one per-query plan — no Union, no Window " +
+      "in the optimized plan, and the noop write runs at most 9 Spark jobs") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Union, Window}
+    val df = SparkEntry.queries("ann_mmr")(spark, sfDir)
+    val unrolled = df.queryExecution.optimizedPlan.collect {
+      case u: Union => u.nodeName
+      case w: Window => w.nodeName
+    }
+    assert(unrolled.isEmpty,
+      s"unrolled greedy steps: $unrolled\n${df.queryExecution.optimizedPlan}")
+    val jobs = jobsOf(df.write.format("noop").mode("overwrite").save())
+    assert(jobs.size <= 9, s"${jobs.size} jobs: " +
+      jobs.map(j => (j.stageIds.size, j.stageInfos.map(_.name))))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity, TextAnalysis}
@@ -423,6 +424,114 @@ class TrainingDataSpec extends SparkTestBase {
     val r1 = graft.ops.Similarity.mmrDiversify(e, q, poolK = 3, selectK = 1)
       .head().getAs[Double]("mmr_score")
     assert(r1 == plain)
+  }
+
+  /** MMR as the relational unroll it was before the per-query greedy:
+    * selectK − 1 steps of anti-join the picked set, max-sim against it
+    * and one argmax window per query, over a checkpointed pool and a
+    * checkpointed pool × pool similarity table. */
+  private def referenceMmr(corpus: DataFrame, queries: DataFrame,
+      poolK: Int, selectK: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cands = Similarity.bruteForceTopK(corpus, queries, poolK)
+      .localCheckpoint(false)
+    val c = Similarity.withNorm(corpus, "vec_id", "embedding")
+    val pairs = cands.select(col("query_id"), col("neighbor_id").as("na"))
+      .join(cands.select(col("query_id"), col("neighbor_id").as("nb")),
+        Seq("query_id"))
+      .filter(col("na") =!= col("nb"))
+      .join(c.select(col("vec_id").as("na"), col("e").as("ea"),
+        col("nrm").as("nra")), "na")
+      .join(c.select(col("vec_id").as("nb"), col("e").as("eb"),
+        col("nrm").as("nrb")), "nb")
+      .select(col("query_id"), col("na"), col("nb"),
+        graft.functions.Exact.round(graft.functions.VectorOps.cosineWithNorms(
+          col("ea"), col("eb"), col("nra"), col("nrb")), 6).as("sim"))
+      .localCheckpoint(false)
+    val byScore = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    var selected = cands
+      .withColumn("__rn", row_number().over(byScore))
+      .filter(col("__rn") === 1)
+      .select(col("query_id"), col("neighbor_id"),
+        lit(1).as("rank"), col("cosine").as("mmr_score"))
+    for (i <- 2 to selectK) {
+      val picked = selected.select(col("query_id"), col("neighbor_id"))
+      val remaining = cands.join(picked,
+        Seq("query_id", "neighbor_id"), "left_anti")
+      val msim = pairs
+        .join(picked.withColumnRenamed("neighbor_id", "nb"),
+          Seq("query_id", "nb"))
+        .groupBy(col("query_id"), col("na").as("neighbor_id"))
+        .agg(max(col("sim")).as("__msim"))
+      val byMmr = Window.partitionBy(col("query_id"))
+        .orderBy(col("__score").desc, col("neighbor_id"))
+      val pick = remaining
+        .join(msim, Seq("query_id", "neighbor_id"))
+        .withColumn("__score",
+          lit(0.5) * col("cosine") - lit(0.5) * col("__msim"))
+        .withColumn("__rn", row_number().over(byMmr))
+        .filter(col("__rn") === 1)
+        .select(col("query_id"), col("neighbor_id"),
+          lit(i).as("rank"), col("__score").as("mmr_score"))
+      selected = selected.unionByName(pick)
+    }
+    selected
+  }
+
+  /** MMR rows as (query, rank, neighbor, raw score bits), in
+    * (query, rank) order. */
+  private def mmrRows(df: DataFrame) =
+    df.orderBy("query_id", "rank").collect().toSeq.map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
+        r.getAs[Long]("neighbor_id"),
+        java.lang.Double.doubleToRawLongBits(r.getAs[Double]("mmr_score"))))
+
+  test("mmrDiversify equals the relational unroll bit for bit at sf0.01 " +
+      "over (poolK, selectK) = (8,4), (3,3), (8,1), (8,8), (5,2)") {
+    val sf001 = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
+    val embs = Tables.embeddings(spark, sf001)
+    val q = embs.filter(col("vec_id") < 10)
+    for ((poolK, selectK) <- Seq((8, 4), (3, 3), (8, 1), (8, 8), (5, 2))) {
+      val got = mmrRows(Similarity.mmrDiversify(embs, q, poolK, selectK))
+      assert(got.size == 10 * selectK, s"($poolK, $selectK): ${got.size} rows")
+      assert(got == mmrRows(referenceMmr(embs, q, poolK, selectK)),
+        s"($poolK, $selectK) differs from the relational unroll")
+    }
+  }
+
+  test("mmrDiversify: an MMR score tie goes to the lower neighbor_id, and " +
+      "a pool shorter than selectK yields one row per pooled vector") {
+    // q=[1,0,0,0]; 2 is the top hit; 7 and 4 mirror each other about
+    // it, so their cosines to q and sims to 2 are equal: rank 2 ties
+    // and must go to 4, though 7 comes first in the input
+    val e = Seq(
+      (2L, Seq(1f, 0f, 0f, 0f)),
+      (7L, Seq(0.6f, 0.8f, 0f, 0f)),
+      (4L, Seq(0.6f, -0.8f, 0f, 0f)),
+      (10L, Seq(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    val q = e.filter(col("vec_id") === 10)
+    val tie = mmrRows(Similarity.mmrDiversify(e, q, poolK = 3, selectK = 3))
+    assert(tie.map(r => (r._2, r._3)) == Seq((1, 2L), (2, 4L), (3, 7L)),
+      s"got $tie")
+    assert(tie == mmrRows(referenceMmr(e, q, 3, 3)))
+    // three vectors: each query pools the other two, below selectK = 4
+    val short = e.filter(col("vec_id") =!= 2)
+    val got = mmrRows(Similarity.mmrDiversify(short, short, poolK = 8, selectK = 4))
+    assert(got.map(r => (r._1, r._2)) ==
+      Seq(4L, 7L, 10L).flatMap(qid => Seq((qid, 1), (qid, 2))), s"got $got")
+    assert(got == mmrRows(referenceMmr(short, short, 8, 4)))
+  }
+
+  test("mmrDiversify names itself, both bounds and the values it got " +
+      "when selectK is out of range") {
+    val e = Seq((1L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+    for ((poolK, selectK) <- Seq((8, 0), (3, 4))) {
+      val err = intercept[IllegalArgumentException](
+        Similarity.mmrDiversify(e, e, poolK, selectK))
+      assert(err.getMessage.contains("mmrDiversify needs 1 <= selectK <= " +
+        s"poolK, got selectK = $selectK, poolK = $poolK"), err.getMessage)
+    }
   }
 
   test("ivfTopK recall on real embeddings; probing all cells is exact") {
