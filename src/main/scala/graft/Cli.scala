@@ -131,10 +131,11 @@ object Cli {
 
     case Seq("tune-banding", rest @ _*) =>
       // the MinHash-LSH banding counterpart of `tune` (judge r10 #6 —
-      // the dedup_banding_frontier gate, parameterized): sweep nested
-      // (bands, rows) configurations of one signature against the
-      // capped exact truth and print the measured recall/precision
-      // frontier a curation team picks its config from.
+      // the dedup_banding_frontier gate, parameterized): sweep
+      // (bands, rows) configurations of one signature, all banded off
+      // one self-join at the lcm of the choices, against the capped
+      // exact truth and print the measured recall/precision frontier a
+      // curation team picks its config from.
       val dir = flag(rest, "--sf-dir").getOrElse(defaultSf)
       val numPerms = flag(rest, "--num-perms").map(_.toInt).getOrElse(64)
       val bands = flag(rest, "--bands")

@@ -147,7 +147,7 @@ object Stress100 {
       val codebook = embs.filter(col("vec_id") >= 16 && col("vec_id") < 32)
 
       results(("minhash_lsh", f)) = time("minhash_lsh", f) {
-        ops.Dedup.minHashLsh(docsF, cache = false).count()
+        ops.Dedup.minHashLsh(docsF).count()
       }
       // two IVF-PQ regimes: k ∝ N exposes the brute-force coarse
       // assignment's N·k work (the documented knee — mitigation is a

@@ -15,7 +15,14 @@ import graft.functions.VectorOps
   * prefix-filtered join [[overlapPairs]]: the two public ops
   * [[ngramJaccard]] and [[ngramContainment]] (each with an optional
   * hot-shingle cap `maxDf`) and the exact truth of [[lshRecallAudit]]
-  * and [[bandingFrontier]] all read their pairs from it.
+  * and [[bandingFrontier]] all read their pairs from it. Exact Jaccard
+  * has ONE verify, [[intersections]] + [[jaccardOf]], a merge of two
+  * sorted 60-bit hash arrays per pair, for those pairs and for every
+  * other candidate source ([[verifiedPairs]]: MinHash bands, sort
+  * neighbours, [[DedupIndex]]). The MinHash ops persist ONE signature
+  * table, [[signatures]] `(doc_id, hs, n, mh)` — banding reads `mh`,
+  * truth and verify read `hs`/`n` — and take their band candidates from
+  * ONE self-join, [[bandCandidates]].
   *
   * Scale notes (100 TB):
   *  - No operator materializes the O(n²) pair space. Candidates come from
@@ -154,18 +161,6 @@ object Dedup {
       .select(col(idCol).as("doc_id") +:
         shingles3(tokens(col(textCol))).as("s") +: carry.map(col): _*)
 
-  /** Exact verify step: Jaccard over shingle sets for candidate pairs. */
-  private[ops] def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double) = {
-    val inter = size(array_intersect(col("sa"), col("sb")))
-    cand
-      .join(sh.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        Exact.round(inter / (size(col("sa")) + size(col("sb")) - inter).cast("double"), 6)
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** N-gram Jaccard near-dup pairs: every doc pair with exact shingle-set
     * Jaccard ≥ `threshold`, from the prefix-filtered [[overlapPairs]]
     * join (never all-pairs).
@@ -179,8 +174,8 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.5,
       maxDf: Int = Int.MaxValue): DataFrame =
-    jaccardOf(overlapPairs(shingleSets(docs, idCol, textCol), threshold,
-      maxDf, containment = false), threshold)
+    jaccardOf(overlapPairs(hashedSets(shingleSets(docs, idCol, textCol)),
+      threshold, maxDf, containment = false), threshold)
       .orderBy("id_a", "id_b")
 
   /** Asymmetric near-dup detection by shingle CONTAINMENT
@@ -194,56 +189,95 @@ object Dedup {
   def ngramContainment(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", threshold: Double = 0.8,
       maxDf: Int = Int.MaxValue): DataFrame =
-    overlapPairs(shingleSets(docs, idCol, textCol), threshold, maxDf,
-        containment = true)
+    overlapPairs(hashedSets(shingleSets(docs, idCol, textCol)), threshold,
+        maxDf, containment = true)
       .select(col("id_a"), col("id_b"),
         Exact.round(col("inter") / col("na").cast("double"), 6).as("cont_a"),
         Exact.round(col("inter") / col("nb").cast("double"), 6).as("cont_b"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= threshold)
       .orderBy("id_a", "id_b")
 
+  /** The exact Jaccard of an [[intersections]] row, rounded to 6
+    * decimals; two empty sets divide 0 by 0 (see [[bothNonEmpty]]). */
+  private def jaccard: Column =
+    Exact.round(col("inter") / (col("na") + col("nb") - col("inter"))
+      .cast("double"), 6)
+
   /** (id_a, id_b, jaccard) of an [[intersections]] table, unsorted,
     * keeping pairs at or above `t`. */
   private def jaccardOf(pairs: DataFrame, t: Double): DataFrame =
-    pairs.select(col("id_a"), col("id_b"),
-        Exact.round(col("inter") / (col("na") + col("nb") - col("inter"))
-          .cast("double"), 6).as("jaccard"))
+    pairs.select(col("id_a"), col("id_b"), jaccard.as("jaccard"))
       .filter(col("jaccard") >= t)
+
+  /** Both sets of an [[intersections]] row are non-empty, so their
+    * Jaccard is defined. Candidates that need not share a shingle can
+    * pair two empty sets (all-null MinHash signatures share every band
+    * key), and 0/0 raises DIVIDE_BY_ZERO under ANSI. Reading both sides,
+    * it cannot be pushed below [[shingleSets]]' repartition, where it
+    * would rerun the shingle + hash pass in the scan stage. */
+  private def bothNonEmpty: Column = least(col("na"), col("nb")) > 0
+
+  /** The exact verify of arbitrary candidate pairs `cand` (id_a < id_b)
+    * over a [[hashedSets]] table: (id_a, id_b, jaccard) of the pairs
+    * with Jaccard ≥ `t`, unsorted. */
+  private[ops] def verifiedPairs(cand: DataFrame, hashed: DataFrame,
+      t: Double): DataFrame =
+    jaccardOf(intersections(cand, hashed).filter(bothNonEmpty), t)
 
   /** `sh` as (doc_id, hs, n): each shingle set as its SORTED array of
     * 60-bit hashes ([[graft.functions.SortedHash60Array]], a narrow
-    * per-row map) and its size. Join keys and verify payloads are 8-byte
+    * per-row map) and its size, plus the `extra` columns computed in
+    * the same pass over `sh`. Join keys and verify payloads are 8-byte
     * longs, never shingle strings (2^-60 collisions, the family-wide
     * shingle-key convention). `n` is non-nullable (0 for a null text,
     * which has no shingle rows anyway): a nullable `n` lets Catalyst
     * infer `isnotnull(n)` from the joins on it and push that filter
     * below [[shingleSets]]' repartition, where it reruns the whole
     * shingle + hash pass in the scan stage. */
-  private def hashedSets(sh: DataFrame): DataFrame = {
+  private def hashedSets(sh: DataFrame, extra: Column*): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    sh.select(col("doc_id"),
-        column(graft.functions.SortedHash60Array(expression(col("s")))).as("hs"))
+    sh.select(col("doc_id") +:
+        column(graft.functions.SortedHash60Array(expression(col("s")))).as("hs") +:
+        extra: _*)
       .withColumn("n", coalesce(size(col("hs")), lit(0)))
   }
 
-  /** Exact intersections of candidate pairs `cand` (id_a, id_b) over a
-    * [[hashedSets]] table: (id_a, id_b, inter, na, nb), one linear merge
-    * per pair ([[graft.functions.SortedLongIntersectCount]]). */
-  private def intersections(cand: DataFrame, hashed: DataFrame): DataFrame = {
+  /** The MinHash family's one signature table: [[hashedSets]] plus the
+    * `numPerms`-hash MinHash signature `mh` of each shingle set, as
+    * (doc_id, hs, n, mh) and the `carry` columns of `sh`, in one pass
+    * over the shingle strings. Banding reads `mh`; the exact truth and
+    * the verify read `hs` and `n`. An empty shingle set has an all-null
+    * `mh`. Callers persist it. */
+  private[ops] def signatures(sh: DataFrame, numPerms: Int,
+      carry: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    cand
-      .join(hashed.select(col("doc_id").as("id_a"), col("hs").as("ha"),
-        col("n").as("na")), "id_a")
-      .join(hashed.select(col("doc_id").as("id_b"), col("hs").as("hb"),
-        col("n").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
+    hashedSets(sh, column(graft.functions.MinHash60(expression(col("s")),
+      numPerms)).as("mh") +: carry.map(col): _*)
+  }
+
+  /** Exact intersections of candidate pairs `cand` (id_a, id_b, …) over
+    * a [[hashedSets]] table: (id_a, id_b, inter, na, nb), one linear
+    * merge per pair ([[graft.functions.SortedLongIntersectCount]]),
+    * then `cand`'s other columns and each `carry` column `c` of `hashed`
+    * as `ca`/`cb` for the two sides. */
+  private def intersections(cand: DataFrame, hashed: DataFrame,
+      carry: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    def side(x: String) = hashed.select(col("doc_id").as(s"id_$x") +:
+      col("hs").as(s"h$x") +: col("n").as(s"n$x") +:
+      carry.map(c => col(c).as(c + x)): _*)
+    val passed = cand.columns.filterNot(Set("id_a", "id_b")).map(col)
+    cand.join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(Seq(col("id_a"), col("id_b"),
         column(graft.functions.SortedLongIntersectCount(
           expression(col("ha")), expression(col("hb")))).as("inter"),
-        col("na"), col("nb"))
+        col("na"), col("nb")) ++ passed ++
+        carry.flatMap(c => Seq(col(c + "a"), col(c + "b"))): _*)
   }
 
   /** The exact shingle-overlap join behind every near-dup op and the
-    * audits' truth: over a (doc_id, s) shingle table, the candidate pairs
+    * audits' truth: over a [[hashedSets]] table (the signature table
+    * qualifies: its extra columns are ignored), the candidate pairs
     * (id_a < id_b) of measure `t` as (id_a, id_b, inter, na, nb) with
     * the EXACT intersection. Every pair that meets the measure and
     * shares a cool shingle (document frequency ≤ `maxDf`) is among them;
@@ -291,10 +325,9 @@ object Dedup {
     * no anti/semi-join. Candidates are deduplicated before the verify,
     * whose merge runs over the full hash arrays, so the intersection is
     * exact whatever the cap. Lazy: building it runs no Spark action. */
-  private def overlapPairs(sh: DataFrame, t: Double, maxDf: Int,
+  private def overlapPairs(hashed: DataFrame, t: Double, maxDf: Int,
       containment: Boolean): DataFrame = {
     require(maxDf > 0, "maxDf must be positive")
-    val hashed = hashedSets(sh)
     val none = typedLit(Array.empty[Long])
     val split =
       if (maxDf == Int.MaxValue)
@@ -343,23 +376,8 @@ object Dedup {
         when(inOrder, col("nb")).otherwise(col("na")).as("nb"))
   }
 
-  /** (doc_id, band, bkey) band table for a shingle-set table — the
-    * joinable LSH index rows (shared by the one-shot operator and the
-    * incremental [[DedupIndex]]). `carry` columns of `sh` ride along
-    * (the bootstrap path carries the batch-ownership label through). */
-  private[ops] def bandTable(sh: DataFrame, numPerms: Int, bands: Int,
-      carry: Seq[String] = Nil): DataFrame =
-    bandTableFromSig(withMinHash(sh, numPerms), numPerms, bands, carry)
-
-  /** `sh` plus its `numPerms`-hash MinHash signature `mh` over `s`. */
-  private[ops] def withMinHash(sh: DataFrame, numPerms: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    sh.withColumn("mh",
-      column(graft.functions.MinHash60(expression(col("s")), numPerms)))
-  }
-
   /** Distinct (id_a < id_b) candidate pairs of a band table: docs that
-    * share any (band, bkey). */
+    * share any (band, bkey). The family's one band self-join. */
   private[ops] def bandCandidates(banded: DataFrame): DataFrame =
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
@@ -367,10 +385,12 @@ object Dedup {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
 
-  /** Band table off an existing (doc_id, mh) MinHash signature table —
-    * lets [[bandingFrontier]] band ONE signature pass several ways. */
-  private[ops] def bandTableFromSig(sig: DataFrame, numPerms: Int,
-      bands: Int, carry: Seq[String] = Nil): DataFrame = {
+  /** (doc_id, band, bkey) band table of a [[signatures]] table — the
+    * joinable LSH index rows (shared by the one-shot operators and the
+    * incremental [[DedupIndex]]). `carry` columns of `sig` ride along
+    * (the bootstrap path carries the batch-ownership label through). */
+  private[ops] def bandTable(sig: DataFrame, numPerms: Int, bands: Int,
+      carry: Seq[String] = Nil): DataFrame = {
     require(numPerms % bands == 0, "bands must divide numPerms")
     val r = numPerms / bands
     sig
@@ -385,28 +405,26 @@ object Dedup {
   /** MinHash + banded LSH near-dup pairs.
     *
     * Signature: `numPerms` seeded 60-bit hashes, min over the shingle
-    * set — computed with nested array transforms per row (no shuffle).
-    * Banding: `bands` groups of `numPerms/bands` rows; docs sharing any
-    * band key become candidates; exact Jaccard ≥ `threshold` verifies.
-    * At j≈0.9 and 16×4 banding the per-band hit rate is j⁴≈0.66, so true
-    * near-dups are caught with prob ≈ 1-(1-0.66)¹⁶ ≈ 1.
+    * set ([[graft.functions.MinHash60]], one native call per row, no
+    * shuffle). Banding: `bands` groups of `numPerms/bands` rows; docs
+    * sharing any band key become candidates; exact Jaccard ≥ `threshold`
+    * verifies. At j≈0.9 and 16×4 banding the per-band hit rate is
+    * j⁴≈0.66, so true near-dups are caught with prob ≈ 1-(1-0.66)¹⁶ ≈ 1.
+    *
+    * It persists the [[signatures]] table (doc_id, hs, n, mh): banding
+    * reads `mh`, the verify merges `hs`, so the signature pass (numPerms
+    * hashes per shingle, the dominant cost) runs once. That working
+    * persist is released once the output-sized result is materialized.
     */
   def minHashLsh(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", numPerms: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, cache: Boolean = true): DataFrame = {
-    val sh = shingleSets(docs, idCol, textCol)
-    // The banded signature is the dominant cost (numPerms hashes per
-    // shingle); cache=true persists it across the self-join + verify
-    // (measured ~3× — ReusedExchange alone does not cover the verify
-    // side). The working persist is released once the output-sized
-    // result is materialized — it never outlives the operator.
-    val bandedBase = bandTable(sh, numPerms, bands)
-    val banded = if (cache)
-      bandedBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else bandedBase
-    val result = verifyJaccard(bandCandidates(banded), sh, threshold)
+      threshold: Double = 0.5): DataFrame = {
+    val sig = signatures(shingleSets(docs, idCol, textCol), numPerms)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = bandCandidates(bandTable(sig, numPerms, bands))
+    val result = verifiedPairs(cand, sig, threshold)
       .orderBy("id_a", "id_b")
-    if (cache) materializeThenRelease(result, Seq(banded)) else result
+    materializeThenRelease(result, Seq(sig))
   }
 
   /** Banding-recall AUDIT: how much of the exact near-dup truth does
@@ -424,7 +442,9 @@ object Dedup {
     * data. Cost is dominated by the exact baseline (the prefix join,
     * O(Σ df(g)²) pairs over prefix hashes) — at corpus scale run it on
     * a documented SAMPLE, the standard recall-audit protocol; the LSH
-    * side costs what the production operator costs.
+    * side costs what the production operator costs. Both sides read one
+    * persisted [[signatures]] table: banding its `mh`, the exact truth
+    * and the one verify its `hs`/`n`.
     *
     * `maxDf` is the hot-shingle guard for that exact join (the
     * `maxDf` of [[ngramJaccard]]): shingles shared
@@ -456,9 +476,9 @@ object Dedup {
       else docs.filter(
         pmod(xxhash64(lit("lsh_audit_sample"), col(idCol)), lit(1000000L))
           < (sampleFraction * 1000000L).toLong)
-    val sh = shingleSets(base, idCol, textCol)
+    val sig = signatures(shingleSets(base, idCol, textCol), numPerms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = bandTable(sh, numPerms, bands)
+    val banded = bandTable(sig, numPerms, bands)
     // ONE verify pass over the TAGGED UNION of the raw LSH candidates
     // and the (already verified) true pairs: one (id_a, id_b) aggregate
     // dedups the LSH stream and merges the source flags (max(flag) over
@@ -472,19 +492,15 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         lit(false).as("ex"), lit(true).as("ls"))
-    val truth = jaccardOf(overlapPairs(sh, threshold, maxDf,
+    val truth = jaccardOf(overlapPairs(sig, threshold, maxDf,
         containment = false), threshold)
       .select(col("id_a"), col("id_b"), lit(true).as("ex"), lit(false).as("ls"))
     val pairs = lshRaw.unionByName(truth)
       .groupBy("id_a", "id_b")
       .agg(max(col("ex")).as("ex"), max(col("ls")).as("ls"))
-    val inter = size(array_intersect(col("sa"), col("sb")))
-    val verified = pairs
-      .join(sh.select(col("doc_id").as("id_a"), col("s").as("sa")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("s").as("sb")), "id_b")
+    val verified = intersections(pairs, sig)
       .select(col("ex"), col("ls"),
-        (Exact.round(inter / (size(col("sa")) + size(col("sb")) - inter)
-          .cast("double"), 6) >= threshold).as("found"))
+        when(bothNonEmpty, jaccard >= threshold).as("found"))
     val result = verified
       .agg(
         coalesce(sum(when(col("ex") && col("found"), 1L).otherwise(0L)),
@@ -499,7 +515,7 @@ object Dedup {
       .withColumn("cand_precision",
         when(col("n_lsh_candidates") > 0,
           Exact.round(col("n_found") / col("n_lsh_candidates").cast("double"), 6)))
-    materializeThenRelease(result, Seq(sh))
+    materializeThenRelease(result, Seq(sig))
   }
 
   /** Banding AUTO-TUNE frontier (the round-10 verdict's follow-through
@@ -509,19 +525,20 @@ object Dedup {
     * (bands, rows_per_band, n_true, n_candidates, n_found, recall,
     * cand_precision) row per configuration — the measured frontier a
     * curation team picks its banding FROM, instead of trusting the
-    * analytic S-curve.
+    * analytic S-curve. Each row equals what [[lshRecallAudit]] reports
+    * for that `bands` (its n_true, n_lsh_candidates, n_found).
     *
-    * Cost: the signature pass (the dominant per-doc work) runs ONCE and
-    * is persisted doc-sized (numPerms longs per doc); the capped exact
-    * truth runs once; when the choices form a nested chain (every value
-    * dividing the largest) ALL configurations share ONE banding explode
-    * + self-join + verify at the finest banding, with each coarser
-    * config's membership decided by a row-local signature-slice
-    * predicate. Recall is monotone non-decreasing in `bands`
-    * when the choices form a nested chain (each bands value dividing
-    * the next, e.g. 8 | 16 | 32 with numPerms = 64): a pair matching a
-    * full slice necessarily matches both its halves, so candidate sets
-    * are supersets by construction — the spec pins this, and it is the
+    * Cost: the [[signatures]] table (the dominant per-doc work) is built
+    * ONCE and persisted; the capped exact truth runs once off it. ALL
+    * configurations share ONE banding explode + self-join + verify at
+    * L = lcm(bandsChoices), which divides `numPerms` (the largest choice
+    * for the default 8 | 16 | 32). A pair matching a numPerms/b-row
+    * slice matches the L/b aligned L-band sub-slices inside it, so the
+    * L-band candidates hold every config's, and membership in config b
+    * is a ROW-LOCAL predicate (∃ band: the numPerms/b-row slices are
+    * equal — the band-key equality minus the md5). By the same argument
+    * recall is monotone non-decreasing in `bands` along a chain where
+    * each value divides the next — the spec pins this, and it is the
     * property that makes the frontier safe to binary-search. */
   def bandingFrontier(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", numPerms: Int = 64,
@@ -531,71 +548,35 @@ object Dedup {
       bandsChoices.forall(b => b >= 1 && numPerms % b == 0),
       "every bands choice must divide numPerms")
     val sortedB = bandsChoices.sorted
-    val maxB = sortedB.max
-    // ONE shingle+signature table persisted (s + mh per doc) instead of
-    // two separately-persisted passes — every downstream join fetches
-    // both columns from the same cached rows.
-    val both = withMinHash(shingleSets(docs, idCol, textCol), numPerms)
+    val finest = sortedB.reduce((a, b) => a / BigInt(a).gcd(b).toInt * b)
+    val sig = signatures(shingleSets(docs, idCol, textCol), numPerms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nTrue = jaccardOf(overlapPairs(both.select(col("doc_id"), col("s")),
-        threshold, maxDf, containment = false), threshold)
+    val nTrue = jaccardOf(overlapPairs(sig, threshold, maxDf,
+        containment = false), threshold)
       .agg(count(lit(1)).as("n_true"))
-    // NESTED-CHAIN fast path (round 12, guide §1.2): when every bands
-    // choice divides the finest one, the candidate sets are nested
-    // (cand_b ⊆ cand_maxB: a pair matching a coarse slice matches all
-    // its aligned fine sub-slices), so ONE banding explode + self-join
-    // at maxB generates a superset of every config's candidates, and a
-    // pair's membership in each coarser config is a ROW-LOCAL signature
-    // predicate (∃ band: the numPerms/b-row slices are equal — exactly
-    // the md5-bkey equality the per-config join tested, minus the md5).
-    // One verify pass + one flag aggregate then replaces |choices|
-    // band explodes, self-joins, distincts and verify joins. The
-    // default 8|16|32 chain takes this path; non-nested choices keep
-    // the per-config loop (superset generation doesn't apply).
-    val perConfig: DataFrame = if (sortedB.forall(maxB % _ == 0)) {
-      val banded = bandTableFromSig(both.select(col("doc_id"), col("mh")),
-        numPerms, maxB)
-      val cand = bandCandidates(banded)
-      def inB(b: Int): Column = {
-        val r = numPerms / b
-        exists(sequence(lit(0), lit(b - 1)),
-          band => slice(col("mha"), band * r + 1, lit(r)) ===
-            slice(col("mhb"), band * r + 1, lit(r)))
-      }
-      val inter = size(array_intersect(col("sa"), col("sb")))
-      val scored = cand
-        .join(both.select(col("doc_id").as("id_a"), col("s").as("sa"),
-          col("mh").as("mha")), "id_a")
-        .join(both.select(col("doc_id").as("id_b"), col("s").as("sb"),
-          col("mh").as("mhb")), "id_b")
-        .select((Exact.round(inter / (size(col("sa")) + size(col("sb")) - inter)
-          .cast("double"), 6) >= threshold).as("found") +:
-          sortedB.map(b => inB(b).as(s"in_$b")): _*)
-      val flagAggs = sortedB.flatMap(b => Seq(
-        coalesce(sum(when(col(s"in_$b"), 1L).otherwise(0L)), lit(0L))
-          .as(s"nc_$b"),
-        coalesce(sum(when(col(s"in_$b") && col("found"), 1L).otherwise(0L)),
-          lit(0L)).as(s"nf_$b")))
-      scored.agg(flagAggs.head, flagAggs.tail: _*)
-        .select(explode(array(sortedB.map(b =>
-          struct(lit(b).cast("long").as("bands"),
-            lit(numPerms / b).cast("long").as("rows_per_band"),
-            col(s"nc_$b").as("n_candidates"),
-            col(s"nf_$b").as("n_found"))): _*)).as("c"))
-        .select(col("c.bands"), col("c.rows_per_band"),
-          col("c.n_candidates"), col("c.n_found"))
-    } else sortedB.map { b =>
-      val banded = bandTableFromSig(both.select(col("doc_id"), col("mh")),
-        numPerms, b)
-      val cand = bandCandidates(banded)
-      val nCand = cand.agg(count(lit(1)).as("n_candidates"))
-      val nFound = verifyJaccard(cand, both, threshold)
-        .agg(count(lit(1)).as("n_found"))
-      nCand.crossJoin(nFound)
-        .select(lit(b).cast("long").as("bands"),
+    val cand = bandCandidates(bandTable(sig, numPerms, finest))
+    def inB(b: Int): Column = {
+      val r = numPerms / b
+      exists(sequence(lit(0), lit(b - 1)),
+        band => slice(col("mha"), band * r + 1, lit(r)) ===
+          slice(col("mhb"), band * r + 1, lit(r)))
+    }
+    val scored = intersections(cand, sig, carry = Seq("mh"))
+      .select(when(bothNonEmpty, jaccard >= threshold).as("found") +:
+        sortedB.map(b => inB(b).as(s"in_$b")): _*)
+    val flagAggs = sortedB.flatMap(b => Seq(
+      coalesce(sum(when(col(s"in_$b"), 1L).otherwise(0L)), lit(0L))
+        .as(s"nc_$b"),
+      coalesce(sum(when(col(s"in_$b") && col("found"), 1L).otherwise(0L)),
+        lit(0L)).as(s"nf_$b")))
+    val perConfig = scored.agg(flagAggs.head, flagAggs.tail: _*)
+      .select(explode(array(sortedB.map(b =>
+        struct(lit(b).cast("long").as("bands"),
           lit(numPerms / b).cast("long").as("rows_per_band"),
-          col("n_candidates"), col("n_found"))
-    }.reduce(_.unionByName(_))
+          col(s"nc_$b").as("n_candidates"),
+          col(s"nf_$b").as("n_found"))): _*)).as("c"))
+      .select(col("c.bands"), col("c.rows_per_band"),
+        col("c.n_candidates"), col("c.n_found"))
     val result = perConfig.crossJoin(broadcast(nTrue))
       .select(col("bands"), col("rows_per_band"), col("n_true"),
         col("n_candidates"), col("n_found"),
@@ -606,7 +587,7 @@ object Dedup {
           Exact.round(col("n_found") / col("n_candidates").cast("double"), 6))
           .as("cand_precision"))
       .orderBy("bands")
-    materializeThenRelease(result, Seq(both))
+    materializeThenRelease(result, Seq(sig))
   }
 
   /** 60-bit SimHash near-dup pairs within Hamming distance `maxHamming`.
@@ -686,7 +667,9 @@ object Dedup {
     require(window >= 1, "window must be at least 1")
     val cand = neighborhoodCands(docs, idCol,
       snKeyPrefix(col(textCol)), window)
-    verifyCandidatesJaccard(docs, idCol, textCol, cand, threshold)
+    verifiedPairs(cand, hashedSets(shingleSets(docs, idCol, textCol)),
+        threshold)
+      .orderBy("id_a", "id_b")
   }
 
   /** Multi-pass sorted-neighborhood — the production merge/purge form
@@ -711,7 +694,9 @@ object Dedup {
       .union(neighborhoodCands(docs, idCol,
         substring(reverse(norm), 1, 24), window))
       .distinct()
-    verifyCandidatesJaccard(docs, idCol, textCol, cand, threshold)
+    verifiedPairs(cand, hashedSets(shingleSets(docs, idCol, textCol)),
+        threshold)
+      .orderBy("id_a", "id_b")
   }
 
   private def snNormalized(text: Column): Column =
@@ -745,20 +730,6 @@ object Dedup {
       .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
   }
-
-  /** Exact Jaccard ≥ `threshold` of arbitrary candidate pairs, via the
-    * [[overlapPairs]] verify. Candidates here need not share a shingle,
-    * so pairs with an empty shingle set are dropped before they can hit
-    * the 0/0 Jaccard edge (engine-divergent). The filter reads both
-    * sides of the pair, so Catalyst cannot push it below
-    * [[shingleSets]]' repartition, where it would rerun the shingle +
-    * hash pass in the scan stage. */
-  private def verifyCandidatesJaccard(docs: DataFrame, idCol: String,
-      textCol: String, cand: DataFrame, threshold: Double): DataFrame =
-    jaccardOf(intersections(cand, hashedSets(shingleSets(docs, idCol, textCol)))
-        .filter(least(col("na"), col("nb")) > 0),
-      threshold)
-      .orderBy("id_a", "id_b")
 
   /** Survivorship — the last rung of the record-linkage ladder the
     * dedup family climbs (blocking → matching → clustering →
@@ -815,7 +786,10 @@ object Dedup {
     * same checkpoint (`Dataset.observe`): labels only ever decrease, so
     * an unchanged sum is the fixpoint. No separate probe job reads the
     * labels. A round's checkpoint is released as soon as the next
-    * one exists; the returned frame reads the last one.
+    * one exists; the returned frame reads the last one. When `maxIters`
+    * rounds pass and the last one still changed the label sum, the
+    * labels are not yet the components: it throws an
+    * IllegalStateException naming `maxIters` rather than return them.
     *
     * @param checkpointDir when set, iteration state is checkpointed
     *   RELIABLY (HDFS/object store) instead of executor-locally. On a
@@ -906,6 +880,12 @@ object Dedup {
       iter += 1
     }
     edges.unpersist()
+    if (!converged) {
+      releaseCheckpoint(labels)
+      throw new IllegalStateException(s"duplicateClusters did not " +
+        s"converge within maxIters = $maxIters rounds: the last round " +
+        "still changed the labels; raise maxIters")
+    }
     Closure(labels, nonCanonical)
   }
 
@@ -1035,15 +1015,17 @@ object Dedup {
     * aggregate itself, which is the min-id row only when ids are unique.
     *
     * Plan: three Spark actions, all inside this call.
-    *   1. Both aggregates, then the per-survivor signature table
-    *      `(doc_id, s, mh)` (shingle set + MinHash), persisted. The
+    *   1. Both aggregates, then the per-survivor [[signatures]] table
+    *      `(doc_id, hs, n, mh)` (sorted shingle hashes, their count and
+    *      the MinHash), persisted. The
     *      stage counts are observed metrics of that one action: each
     *      aggregate carries its group sizes up, so the survivor table
     *      alone yields n0, n1 and n2.
     *   2–3. The closure's initial labels and its one confirming round
-    *      (more rounds only for chains of near-dups). Banding and the
-    *      Jaccard verify both read the signature table, so the 64-hash
-    *      signature is computed once; the verified pairs feed the closure
+    *      (more rounds only for chains of near-dups). Banding reads `mh`
+    *      and the Jaccard verify merges `hs` off the signature table, so
+    *      the 64-hash signature and the shingle hashes are computed once,
+    *      and no shingle string is kept; the verified pairs feed the closure
     *      unsorted and unmaterialized, and n3 = n2 − the last round's
     *      non-canonical count.
     * The signature table, the edge table and the label checkpoints are
@@ -1069,7 +1051,7 @@ object Dedup {
         count(lit(1)).as("k1"))
       .observe(funnel, coalesce(sum(col("k0")), lit(0L)).as("n0"),
         coalesce(sum(col("k1")), lit(0L)).as("n1"), count(lit(1)).as("n2"))
-    val sig = withMinHash(survivors.select(col("w.id").as("doc_id"),
+    val sig = signatures(survivors.select(col("w.id").as("doc_id"),
         shingles3(tokens(col("w.text"))).as("s")), numPerms)
       .persist(MEMORY_AND_DISK)
     // Materialized by a single-stage action, so the scan that builds the
@@ -1080,8 +1062,8 @@ object Dedup {
     sig.foreach((_: Row) => ())
     val m = funnel.get
     val Seq(n0, n1, n2) = Seq("n0", "n1", "n2").map(m(_).asInstanceOf[Long])
-    val banded = bandTableFromSig(sig, numPerms, bands = 16)
-    val pairs = verifyJaccard(bandCandidates(banded), sig, threshold)
+    val cand = bandCandidates(bandTable(sig, numPerms, bands = 16))
+    val pairs = verifiedPairs(cand, sig, threshold)
       .select("id_a", "id_b")
     val clusters = closure(pairs, maxIters = 50, checkpointDir = None)
     releaseCheckpoint(clusters.labels)

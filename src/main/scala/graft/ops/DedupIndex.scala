@@ -10,12 +10,15 @@ import org.apache.spark.sql.functions._
   * run; at 100 TB that's the dominant cost and it is pure recompute.
   * This index persists two tables under `root`:
   *   - `bands/`    (doc_id, band, bkey) — the joinable LSH rows
-  *   - `shingles/` (doc_id, s)          — shingle sets for exact verify
-  * A new batch sketches ONLY itself, joins its bands against the stored
-  * bands (new×old) and itself (new×new), verifies Jaccard exactly, and
-  * appends its rows — per-batch cost is proportional to the batch, not
-  * the corpus. The band join key (band, bkey) is a uniform hash → no
-  * skew.
+  *   - `shingles/` (doc_id, hs, n)      — each shingle set as its sorted
+  *     60-bit hash array and its size, for the exact verify
+  * A new batch sketches ONLY itself (one [[Dedup.signatures]] pass),
+  * joins its bands against the stored bands (new×old) and itself
+  * (new×new), verifies Jaccard exactly with the family's one verify (a
+  * merge of the stored 8-byte hash arrays; nothing is re-hashed per
+  * batch), and appends its rows — per-batch cost is proportional to the
+  * batch, not the corpus. The band join key (band, bkey) is a uniform
+  * hash → no skew.
   *
   * Each batch owns the partition directory `batch=<batchId>` in both
   * tables and writes it with OVERWRITE: an at-least-once replay (e.g. a
@@ -58,14 +61,15 @@ object DedupIndex {
       idCol: String = "doc_id", textCol: String = "text",
       numPerms: Int = 64, bands: Int = 16,
       threshold: Double = 0.5, indexFiles: Int = 4): DataFrame = {
-    val sh = Dedup.shingleSets(newDocs, idCol, textCol)
+    val sig = Dedup.signatures(Dedup.shingleSets(newDocs, idCol, textCol),
+        numPerms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.bandTable(sh, numPerms, bands)
+    Dedup.bandTable(sig, numPerms, bands)
       .coalesce(indexFiles).write.mode("overwrite")
       .parquet(s"${bandsDir(root)}/batch=$batchId")
-    sh.coalesce(indexFiles).write.mode("overwrite")
+    sig.select("doc_id", "hs", "n").coalesce(indexFiles).write.mode("overwrite")
       .parquet(s"${shinglesDir(root)}/batch=$batchId")
-    sh.unpersist()
+    sig.unpersist()
     pairsOfBatch(spark, root, batchId, threshold)
   }
 
@@ -90,15 +94,16 @@ object DedupIndex {
         docs.withColumn("__batch", batchExpr.cast("long")),
         idCol, textCol, carry = Seq("__batch"))
       .withColumnRenamed("__batch", "batch")
+    val sig = Dedup.signatures(sh, numPerms, carry = Seq("batch"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.bandTable(sh, numPerms, bands, carry = Seq("batch"))
+    Dedup.bandTable(sig, numPerms, bands, carry = Seq("batch"))
       .repartition(col("batch")) // one file per batch partition
       .write.mode("overwrite").partitionBy("batch")
       .parquet(bandsDir(root))
-    sh.repartition(col("batch"))
+    sig.select("doc_id", "hs", "n", "batch").repartition(col("batch"))
       .write.mode("overwrite").partitionBy("batch")
       .parquet(shinglesDir(root))
-    sh.unpersist()
+    sig.unpersist()
   }
 
   /** Near-dup pairs of ONE batch against the index (cross-batch, both
@@ -111,18 +116,14 @@ object DedupIndex {
       .select("doc_id", "band", "bkey")
     val ob = bands.filter(col("batch") =!= batchId)
       .select("doc_id", "band", "bkey")
-    val selfCand = nb.as("a").join(nb.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
     val crossCand = nb.as("n").join(ob.as("o"),
         col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey"))
       .select(least(col("n.doc_id"), col("o.doc_id")).as("id_a"),
         greatest(col("n.doc_id"), col("o.doc_id")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
-    val sh = spark.read.parquet(shinglesDir(root)).select("doc_id", "s")
-    Dedup.verifyJaccard(
-      selfCand.unionByName(crossCand).distinct(), sh, threshold)
+    Dedup.verifiedPairs(
+      Dedup.bandCandidates(nb).unionByName(crossCand).distinct(),
+      hashedIndex(spark, root), threshold)
   }
 
   /** Every near-dup pair in the index — the full-index report a
@@ -134,12 +135,11 @@ object DedupIndex {
       threshold: Double = 0.5): DataFrame = {
     val bands = spark.read.parquet(bandsDir(root))
       .select("doc_id", "band", "bkey")
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val sh = spark.read.parquet(shinglesDir(root)).select("doc_id", "s")
-    Dedup.verifyJaccard(cand, sh, threshold)
+    Dedup.verifiedPairs(Dedup.bandCandidates(bands),
+      hashedIndex(spark, root), threshold)
   }
+
+  /** The stored hash sets (doc_id, hs, n) of every batch. */
+  private def hashedIndex(spark: SparkSession, root: String): DataFrame =
+    spark.read.parquet(shinglesDir(root)).select("doc_id", "hs", "n")
 }

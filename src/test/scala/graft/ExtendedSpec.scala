@@ -396,6 +396,35 @@ class ExtendedSpec extends SparkTestBase {
     }
   }
 
+  test("bandingFrontier on choices that do not divide each other " +
+      "(numPerms 12, bands 4 and 6, banded once at their lcm 12) equals " +
+      "lshRecallAudit per config, all-null signatures of docs under 3 " +
+      "tokens included") {
+    import spark.implicits._
+    val base = (1 to 30).map(i => s"tok$i")
+    val docs = Seq((1L, base.mkString(" ")),
+        (2L, (base.dropRight(3) ++ Seq("x", "y", "z")).mkString(" ")),
+        (3L, (base.take(20) ++ (1 to 10).map(i => s"q$i")).mkString(" ")),
+        (4L, (base.take(12) ++ (1 to 18).map(i => s"r$i")).mkString(" ")),
+        (5L, "two words"), (6L, "single"), (7L, "two words"),
+        (8L, (1 to 30).map(i => s"u$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val rows = graft.ops.Dedup.bandingFrontier(docs, numPerms = 12,
+        bandsChoices = Seq(4, 6), threshold = 0.3)
+      .collect()
+    assert(rows.map(_.getAs[Long]("bands")).toSeq == Seq(4L, 6L))
+    for (r <- rows) {
+      val b = r.getAs[Long]("bands").toInt
+      val a = graft.ops.Dedup.lshRecallAudit(docs, numPerms = 12, bands = b,
+        threshold = 0.3).head()
+      val got = Seq("n_true", "n_candidates", "n_found").map(r.getAs[Long])
+      val want = Seq("n_true", "n_lsh_candidates", "n_found").map(a.getAs[Long])
+      assert(got == want, s"bands $b: frontier $got, audit $want")
+    }
+    // the three short docs share the all-null signature: in every band
+    assert(rows.forall(_.getAs[Long]("n_candidates") >= 3L))
+  }
+
   test("bandingFrontier: one truth for all configs, candidates monotone " +
       "non-decreasing in bands (nested slices), recall follows, found " +
       "subset of truth, planted near-dup caught at the finest banding") {

@@ -138,13 +138,6 @@ class HygieneSpec extends SparkTestBase {
     assert(after.isEmpty, s"below-gate basketRules persisted: $after")
   }
 
-  test("cache=false paths create no persistent blocks at all") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    Dedup.minHashLsh(docs, cache = false).count()
-    val after = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    assert(after.isEmpty, s"cache=false persisted: $after")
-  }
-
   test("mergePartitioned into an existing table releases the cache of " +
       "its incoming rows") {
     import spark.implicits._

@@ -8,14 +8,24 @@ import org.apache.spark.sql.functions._
   * costing 10× at scale. */
 class PlanAuditSpec extends SparkTestBase {
 
-  /** Every SparkEntry query, constructed once at `sfDir`, in name order —
-    * shared by the full-surface audits. */
-  private lazy val surface: Seq[(String, org.apache.spark.sql.DataFrame)] =
+  /** Every SparkEntry query, constructed once at `sfDir`, in name order,
+    * with the optimized plans of the Spark actions its construction ran
+    * (eager materializations, checkpoints) — shared by the full-surface
+    * audits. */
+  private lazy val surfaceRuns: Seq[(String, org.apache.spark.sql.DataFrame,
+      Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> (try fn(spark, sfDir)
-        catch { case e: Throwable =>
-          fail(s"$name failed to construct at $sfDir: $e") })
+      var df: org.apache.spark.sql.DataFrame = null
+      val runs = executionsOf {
+        df = try fn(spark, sfDir)
+          catch { case e: Throwable =>
+            fail(s"$name failed to construct at $sfDir: $e") }
+      }
+      (name, df, runs.map(_._2.optimizedPlan))
     }
+
+  private lazy val surface: Seq[(String, org.apache.spark.sql.DataFrame)] =
+    surfaceRuns.map { case (name, df, _) => name -> df }
 
   private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sfDir)
@@ -1210,22 +1220,51 @@ class PlanAuditSpec extends SparkTestBase {
         s"${offenders.distinct.mkString(", ")}")
   }
 
+  /** Applies `f` to every expression of `plan`, its subqueries and the
+    * plans of the caches it reads. */
+  private def visitExpressions(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      f: PartialFunction[Any, Unit]): Unit =
+    plan.foreachWithSubqueries {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        visitExpressions(m.cacheBuilder.logicalPlan, f)
+      case p => p.expressions.foreach(_.foreach(e => f.applyOrElse(e, (_: Any) => ())))
+    }
+
+  test("full-surface set-similarity audit: no ArrayIntersect in the " +
+      "optimized plan (caches included) of any query, or of any action " +
+      "its construction runs, that calls the MinHash or sorted-hash " +
+      "kernels — exact Jaccard has one verify, the sorted 60-bit hash " +
+      "merge") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Expression}
+    val offenders = scala.collection.mutable.LinkedHashSet.empty[String]
+    var audited = 0
+    for ((name, df, runs) <- surfaceRuns;
+         plan <- df.queryExecution.optimizedPlan +: runs) {
+      var kernels = false
+      var intersects = false
+      visitExpressions(plan, {
+        case e: Expression if e.prettyName == "graft_minhash60" ||
+            e.prettyName == "graft_sorted_hash60" => kernels = true
+        case _: ArrayIntersect => intersects = true
+      })
+      if (kernels) audited += 1
+      if (kernels && intersects) offenders += name
+    }
+    assert(audited >= 8, s"set-similarity audit looks vacuous: $audited plans")
+    assert(offenders.isEmpty,
+      s"array_intersect verify next to the hash kernels in: ${offenders.mkString(", ")}")
+  }
+
   test("full-surface round audit: no Spark Round over a double in any " +
       "query's optimized plan (its subqueries and the caches it reads " +
       "included) — every one runs the native RoundDouble kernel, which " +
       "is bit-identical and 15-20x cheaper (ExactRoundSpec)") {
     import org.apache.spark.sql.catalyst.expressions.Round
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.types.DoubleType
-    def visit(plan: LogicalPlan, f: PartialFunction[Any, Unit]): Unit =
-      plan.foreachWithSubqueries {
-        case m: InMemoryRelation => visit(m.cacheBuilder.logicalPlan, f)
-        case p => p.expressions.foreach(_.foreach(e => f.applyOrElse(e, (_: Any) => ())))
-      }
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     var kernels = 0
-    for ((name, df) <- surface) visit(df.queryExecution.optimizedPlan, {
+    for ((name, df) <- surface) visitExpressions(df.queryExecution.optimizedPlan, {
       case r: Round if r.child.dataType == DoubleType => offenders += s"$name: $r"
       case _: graft.functions.RoundDouble => kernels += 1
     })

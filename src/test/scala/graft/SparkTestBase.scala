@@ -20,18 +20,23 @@ trait SparkTestBase extends AnyFunSuite {
     * ("count", "localCheckpoint", …). A streaming query started inside
     * `body` is counted too: its session is cloned at start, with the
     * listeners registered then. */
-  protected def actionsOf(body: => Unit): Seq[String] = {
-    val names = new ConcurrentLinkedQueue[String]()
+  protected def actionsOf(body: => Unit): Seq[String] =
+    executionsOf(body).map(_._1)
+
+  /** The Spark actions `body` runs, as (action name, its query
+    * execution). */
+  protected def executionsOf(body: => Unit): Seq[(String, QueryExecution)] = {
+    val runs = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val actions = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        names.add(f)
+        runs.add(f -> qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        names.add(f)
+        runs.add(f -> qe)
     }
     spark.listenerManager.register(actions)
     try {
-      fenced(names.clear())(body)
-      names.asScala.toSeq
+      fenced(runs.clear())(body)
+      runs.asScala.toSeq
     } finally spark.listenerManager.unregister(actions)
   }
 

@@ -1252,6 +1252,16 @@ class TrainingDataSpec extends SparkTestBase {
       s"${out.filter(_._2 != 0L).take(5)}")
   }
 
+  test("duplicateClusters throws, naming itself and maxIters, when the " +
+      "last allowed round still changed the labels (the 64-node chain " +
+      "at maxIters = 2)") {
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.duplicateClusters(chain, maxIters = 2))
+    assert(e.getMessage.contains("duplicateClusters") &&
+      e.getMessage.contains("maxIters = 2"), e.getMessage)
+  }
+
   test("duplicateClusters with a reliable checkpointDir is result-" +
       "identical to the localCheckpoint path on the 64-node chain") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
